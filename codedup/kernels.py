@@ -269,7 +269,9 @@ def simhash64_batch(concat: np.ndarray, sizes: np.ndarray) -> np.ndarray:
             j += 1
         docs = nz[i:j]
         lo, hi = bounds[docs[0]], bounds[docs[-1] + 1]
-        seg = np.ascontiguousarray(concat[lo:hi])
+        # '<u8' pins the byte order the view below relies on (a no-op
+        # copy-free cast on little-endian data)
+        seg = np.ascontiguousarray(concat[lo:hi]).astype("<u8", copy=False)
         starts = bounds[docs] - lo
         # bit matrix straight from the little-endian byte view: column b
         # of unpackbits(..., bitorder='little') IS (h >> b) & 1, with no

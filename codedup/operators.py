@@ -26,8 +26,6 @@ candidate pairs.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -277,14 +275,8 @@ def _sweep_block_pairs(blocks: DataFrame, threshold: float, n_blocks: int,
     HOT_MACS = 1 << 17
 
     def gen(it):
-        import os as _os
-        import sys as _sys
-        import time as _time
-
-        dbg = _os.environ.get("CODEDUP_SWEEP_DEBUG")
         for pdf in it:
             for row in pdf.itertuples(index=False):
-                _t0 = _time.time()
                 xdocs = np.frombuffer(row.xdocs, dtype=np.int64)
                 xoff = np.frombuffer(row.xoff, dtype=np.int64)
                 vx = np.frombuffer(row.xv, dtype=np.int64)
@@ -462,23 +454,7 @@ def _sweep_block_pairs(blocks: DataFrame, threshold: float, n_blocks: int,
                         "na": np.concatenate(out_na),
                         "nb": np.concatenate(out_nb),
                     }).astype("int64")
-                if dbg:
-                    print(f"SWEEP pair ({row.xblk},{row.yblk}) "
-                          f"{_time.time() - _t0:.2f}s", file=_sys.stderr)
 
     schema = T.StructType([T.StructField(c, T.LongType()) for c in ("a", "b", "c", "na", "nb")])
     return pairs.mapInPandas(gen, schema=schema)
 
-
-def shingle_rows(docs: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
-    """(id, text) -> distinct (doc_id, g) char-k-gram hash rows, pure
-    codegen (xxhash64 inside the array transform, then explode)."""
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, greatest(length({text_col})-{k - 1}, 1)),"
-                f" i -> xxhash64(substring({text_col}, i, {k})))"
-            )
-        ).alias("g"),
-    ).distinct()

@@ -6,13 +6,16 @@ DAG of DataFrame->DataFrame stages, each optionally committed to a
 checkpoint table.  ``run`` with resume=True skips every stage whose
 manifest is already committed under the current config fingerprint —
 the north_rule's "resumes from the last completed stage without
-recomputation" (tested in tests/test_resume.py).
+recomputation" (tested in tests/test_resume.py).  The MinHash part of
+the DAG is ``minhash_chain``, shared with the LSH catalog queries,
+which materialize each stage in session (``checkpoint_stage``).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -57,6 +60,42 @@ class PipelineResult:
     recomputed_stages: list[str] = field(default_factory=list)
 
 
+def checkpoint_stage(name: str, build) -> DataFrame:
+    """The in-session ``stage(name, build)`` materializer: an eager
+    local checkpoint cuts the lineage, so every consumer of the stage
+    reads one set of blocks instead of re-running its build (e.g. the
+    signature kernel once per verify join).  Nothing survives the
+    session; ``run`` with a ``work_dir`` uses the resumable parquet +
+    manifest form instead."""
+    return build().localCheckpoint(eager=True)
+
+
+def minhash_chain(fp: DataFrame, cfg: DedupConfig, stage, sign=None):
+    """fingerprints -> reps -> signatures -> bands -> candidates ->
+    verified, each built through ``stage(name, build)``.  ``sign``
+    replaces ``compute_signatures(rep_ids, cfg)`` (the pipeline's
+    cross-run SignatureCache).  Returns (reps, signatures, verified)."""
+    # materialized: consumed 3x downstream (signatures + both verify
+    # content joins) — deriving it each time would re-shuffle the full
+    # content column through the dedup window every consumer
+    reps = stage("reps", lambda: representatives(fp))
+    # explicit spread before the signature kernel: AQE's advisory-size
+    # coalescing shrinks the representatives exchange (and a parquet
+    # re-read packs small files) into a handful of partitions — right
+    # for byte-bound stages, wrong for this CPU-bound Arrow stage (same
+    # rationale as the verify-stage repartition)
+    rep_ids = reps.select("file_id", "content").repartition(
+        fp.sparkSession.sparkContext.defaultParallelism)
+    sigs = stage("signatures", lambda: (sign or compute_signatures)(rep_ids, cfg))
+    # FAULT sentinel rows (n_shingles = -1, see signatures.py) stay
+    # visible in the signatures table but never reach banding/verification
+    good_sigs = sigs.filter(F.col("n_shingles") >= 0)
+    bands = stage("bands", lambda: band_rows(good_sigs, cfg))
+    cands = stage("candidates", lambda: candidate_pairs(bands, cfg))
+    verified = stage("verified", lambda: verify_pairs(cands, reps, sigs, cfg))
+    return reps, sigs, verified
+
+
 def run(
     spark: SparkSession,
     source_paths: list[str],
@@ -65,7 +104,6 @@ def run(
     run_id: str = "run",
     resume: bool = True,
     langs: list[str] | None = None,
-    use_signature_cache: bool = True,
     storage=None,
     source_format: str = "parquet",
 ) -> PipelineResult:
@@ -84,18 +122,16 @@ def run(
 
     def stage(name: str, build) -> DataFrame:
         nonlocal dirty
-        if store is not None:
-            if resume and not dirty and store.is_complete(name):
-                return store.read(spark, name)
-            dirty = True
-            import time as _time
-
-            t0 = _time.time()
-            df = build()
+        if store is None:
             recomputed.append(name)
-            return store.write(df, name, t_start=t0)
+            return checkpoint_stage(name, build)
+        if resume and not dirty and store.is_complete(name):
+            return store.read(spark, name)
+        dirty = True
+        t0 = time.time()
+        df = build()
         recomputed.append(name)
-        return build()
+        return store.write(df, name, t_start=t0)
 
     files, ingest_errors = split_invalid(
         read_files(spark, *source_paths, langs=langs, fmt=source_format))
@@ -114,38 +150,23 @@ def run(
         F.lit("64-bit file_id collision").alias("message"),
     ))
     eedges = stage("exact_edges", lambda: exact_edges(fp))
-    # materialized: consumed 3x downstream (signatures + both verify
-    # content joins) — deriving it each time would re-shuffle the full
-    # content column through the dedup window every consumer
-    reps = stage("reps", lambda: representatives(fp))
 
-    def build_signatures() -> DataFrame:
-        cache = (SignatureCache(store.root, cfg.fingerprint())
-                 if (store is not None and use_signature_cache and hasattr(store, "root"))
-                 else None)
-        cached = cache.read(spark) if cache else None
-        rep_ids = reps.select("file_id", "content")
+    def cached_signatures(rep_ids: DataFrame, cfg: DedupConfig) -> DataFrame:
+        cache = SignatureCache(store.root, cfg.fingerprint())
+        cached = cache.read(spark)
         if cached is None:
-            sigs = compute_signatures(rep_ids, cfg)
-            if cache:
-                sigs_w = sigs.localCheckpoint(eager=True)
-                cache.append(sigs_w)
-                return sigs_w
+            sigs = compute_signatures(rep_ids, cfg).localCheckpoint(eager=True)
+            cache.append(sigs)
             return sigs
         missing = rep_ids.join(cached.select("file_id"), "file_id", "left_anti")
         new_sigs = compute_signatures(missing, cfg).localCheckpoint(eager=True)
-        if cache:
-            cache.append(new_sigs)
+        cache.append(new_sigs)
         reused = cached.join(rep_ids.select("file_id"), "file_id", "left_semi")
         return reused.unionByName(new_sigs)
 
-    sigs = stage("signatures", build_signatures)
-    # FAULT sentinel rows (n_shingles = -1, see signatures.py) stay
-    # visible in the checkpoint but never reach banding/verification
-    good_sigs = sigs.filter(F.col("n_shingles") >= 0)
-    bands = stage("bands", lambda: band_rows(good_sigs, cfg))
-    cands = stage("candidates", lambda: candidate_pairs(bands, cfg))
-    verified = stage("verified", lambda: verify_pairs(cands, reps, sigs, cfg))
+    _, _, verified = minhash_chain(
+        fp, cfg, stage,
+        sign=cached_signatures if hasattr(store, "root") else None)
 
     def build_clusters() -> DataFrame:
         near_edges = (
@@ -157,8 +178,7 @@ def run(
 
     clusters = stage("clusters", build_clusters)
     members = stage("members", lambda: rank_members(clusters, fp))
-    actions = stage("actions", lambda: action_plan(members)) if store is not None \
-        else action_plan(members)
+    actions = stage("actions", lambda: action_plan(members))
     rep = summary(fp, members)
 
     if store is not None and hasattr(store, "run_dir"):

@@ -16,7 +16,6 @@ value-hash compare robust:
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -245,20 +244,13 @@ GROUP BY doc_id
 
 # Materialization reuse for the verified-pair table: the query-layer
 # analog of the pipeline's checkpoint reuse (a second query over the
-# same corpus+config reads the materialized pairs instead of re-running
-# signatures/LSH/verify — at 100 TB you would never recompute the LSH
-# stage to answer a follow-up query).  Two layers (VERDICT r2 #5):
-#
-#   in-memory  _PAIRS_CACHE, keyed by (application id, corpus dir,
-#              config fingerprint); BOUNDED — entries from other
-#              sessions are dropped on insert (their checkpointed
-#              blocks died with that session) and the count is capped,
-#              evicting oldest first (ADVICE r2: it was unbounded);
-#   on-disk    a parquet spill keyed by corpus identity (abspath +
-#              documents.parquet mtime/size) + config fingerprint, so a
-#              NEW session reuses pairs exactly like the pipeline
-#              resumes stages.  Disable with CODEDUP_QUERY_CACHE=off
-#              (bench.py does, so driver timings measure real compute).
+# same corpus+config in the same session reads the materialized pairs
+# instead of re-running signatures/LSH/verify).  _PAIRS_CACHE is keyed
+# by (application id, corpus dir, config fingerprint) and BOUNDED:
+# entries from other sessions are dropped on insert (their checkpointed
+# blocks died with that session) and the count is capped, evicting
+# oldest first.  Cross-session reuse is pipeline.run's job (resumable
+# parquet stages under a work dir).
 _PAIRS_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 _PAIRS_CACHE_CAP = 8
 
@@ -289,126 +281,26 @@ def _cache_put(key: tuple[str, str, str], df: DataFrame) -> None:
     _PAIRS_CACHE[key] = df
 
 
-def _spill_path(sf_dir: str, prefix: str, extra: str) -> str | None:
-    """Cross-session spill location for a materialized intermediate, or
-    None when disabled.  The key binds the corpus CONTENT (source file
-    mtime+size), not just its path, so a regenerated corpus never reads
-    a stale spill; ``extra`` binds whatever parameters shaped the
-    artifact (config fingerprint, winnow constants, ...)."""
-    import hashlib
-    import tempfile
-
-    if os.environ.get("CODEDUP_QUERY_CACHE", "").lower() in ("off", "0", "false"):
-        return None
-    src = os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = os.stat(src)
-        stamp = f"{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        return None
-    # Per-user default with 0700 (ADVICE r3): a world-shared /tmp path
-    # has a derivable key, so another local user could pre-seed bogus
-    # parquet under pairs_<key>/_SUCCESS and silently poison results.
-    root = os.environ.get("CODEDUP_QUERY_CACHE_DIR")
-    if not root:
-        uid = os.getuid() if hasattr(os, "getuid") else 0
-        base = os.environ.get("XDG_CACHE_HOME") or os.path.join(
-            os.path.expanduser("~"), ".cache")
-        root = os.path.join(base, "codedup_query_cache") \
-            if os.path.isdir(os.path.dirname(base)) or os.path.isdir(base) \
-            else os.path.join(tempfile.gettempdir(), f"codedup_query_cache_u{uid}")
-        try:
-            os.makedirs(root, mode=0o700, exist_ok=True)
-            # makedirs mode is ignored for a PRE-EXISTING dir: on the
-            # /tmp fallback path an attacker could pre-create the
-            # derivable per-uid path (ADVICE r4).  Accept the dir only
-            # if we own it and nobody else can write it; otherwise run
-            # with the spill disabled rather than read poisoned bytes.
-            # lstat, not stat (ADVICE r5): stat follows symlinks, so a
-            # pre-created symlink to an attacker-chosen victim-owned
-            # dir would pass the ownership check while redirecting
-            # cache WRITES there.  lstat sees the link itself (not a
-            # directory) and rejects it.
-            import stat as stat_mod
-
-            st_root = os.lstat(root)
-            if not stat_mod.S_ISDIR(st_root.st_mode):
-                return None
-            if hasattr(os, "getuid") and (
-                st_root.st_uid != os.getuid() or (st_root.st_mode & 0o022)
-            ):
-                return None
-        except OSError:
-            return None
-    key = hashlib.sha256(
-        f"{os.path.abspath(sf_dir)}|{stamp}|{extra}".encode()
-    ).hexdigest()[:16]
-    return os.path.join(root, f"{prefix}_{key}")
-
-
-def _pairs_spill_dir(sf_dir: str, cfg: DedupConfig) -> str | None:
-    return _spill_path(sf_dir, "pairs", cfg.fingerprint())
-
-
-def _publish_spill(spark: SparkSession, out: DataFrame, spill: str) -> DataFrame:
-    """Atomic spill publish: write to a pid-suffixed tmp dir, rename
-    into place (a concurrent winner's spill is left untouched), and
-    reread from the spill so this session serves the exact bytes future
-    sessions will read (schema identity)."""
-    import shutil
-
-    tmp = f"{spill}.tmp-{os.getpid()}"
-    try:
-        out.write.mode("overwrite").parquet(tmp)
-        if not os.path.exists(spill):
-            os.rename(tmp, spill)
-        else:
-            shutil.rmtree(tmp, ignore_errors=True)
-        out = spark.read.parquet(spill).localCheckpoint(eager=True)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
-
-
 def _minhash_pipeline_pairs(spark: SparkSession, sf_dir: str, cfg: DedupConfig) -> DataFrame:
     """MinHash(128) -> LSH(b=16,r=8) -> exact-verify over the documents
     table under ``cfg`` (char or token shingles), with exact-dup members
-    re-expanded; returns (a, b, jaccard_ppm) over doc_ids.  Materialized
-    once per (corpus, config): in-memory within a session, parquet spill
-    across sessions — see _PAIRS_CACHE."""
+    re-expanded; returns (a, b, jaccard_ppm) over doc_ids.  The stage
+    chain is pipeline.minhash_chain with every stage checkpointed in
+    session; the result is materialized once per (session, corpus,
+    config) — see _PAIRS_CACHE."""
+    from codedup.pipeline import checkpoint_stage, minhash_chain
+    from codedup.stages.fingerprint import fingerprint
+
     cache_key = (spark.sparkContext.applicationId, sf_dir, cfg.fingerprint())
     cached = _PAIRS_CACHE.get(cache_key)
     if cached is not None:
         return cached
-    spill = _pairs_spill_dir(sf_dir, cfg)
-    if spill is not None and os.path.exists(os.path.join(spill, "_SUCCESS")):
-        out = spark.read.parquet(spill)
-        _cache_put(cache_key, out)
-        return out
-    from codedup.stages.banding import band_rows
-    from codedup.stages.candidates import candidate_pairs
-    from codedup.stages.exact import representatives
-    from codedup.stages.fingerprint import fingerprint
-    from codedup.stages.signatures import compute_signatures
-    from codedup.stages.verify import verify_pairs
-
-    par = spark.sparkContext.defaultParallelism
     files = _docs_as_files(_t(spark, sf_dir, "documents"))
-    # eager localCheckpoints at every multi-consumer branch point: the
-    # lazy plan would otherwise re-run the signature UDF once per branch
-    # (bucket sizing, both verify joins, ...)
-    fp = fingerprint(files.repartition(par)).localCheckpoint(eager=True)
-    reps = representatives(fp).localCheckpoint(eager=True)
-    # explicit spread before the signature kernel: the documents table
-    # is one parquet file and AQE's advisory-size coalescing shrinks
-    # the upstream exchanges to a handful of partitions (measured 10 at
-    # sf1.0) — correct for byte-bound stages, wrong for this CPU-bound
-    # Arrow stage (same rationale as the verify-stage repartition)
-    sigs = compute_signatures(
-        reps.select("file_id", "content").repartition(par), cfg
-    ).localCheckpoint(eager=True)
-    cands = candidate_pairs(band_rows(sigs, cfg), cfg).localCheckpoint(eager=True)
-    verified = verify_pairs(cands, reps, sigs, cfg)
+    # spread the single-file documents scan before the fingerprint
+    # kernel, as minhash_chain does before the signature kernel
+    fp = checkpoint_stage("fingerprint", lambda: fingerprint(
+        files.repartition(spark.sparkContext.defaultParallelism)))
+    _, _, verified = minhash_chain(fp, cfg, checkpoint_stage)
 
     # Re-expand through sha256 groups: LSH ran on one representative per
     # distinct content, but the all-pairs oracle (and the semantics)
@@ -451,8 +343,6 @@ def _minhash_pipeline_pairs(spark: SparkSession, sf_dir: str, cfg: DedupConfig) 
                 F.lit(1_000_000).alias("jaccard_ppm"))
     )
     out = cross.unionByName(intra).localCheckpoint(eager=True)
-    if spill is not None:
-        out = _publish_spill(spark, out, spill)
     _cache_put(cache_key, out)
     return out
 
@@ -1241,10 +1131,8 @@ def _winnowing_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifact behind doc_winnowing AND winnowing_pairs (VERDICT r3 #3:
     each query rebuilt the full posexplode-grams + window-min set from
     scratch; together they were the two heaviest catalog entries).
-    Materialized once per (session, corpus) with the same two-layer
-    reuse as the verified-pair table (_PAIRS_CACHE: in-memory within a
-    session, parquet spill across sessions, CODEDUP_QUERY_CACHE=off
-    disables the spill so bench timings measure real compute).
+    Materialized once per (session, corpus) in _PAIRS_CACHE, like the
+    verified-pair table.
 
     The positional-gram explode is the inherent cost (~len(text) rows
     per doc); everything downstream of the distinct is cheap, which is
@@ -1255,11 +1143,6 @@ def _winnowing_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
     cached = _PAIRS_CACHE.get(cache_key)
     if cached is not None:
         return cached
-    spill = _spill_path(sf_dir, "winfp", f"k{NGRAM_K}w{WINNOW_W}")
-    if spill is not None and os.path.exists(os.path.join(spill, "_SUCCESS")):
-        out = spark.read.parquet(spill)
-        _cache_put(cache_key, out)
-        return out
     docs = _t(spark, sf_dir, "documents")
 
     # One-pass Arrow kernel (guide §4.2; same rationale as the dsir
@@ -1319,15 +1202,12 @@ def _winnowing_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = (docs.select("doc_id", "text")
            .repartition(spark.sparkContext.defaultParallelism)
            .mapInPandas(batches, schema="doc_id long, fp long"))
-    if spill is not None:
-        out = _publish_spill(spark, out.localCheckpoint(eager=True), spill)
-    else:
-        # .cache(), not localCheckpoint: the first consumer (usually
-        # doc_winnowing's agg) materializes the block store WHILE it
-        # runs — no separate write pass — and winnowing_pairs' three
-        # consumers (df count + both self-join sides) read the cached
-        # blocks instead of re-exploding the grams
-        out = out.cache()
+    # .cache(), not localCheckpoint: the first consumer (usually
+    # doc_winnowing's agg) materializes the block store WHILE it runs —
+    # no separate write pass — and winnowing_pairs' three consumers (df
+    # count + both self-join sides) read the cached blocks instead of
+    # re-exploding the grams
+    out = out.cache()
     _cache_put(cache_key, out)
     return out
 

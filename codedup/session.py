@@ -9,6 +9,7 @@ bench uses ``local[8]`` vs ``local[32]``; a real deployment passes
 from __future__ import annotations
 
 import os
+import sys
 import tempfile
 
 from pyspark.sql import SparkSession
@@ -55,6 +56,7 @@ def build_session(
     for var in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS",
                 "MKL_NUM_THREADS", "NUMEXPR_NUM_THREADS"):
         os.environ.setdefault(var, blas)
+    jvm_opts = os.environ.get("CODEDUP_JVM_OPTS", "-XX:UseAVX=2")
     b = SparkSession.builder.appName(app_name)
     # the same pinning must reach remote executors' Python workers when
     # running under a real cluster manager (local mode inherits the
@@ -81,13 +83,28 @@ def build_session(
         # SEGV_MAPERR inside the stub).  AVX2 copies are within noise
         # for this workload; a deployment on trusted hardware can
         # override via CODEDUP_JVM_OPTS.
-        .config("spark.driver.extraJavaOptions",
-                os.environ.get("CODEDUP_JVM_OPTS", "-XX:UseAVX=2"))
-        .config("spark.executor.extraJavaOptions",
-                os.environ.get("CODEDUP_JVM_OPTS", "-XX:UseAVX=2"))
+        .config("spark.driver.extraJavaOptions", jvm_opts)
+        .config("spark.executor.extraJavaOptions", jvm_opts)
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)
-    return b.getOrCreate()
+    spark = b.getOrCreate()
+    missing_jvm_opts(spark, jvm_opts)
+    return spark
+
+
+def missing_jvm_opts(spark: SparkSession, opts: str) -> list[str]:
+    """The flags of ``opts`` the driver JVM is NOT running with, warned
+    on stderr.  Java options only apply when a JVM launches: a
+    getOrCreate that joins a JVM started earlier without them (another
+    session, a bare ``pyspark`` shell) silently leaves the AVX2 cap
+    above off."""
+    bean = spark.sparkContext._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+    active = set(bean.getInputArguments())
+    missing = [o for o in opts.split() if o not in active]
+    if missing:
+        print(f"codedup: WARNING: driver JVM runs without {' '.join(missing)} "
+              "(it was started before build_session set them)", file=sys.stderr)
+    return missing

@@ -27,7 +27,7 @@ correspond to the a<b normalization + distinct here.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from codedup.config import DedupConfig

@@ -461,19 +461,6 @@ class IncrementalDedup:
         if self._is_committed(batch_id):
             return  # at-least-once replay of a committed batch: no-op
         self._clear_staged(batch_id)  # purge any crashed partial attempt
-        # CODEDUP_STREAM_TIMING=1: per-section walls to stderr, so the
-        # streaming-vs-batch overhead is ATTRIBUTABLE (VERDICT r4 #2)
-        import sys as _sys
-        import time as _time
-        _timing = os.environ.get("CODEDUP_STREAM_TIMING") == "1"
-        _t = {"_last": _time.time()}
-
-        def _mark(name: str) -> None:
-            if _timing:
-                now = _time.time()
-                _t[name] = round(now - _t["_last"], 2)
-                _t["_last"] = now
-
         cfg = self.cfg
         fp = fingerprint(batch).localCheckpoint(eager=True)
         reps = representatives(fp)
@@ -492,12 +479,10 @@ class IncrementalDedup:
         new_reps = new_reps.select("file_id", "content", "sha256")
         if seen is not None:
             new_reps = new_reps.join(seen.select("file_id"), "file_id", "left_anti")
-        _mark("fingerprint_dedup")
         new_sigs = compute_signatures(
             new_reps.select("file_id", "content"), cfg
         ).localCheckpoint(eager=True)
         new_bands = band_rows(new_sigs, cfg).localCheckpoint(eager=True)
-        _mark("signatures_bands")
 
         old_bands = self._read_or_none(self.bands_dir)
         # Candidates: INCREMENTAL band-bucket state (VERDICT r4 #2) —
@@ -509,7 +494,6 @@ class IncrementalDedup:
         # history band row.
         cands, new_stats = self._incremental_candidates(new_bands, old_bands)
         cands = cands.localCheckpoint(eager=True)   # feeds id-prune + verify
-        _mark("candidates")
 
         # Verify joins must see content/signatures ∝ CANDIDATES, not the
         # full history: semi-join both state tables down to candidate-
@@ -529,27 +513,19 @@ class IncrementalDedup:
         contents = contents.join(F.broadcast(cand_ids), "file_id", "left_semi")
         all_sigs = all_sigs.join(F.broadcast(cand_ids), "file_id", "left_semi")
         verified = verify_pairs(cands, contents, all_sigs, cfg)
-        _mark("verify_plan")
 
         # commit state: per-batch staging dirs (overwrite => replay-safe)
         # then the marker LAST — a crash anywhere earlier leaves a
         # partial batch that the retry simply rewrites
         self._stage_write(verified, self.pairs_dir, batch_id)
-        _mark("verify_and_pairs_write")   # verify computes inside this write
         self._stage_write(new_sigs, self.sig_dir, batch_id)
         self._stage_write(new_bands, self.bands_dir, batch_id)
         self._stage_write(new_stats, self.stats_dir, batch_id)
         self._stage_write(new_reps.select("file_id", "content", "sha256"),
                           self.content_dir, batch_id)
-        _mark("state_writes")
         self._mark_committed(batch_id)
         if self.compact_every and self._n_committed() % self.compact_every == 0:
             self.compact()
-        _mark("compact")
-        if _timing:
-            parts = {k: v for k, v in _t.items() if k != "_last"}
-            print(f"# timing batch {batch_id}: {parts}", file=_sys.stderr,
-                  flush=True)
 
     def start(self, source_dir: str, checkpoint_dir: str | None = None,
               trigger_once: bool = True):

@@ -193,6 +193,8 @@ def test_batch_signature_kernels_match_per_doc():
     for i, d in enumerate(docs):
         assert np.array_equal(mh[i], K.minhash_signature(d, 128, 42)), i
         assert sh[i] == K.simhash64(d), i
+    # same values whatever the byte order of the input array
+    assert np.array_equal(K.simhash64_batch(concat.astype(">u8"), sizes), sh)
     # all-empty batch
     z = np.zeros(3, dtype=np.int64)
     assert np.array_equal(

@@ -1,63 +1,39 @@
-"""Cross-session verified-pair spill (VERDICT r2 #5): a new session
-must reuse the materialized LSH pair table from parquet instead of
-re-running signatures/LSH/verify, the in-memory layer must stay
-bounded, and the staleness key must bind corpus content."""
+"""Verified-pair reuse within a session: a second LSH query over the
+same corpus and config must reuse the materialized pair table instead
+of re-running signatures/LSH/verify, and the in-memory layer must stay
+bounded."""
 
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from codedup import queries as Q
 
 SF = "/root/testdata/sf0.001"
 
 
-@pytest.fixture()
-def spill_env(tmp_path, monkeypatch):
-    monkeypatch.delenv("CODEDUP_QUERY_CACHE", raising=False)
-    monkeypatch.setenv("CODEDUP_QUERY_CACHE_DIR", str(tmp_path / "qc"))
+def test_same_session_reuses_pairs_without_recompute(spark, monkeypatch):
     Q.clear_pairs_cache()
-    yield tmp_path
-    Q.clear_pairs_cache()
-
-
-def test_new_session_reads_spill_without_recompute(spark, spill_env, monkeypatch):
     want = (
         Q.q_dedup_minhash_lsh(spark, SF)
         .toPandas().sort_values(["a", "b"], ignore_index=True)
     )
-    spill = Q._pairs_spill_dir(SF, Q.DOCS_CFG)
-    assert os.path.exists(os.path.join(spill, "_SUCCESS")), "spill not published"
-
-    # simulate a NEW session: in-memory cache gone; any attempt to
-    # recompute signatures must be detected
-    Q.clear_pairs_cache()
-    import codedup.stages.signatures as sigmod
+    import codedup.pipeline as pipemod
 
     def boom(*a, **k):
-        raise AssertionError("signatures recomputed despite spill")
+        raise AssertionError("signatures recomputed despite the pairs cache")
 
-    monkeypatch.setattr(sigmod, "compute_signatures", boom)
+    monkeypatch.setattr(pipemod, "compute_signatures", boom)
     got = (
         Q.q_dedup_minhash_lsh(spark, SF)
         .toPandas().sort_values(["a", "b"], ignore_index=True)
     )
     assert got.equals(want)
-
-
-def test_spill_key_binds_corpus_content(spill_env, tmp_path):
-    """Same path, touched source file -> different spill dir (stale
-    spill can never be read for a regenerated corpus)."""
-    d1 = Q._pairs_spill_dir(SF, Q.DOCS_CFG)
-    d2 = Q._pairs_spill_dir(SF, Q.DOCS_TOKEN_CFG)
-    assert d1 != d2, "config fingerprint not in the key"
-    assert Q._pairs_spill_dir(str(tmp_path), Q.DOCS_CFG) is None  # no documents.parquet
-
-
-def test_cache_disabled_by_env(spark, spill_env, monkeypatch):
-    monkeypatch.setenv("CODEDUP_QUERY_CACHE", "off")
-    assert Q._pairs_spill_dir(SF, Q.DOCS_CFG) is None
+    # the patch does reach the stage chain: without the cached pairs the
+    # same call recomputes signatures
+    Q.clear_pairs_cache()
+    with pytest.raises(AssertionError, match="recomputed"):
+        Q.q_dedup_minhash_lsh(spark, SF)
 
 
 def test_in_memory_cache_bounded():

@@ -86,7 +86,7 @@ def probe_cells(probes: DataFrame, centroids: list[list[float]], nprobe: int,
                 raise ValueError(
                     f"embedding dim {q.shape[-1]} != model dim {cmat.shape[1]}")
             # FULL squared Euclidean (incl. ||q||^2), rounded to 6
-            # decimals BEFORE the argmin/argsort: the relational twin
+            # decimals BEFORE the argmin/argsort: the relational reference
             # (_ranked_cells) and the DuckDB oracles rank by
             # (round(dist, 6), cell id), so two cells whose true
             # distances differ by <5e-7 must resolve to the LOWEST cell
@@ -141,11 +141,12 @@ def _ranked_cells(emb: DataFrame, centroids: list[list[float]],
                   id_col: str, emb_col: str) -> DataFrame:
     """Every (vector, cell) pair with the rounded squared distance and
     the per-vector closeness rank (ties broken by cell id) — the
-    deterministic relational twin of the numpy argmin/argsort paths,
-    shared by cell assignment (rn = 1) and probe selection
-    (rn <= nprobe).  The centroid table is k rows — broadcast by
-    construction; distances round to 6 decimals so the DuckDB oracle's
-    float summation order cannot flip a rank."""
+    relational reference that probe_cells' argmin/argsort is tested
+    against (tests/test_ann_scale_path.py): rn = 1 is the assignment,
+    rn <= nprobe the probe selection, ranked exactly as the DuckDB
+    oracles rank.  The centroid table is k rows — broadcast by
+    construction; distances round to 6 decimals so the oracle's float
+    summation order cannot flip a rank."""
     spark = emb.sparkSession
     cent = F.broadcast(spark.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
@@ -155,49 +156,6 @@ def _ranked_cells(emb: DataFrame, centroids: list[list[float]],
         "dist6", F.expr(dim_guarded(_DIST6.format(e=emb_col), emb_col, dim)))
     w = Window.partitionBy(id_col).orderBy(F.asc("dist6"), F.asc("cell"))
     return d.withColumn("rn", F.row_number().over(w)).drop("c")
-
-
-def ivf_topk_relational(emb: DataFrame, centroids: list[list[float]],
-                        probe_mod: int = 50, k: int = 5, nprobe: int = 4,
-                        id_col: str = "vec_id", emb_col: str = "embedding") -> DataFrame:
-    """Fully relational IVF search against PINNED centroids
-    (golden_centroids): assignment = rank-1 cell, probes = rank<=nprobe
-    cells, then the same equi-join + exact-cosine + window-rank as
-    ivf_topk.  Deterministic end to end, so it carries a value-exact
-    DuckDB oracle (SQL_ANN_IVF_TOPK) — the KMeans TRAINING half lives
-    offline in tools/make_ivf_centroids.py, exactly like a production
-    IVF ships a pre-trained quantizer.
-
-    Scale note: the window in _ranked_cells shuffles (row, cell) pairs
-    by vector id; at 10^12 rows use probe_cells/build_ivf's one-pass
-    Arrow argmin for the assignment job and keep this form for the
-    (small) probe side — the search join is identical either way."""
-    # ranked feeds BOTH the assignment and the probe selection — eager
-    # checkpoint so the crossJoin+window lineage runs once, not twice
-    ranked = _ranked_cells(emb, centroids, id_col, emb_col).localCheckpoint(eager=True)
-    assigned = ranked.filter(F.col("rn") == 1).select(
-        F.col(id_col).alias("neighbor_id"), F.col(emb_col).alias("eb"), "cell")
-    px = (
-        ranked.filter((F.col(id_col) % probe_mod == 0) & (F.col("rn") <= nprobe))
-        .select(F.col(id_col).alias("query_id"), F.col(emb_col).alias("qa"), "cell")
-    )
-    dot = ("aggregate(zip_with(qa, eb, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-           " 0D, (acc, v) -> acc + v)")
-    norm = ("sqrt(aggregate(transform({0}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),"
-            " 0D, (acc, v) -> acc + v))")
-    cand = (
-        px.join(assigned, "cell")      # EQUI join; neighbor has ONE cell,
-        # probe cells are distinct => each pair matches at most once
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim6", F.round(
-            F.expr(dot) / (F.expr(norm.format("qa")) * F.expr(norm.format("eb"))), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim6"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"))
-    )
 
 
 def ivf_topk_blocks(assigned: DataFrame, centroids: list[list[float]],

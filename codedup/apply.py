@@ -22,8 +22,10 @@ engine's batch pipeline only EMITS the declarative action table
 Name-conflict semantics mirror the reference: iteration order is
 (cluster, rank asc = size desc, file_id); the first mover of a basename
 keeps the plain name if no existing file holds it; later movers (and
-collisions with existing names) take ``stem_1``, ``stem_2``, ... in
-order, skipping taken names.
+collisions with existing names) take ``root_1``, ``root_2``, ... in
+order, skipping taken names.  ``root`` is the stem with EVERY trailing
+``_<digits>`` group stripped (``a_1_2`` -> ``a``), so each candidate
+name and each name that can collide with it share one root family.
 """
 
 from __future__ import annotations
@@ -61,10 +63,13 @@ def plan_moves(actions: DataFrame, dest_root: str,
     in the destination; they keep their names, movers probe around
     them.
 
-    Conflict semantics: names are grouped into FAMILIES — stem with any
-    trailing _<digits> stripped, plus suffix — because stem_N probing
-    makes 'a.py' and 'a_1.py' share one namespace (a per-stem plan
-    produced cross-stem collisions; caught by the randomized property
+    Conflict semantics: names are grouped into FAMILIES — the root stem
+    (every trailing _<digits> group stripped: 'a_1_2' -> 'a') plus
+    suffix — because root_N probing makes 'a.py', 'a_1.py' and
+    'a_1_2.py' share one namespace.  Stripping only the last group
+    would put 'a_1_2.py' in family 'a_1', whose first candidate
+    'a_1.py' lives in family 'a' and so escapes that family's blocked
+    names (a cross-family collision; caught by the randomized property
     test).  Within a family: (1) the first mover (iteration order:
     cluster asc, rank asc, file_id) holding each distinct original
     basename KEEPS it when no existing file does — original-name
@@ -101,12 +106,12 @@ def plan_moves(actions: DataFrame, dest_root: str,
                     F.element_at(F.split(F.regexp_extract("key", r"^(.*)@[^@]*$", 1), "/"), -1))
     )
     movers = _with_name_parts(movers, "src_name").withColumn(
-        "fam", F.regexp_replace("stem", "_[0-9]+$", ""))
+        "fam", F.regexp_replace("stem", "(_[0-9]+)+$", ""))
 
     exist = (existing if existing is not None
              else spark.createDataFrame([], "name string"))
     exist_parts = _with_name_parts(exist.select("name"), "name").withColumn(
-        "fam", F.regexp_replace("stem", "_[0-9]+$", ""))
+        "fam", F.regexp_replace("stem", "(_[0-9]+)+$", ""))
 
     cols = ["file_id", "key", "cluster_id", "rank", "action", "src_name"]
     out_schema = T.StructType(

@@ -107,13 +107,12 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     collected to the driver.  Exact integer math makes it bit-identical
     to the naive all-pairs SQL the oracle runs.
 
-    Chosen over the prefix-filtered exact_jaccard_join (also in
-    operators.py) because this corpus has a SMALL element universe
-    (word-soup from a tiny vocabulary: every shingle is frequent), which
-    defeats prefix pruning — measured 108 s vs 6 s at sf0.1.  For
-    large-vocabulary corpora the prefix-filtered variant wins.  The
-    _text variant shingles inside the pack UDF, so the only shuffle is
-    the raw documents — no exploded (doc, gram) rows exist at all."""
+    A prefix-filtered (PPJoin) join is the wrong shape here: this
+    corpus has a SMALL element universe (word-soup from a tiny
+    vocabulary: every shingle is frequent), which defeats prefix
+    pruning — measured 108 s vs 6 s at sf0.1.  The _text variant
+    shingles inside the pack UDF, so the only shuffle is the raw
+    documents — no exploded (doc, gram) rows exist at all."""
     from codedup.operators import blocked_jaccard_join_text
 
     docs = _t(spark, sf_dir, "documents")
@@ -1512,13 +1511,13 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str,
     literals (VERDICT r2 #1).  Recall vs brute force stays gated in
     tests/test_ann_ivf.py.
 
-    r4: executes through the FULL-SCALE forms — one-pass Arrow argmin
-    assignment + cell-cogrouped BLAS search (ivf_topk_blocks) — which
-    are proven equivalent to the relational twin ivf_topk_relational
-    at this tier (tests/test_ann_scale_path.py); the twin remains the
-    oracle-shaped reference implementation.  Catalog timing now
-    measures the plan a cluster would actually run (~3x faster than
-    the SQL-expression form at sf0.1)."""
+    Executes through the FULL-SCALE forms — one-pass Arrow argmin
+    assignment (probe_cells) + cell-cogrouped BLAS search
+    (ivf_topk_blocks).  tests/test_ann_scale_path.py checks them against
+    the relational references (_ranked_cells for the assignment,
+    ivf_topk for the search); the DuckDB oracle checks the query
+    end to end.  Catalog timing measures the plan a cluster would
+    actually run (~3x faster than the SQL-expression form at sf0.1)."""
     from codedup.ann import golden_centroids, ivf_topk_blocks, probe_cells
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -3055,7 +3054,7 @@ def q_apply_plan_moves(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_ids (colliding basenames, _N-numbered stems, empty suffixes,
     non-mover 'keep' rows) plus a fixed existing-name table, and
     codedup.apply.plan_moves assigns destination names; the DuckDB
-    oracle reproduces the whole family/stem_N discipline — original-
+    oracle reproduces the whole root-family discipline — original-
     name claims, blocked set, family candidate sequence, slot matching
     — in SQL.  Output is ids + strings only (no floats)."""
     from codedup.apply import plan_moves

@@ -121,7 +121,8 @@ def connected_components(edges: DataFrame, cfg: DedupConfig,
     cap = (cfg.cc_local_max_edges if local_max_edges is None
            else local_max_edges)
     if cap:
-        e = e.localCheckpoint(eager=True)
+        # lazy: the count is the action that materializes the blocks
+        e = e.localCheckpoint(eager=False)
         if e.count() <= cap:
             return _components_local(e)
     prev = None

@@ -43,105 +43,6 @@ from codedup.stages.signatures import compute_signatures
 from codedup.stages.verify import verify_pairs
 
 
-def windowed_event_counts(spark: SparkSession, source_dir: str,
-                          checkpoint_dir: str,
-                          window: str = "1 day",
-                          watermark: str = "1 day"):
-    """Event-time windowed rollup with a watermark over the events
-    stream table (SURVEY §2.7's "if a streaming surface is added" path):
-    readStream -> withWatermark -> window().groupBy -> counts.  Late
-    rows beyond the watermark are dropped by the engine; state for
-    closed windows is evicted.  Returns the started query writing to an
-    in-memory sink named 'event_counts' (tests/demo; production would
-    write a table)."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType([
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ])
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("n_events"),
-             F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type", "n_events", "sum_value",
-        )
-    )
-    return (
-        agg.writeStream.outputMode("complete")
-        .format("memory").queryName("event_counts")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stateful_user_totals(spark: SparkSession, source_dir: str, checkpoint_dir: str,
-                         max_files_per_trigger: int = 1):
-    """Custom STATEFUL streaming operator via applyInPandasWithState
-    (SURVEY §2.7's "custom stateful operators" path): cumulative
-    per-user event count + value total, state carried across
-    micro-batches by the engine's state store (not by side tables like
-    IncrementalDedup — this is the API for state that must live inside
-    the streaming engine: timeouts, watermark eviction, rescaling).
-
-    Emits one updated row per user per batch to the in-memory sink
-    'user_totals' (update mode: the LAST row per user is current)."""
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    schema = T.StructType([
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ])
-
-    def update(key, pdf_iter, state: GroupState):
-        (user_id,) = key
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdf_iter:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((n, total))
-        yield pd.DataFrame({
-            "user_id": [user_id],
-            "n_events": [n],
-            "sum_value": [round(total, 2)],
-        })
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-    out = stream.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType="user_id long, n_events long, sum_value double",
-        stateStructType="n long, total double",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    return (
-        out.writeStream.outputMode("update")
-        .format("memory").queryName("user_totals")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 class IncrementalDedup:
     """foreachBatch processor with exactly-once state tables.
 

@@ -67,19 +67,18 @@ def test_golden_centroids_reproduce(ivf):
 
 
 def test_relational_ivf_recall_vs_brute_force(spark, ivf):
-    """The oracle-checked catalog query (pinned centroids + relational
-    assignment/search) must keep the same recall gate as the numpy
-    path."""
-    from codedup.ann import golden_centroids, ivf_topk_relational
-    from codedup.queries import q_ann_topk_cosine
+    """The oracle-checked catalog query ann_ivf_topk (pinned centroids,
+    probe_cells assignment, cell-cogrouped ivf_topk_blocks search) must
+    keep the same recall gate as the KMeans-trained path."""
+    from codedup.config import AnnParams
+    from codedup.queries import q_ann_ivf_topk, q_ann_topk_cosine
 
-    got = ivf_topk_relational(ivf["emb"], golden_centroids(),
-                              probe_mod=50, k=5, nprobe=6)
+    got = q_ann_ivf_topk(spark, SF, AnnParams(ivf_nprobe=6))
     got_pairs = {(r["query_id"], r["neighbor_id"]) for r in got.collect()}
     want_pairs = {(r["query_id"], r["neighbor_id"])
                   for r in q_ann_topk_cosine(spark, SF).collect()}
     recall = len(got_pairs & want_pairs) / len(want_pairs)
-    assert recall >= 0.8, f"relational IVF recall@5 {recall:.3f}"
+    assert recall >= 0.8, f"catalog IVF recall@5 {recall:.3f}"
 
 
 def test_ivf_index_deterministic(spark, ivf):

@@ -54,13 +54,11 @@ def test_lsh_planes_change_plan_not_contract(spark):
 
 def test_ivf_nprobe_full_equals_brute_force(spark):
     """nprobe = n_cells searches every cell -> exact brute force."""
-    from codedup.ann import golden_centroids, ivf_topk_relational
-    from codedup.queries import _t
+    from codedup.ann import golden_centroids
+    from codedup.queries import q_ann_ivf_topk
 
-    emb = _t(spark, SF, "embeddings")
-    cents = golden_centroids()
-    got = _pdf(ivf_topk_relational(emb, cents, probe_mod=50, k=5,
-                                   nprobe=len(cents)))
+    got = _pdf(q_ann_ivf_topk(spark, SF,
+                              AnnParams(ivf_nprobe=len(golden_centroids()))))
     brute = _pdf(q_ann_topk_cosine(spark, SF))
     assert got.equals(brute)
 
@@ -133,7 +131,7 @@ def test_feedback_scoring_raises_on_dim_mismatch(spark, tmp_path):
 
 def test_ivf_assignment_raises_on_dim_mismatch(spark, tmp_path):
     """Same hazard for the pinned 64-dim IVF centroids (semantic_dedup
-    and ann_ivf_topk both assign through _ranked_cells)."""
+    and ann_ivf_topk both assign through probe_cells)."""
     import pytest as _pytest
 
     from codedup.queries import q_semantic_dedup

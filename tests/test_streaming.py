@@ -55,39 +55,6 @@ def test_incremental_equals_batch(spark, drops, cfg, tmp_path):
     )
 
 
-def test_windowed_event_counts_match_batch(spark, tmp_path):
-    """Watermarked streaming window agg over events == batch groupBy
-    over the same data (all rows within watermark in this replay)."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from codedup.streaming import windowed_event_counts
-
-    src = str(tmp_path / "events_src")
-    import os
-    os.makedirs(src)
-    shutil.copy("/root/testdata/sf0.001/events.parquet", src + "/events.parquet")
-
-    q = windowed_event_counts(spark, src, str(tmp_path / "chk"))
-    q.awaitTermination(300)
-    got = (
-        spark.table("event_counts").toPandas()
-        .sort_values(["window_start", "event_type"], ignore_index=True)
-    )
-    batch = (
-        spark.read.parquet(src)
-        .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-                "event_type", "n_events", "sum_value")
-        .toPandas()
-        .sort_values(["window_start", "event_type"], ignore_index=True)
-    )
-    assert got.equals(batch)
-    assert len(got) > 10
-
-
 def test_streaming_state_tables_exist(spark, drops, cfg, tmp_path_factory):
     # state dirs created by the previous test's module-scoped stream work
     # are not shared (tmp_path differs); run a tiny standalone check
@@ -185,49 +152,6 @@ def test_compaction_preserves_state_and_shrinks_files(spark, drops, cfg, tmp_pat
     # post-compaction batches still land + dedupe against the snapshot
     inc.process_batch(spark.read.parquet(drops["paths"][0]), 99)
     assert inc.pairs().toPandas().sort_values(["a", "b"], ignore_index=True).equals(after)
-
-
-def test_stateful_user_totals_accumulate_across_batches(spark, tmp_path):
-    """applyInPandasWithState: per-user totals carried in the engine's
-    state store across micro-batches must equal the batch groupBy over
-    the full data (maxFilesPerTrigger=1 over 2 drops forces >=2
-    batches, so state crossing batches is actually exercised)."""
-    from pyspark.sql import functions as F
-
-    from codedup.streaming import stateful_user_totals
-
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    src = str(tmp_path / "src")
-    events.filter(F.col("event_id") % 2 == 0).coalesce(1) \
-        .write.mode("overwrite").parquet(src + "/drop0")
-    events.filter(F.col("event_id") % 2 == 1).coalesce(1) \
-        .write.mode("overwrite").parquet(src + "/drop1")
-    import glob
-    import os
-    import shutil
-    flat = str(tmp_path / "flat")
-    os.makedirs(flat)
-    for i, f in enumerate(sorted(glob.glob(src + "/drop*/*.parquet"))):
-        shutil.copy(f, f"{flat}/d{i}.parquet")
-
-    q = stateful_user_totals(spark, flat, str(tmp_path / "chk"))
-    q.awaitTermination(300)
-
-    got_all = spark.table("user_totals").toPandas()
-    # update mode: last emitted row per user is current
-    got = got_all.groupby("user_id").last()
-    want = (
-        events.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"),
-             F.round(F.sum("value"), 2).alias("sum_value"))
-        .toPandas().set_index("user_id")
-    )
-    assert len(got) == len(want)
-    merged = got.join(want, lsuffix="_g", rsuffix="_w")
-    assert (merged.n_events_g == merged.n_events_w).all()
-    assert (abs(merged.sum_value_g - merged.sum_value_w) < 0.02).all()
-    # state actually crossed batches: some user emitted twice
-    assert got_all.user_id.duplicated().any()
 
 
 # --- compact() crash recovery (ADVICE r3 medium) -------------------------

@@ -43,7 +43,7 @@ def run_headline() -> None:
     from codedup.session import build_session
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     spark = build_session(f"local[{cpus}]", app_name="codedup-bench",
                           shuffle_partitions=max(int(cpus), 8))
     spark.sparkContext.setLogLevel("ERROR")
@@ -155,7 +155,7 @@ def run_scaling_leg(cores: int, corpus_dir: str) -> None:
     from codedup import pipeline
 
     window = ("signatures", "bands", "candidates", "verified", "clusters")
-    cfg = DedupConfig(shuffle_partitions=64)
+    cfg = DedupConfig()
     spark = build_session(f"local[{cores}]", app_name=f"codedup-scale-{cores}",
                           shuffle_partitions=64)
     spark.sparkContext.setLogLevel("ERROR")

@@ -33,7 +33,7 @@ def main() -> None:
     from codedup.session import build_session
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     repeat = int(os.environ.get("CODEDUP_BENCH_REPEAT", "1"))
 
     args = [a for a in sys.argv[1:]]

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-IVF_N_CELLS = 16
+IVF_N_CELLS = 16    # ~sqrt(n) at scale; 16 fits the sf0.001-0.1 tables
 IVF_SEED = 42
 
 

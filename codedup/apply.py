@@ -38,18 +38,25 @@ from pyspark.sql import functions as F
 MOVE_ACTIONS = ("dedup", "review")
 
 
+# (stem)(suffix): suffix from the last dot, after a non-empty stem; a
+# run of _<digits> groups is never a suffix (root_N probing makes it stem)
+_NAME_SPLIT = r"^(.+)(\.(?!(_[0-9]+)+$)[^.]+)$"
+
+
 def _with_name_parts(df: DataFrame, name_col: str) -> DataFrame:
-    """Split a file name into (stem, suffix): suffix = from the LAST dot
-    (inclusive), '' when there is no dot — Path.stem/.suffix semantics."""
-    has_dot = F.col(name_col).rlike("^.+\\..+$")
+    """Split a file name into (stem, suffix), suffix '' when the name has
+    none (_NAME_SPLIT), plus its family root ``fam``: the stem with EVERY
+    trailing _<digits> group stripped.  Under this split every candidate
+    name a family emits (plan_moves) parses back into that family."""
+    name = F.col(name_col)
     return df.withColumn(
         "stem",
-        F.when(has_dot, F.regexp_extract(F.col(name_col), r"^(.*)\.[^.]+$", 1))
-        .otherwise(F.col(name_col)),
+        F.when(name.rlike(_NAME_SPLIT), F.regexp_extract(name, _NAME_SPLIT, 1))
+        .otherwise(name),
     ).withColumn(
-        "suffix",
-        F.when(has_dot, F.regexp_extract(F.col(name_col), r"^.*(\.[^.]+)$", 1))
-        .otherwise(F.lit("")),
+        "suffix", F.regexp_extract(name, _NAME_SPLIT, 2),
+    ).withColumn(
+        "fam", F.regexp_replace("stem", "(_[0-9]+)+$", ""),
     )
 
 
@@ -70,11 +77,13 @@ def plan_moves(actions: DataFrame, dest_root: str,
     would put 'a_1_2.py' in family 'a_1', whose first candidate
     'a_1.py' lives in family 'a' and so escapes that family's blocked
     names (a cross-family collision; caught by the randomized property
-    test).  Within a family: (1) the first mover (iteration order:
-    cluster asc, rank asc, file_id) holding each distinct original
-    basename KEEPS it when no existing file does — original-name
-    priority, a deliberate deviation from the reference's strictly
-    sequential probing, which can steal a later file's own name;
+    test).  So every candidate must parse back into its family:
+    'a._1' is stem 'a._1' (family 'a.'), and an empty root ('_1.py')
+    has no candidate 0.  Within a family: (1) the first mover
+    (iteration order: cluster asc, rank asc, file_id) holding each
+    distinct original basename KEEPS it when no existing file does —
+    original-name priority, a deliberate deviation from the reference's
+    strictly sequential probing, which can steal a later file's own name;
     (2) everyone else takes the family's free candidate sequence
     base.sfx, base_1.sfx, base_2.sfx, ... skipping existing and claimed
     names, in iteration order.  Deterministic, collision-free, linear
@@ -105,13 +114,11 @@ def plan_moves(actions: DataFrame, dest_root: str,
         .withColumn("src_name",
                     F.element_at(F.split(F.regexp_extract("key", r"^(.*)@[^@]*$", 1), "/"), -1))
     )
-    movers = _with_name_parts(movers, "src_name").withColumn(
-        "fam", F.regexp_replace("stem", "(_[0-9]+)+$", ""))
+    movers = _with_name_parts(movers, "src_name")
 
     exist = (existing if existing is not None
              else spark.createDataFrame([], "name string"))
-    exist_parts = _with_name_parts(exist.select("name"), "name").withColumn(
-        "fam", F.regexp_replace("stem", "(_[0-9]+)+$", ""))
+    exist_parts = _with_name_parts(exist.select("name"), "name")
 
     cols = ["file_id", "key", "cluster_id", "rank", "action", "src_name"]
     out_schema = T.StructType(
@@ -142,8 +149,9 @@ def plan_moves(actions: DataFrame, dest_root: str,
                     dest[i] = s
         blocked = exist_names | {d for d in dest if d is not None}
         # (2) family candidate sequence minus blocked names, assigned
-        # to the remaining movers in iteration order
-        nxt = 0
+        # to the remaining movers in iteration order ('' + '.py' would
+        # parse as family '.py')
+        nxt = 0 if fam else 1
         for i in range(n):
             if dest[i] is not None:
                 continue

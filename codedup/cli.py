@@ -48,7 +48,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--shingle-k", type=int, default=None)
     p.add_argument("--bands", type=int, default=None)
     p.add_argument("--rows-per-band", type=int, default=None)
-    p.add_argument("--shuffle-partitions", type=int, default=None)
+    p.add_argument("--shuffle-partitions", type=int, default=32)
     return p
 
 
@@ -105,7 +105,6 @@ def main(argv: list[str] | None = None) -> int:
             "shingle_k": args.shingle_k,
             "bands": args.bands,
             "rows_per_band": args.rows_per_band,
-            "shuffle_partitions": args.shuffle_partitions,
         }.items()
         if v is not None
     }
@@ -128,7 +127,8 @@ def main(argv: list[str] | None = None) -> int:
             print(f"error: source not found: {p}", file=sys.stderr)
             return 2
 
-    spark = build_session(master, app_name=f"codedup-{args.run_id}", config=cfg)
+    spark = build_session(master, app_name=f"codedup-{args.run_id}",
+                          shuffle_partitions=args.shuffle_partitions)
     spark.sparkContext.setLogLevel("WARN")
     try:
         res = pipeline.run(

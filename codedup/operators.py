@@ -6,6 +6,8 @@ kernel, ``_sweep_block_pairs``).  Unlike MinHash-LSH this is EXACT — no
 probabilistic recall.  It is the only exact join: a prefix-filtered
 (PPJoin) join's cost swings with the shingle-frequency distribution, and
 on the catalog corpora it measured 18x slower than the sweep.
+``block_pairs`` is the block-pair scaffold it shares with the embedding
+matmuls in queries.py.
 """
 
 from __future__ import annotations
@@ -13,8 +15,68 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Per-task memory bound: a task holds one block pair, ~2 * BLOCK_BYTES
+# of input as Catalyst estimates it (on-disk bytes for a file scan),
+# times the kernel's expansion — the sweep packs <= 12 bytes per text
+# char (8-byte gram + <= 4-byte index), an embedding block 8 per float.
+BLOCK_BYTES = 32 << 20
 
-def blocked_jaccard_join(sh: DataFrame, threshold: float, n_blocks: int = 16,
+
+def block_count(parallelism: int, nbytes: int, other: int | None = None) -> int:
+    """Fewest blocks whose block-pair tasks fill one wave of
+    ``parallelism`` slots — self-join (other=None): the smallest nb with
+    nb(nb+1)/2 >= parallelism; grid against ``other`` blocks: the
+    smallest n with other*n >= parallelism — raised to
+    ceil(nbytes / BLOCK_BYTES), never below 1.  Fewer blocks cost less:
+    each block is shipped to and unpacked by every pair task it is in."""
+    if other is None:
+        n = 1
+        while n * (n + 1) // 2 < parallelism:
+            n += 1
+    else:
+        n = -(-parallelism // other)
+    return max(n, -(-nbytes // BLOCK_BYTES), 1)
+
+
+def _plan_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate for df (no Spark job); 0 when unknown."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    return 0 if size >= conf.defaultSizeInBytes() else size
+
+
+def block_pairs(pack, x: DataFrame, y: DataFrame | None = None) -> DataFrame:
+    """Block pairs of ``x`` with itself (the xblk <= yblk triangle, y
+    None) or with ``y`` (one x block unless its bytes need more), block
+    counts from block_count over defaultParallelism.  ``pack(df, n)``
+    returns one row per non-empty block, block id 0..n-1 in ``blk``; the
+    result has every packed column prefixed ``x`` and ``y``.
+
+    One pair per task, by a dense pair id: the kernels are CPU-dense and
+    pairs are few, so this is the finest stealing grain (lumping 4-5
+    pairs per task left a 20-30% straggler tail)."""
+    P = x.sparkSession.sparkContext.defaultParallelism
+
+    def side(df, prefix):
+        return df.select([F.col(c).alias(prefix + c) for c in df.columns])
+
+    if y is None:
+        nb = block_count(P, _plan_bytes(x))
+        # both sides read the blocks: without it the pack UDF runs twice
+        blocks = pack(x, nb).localCheckpoint(eager=True)
+        pairs = side(blocks, "x").crossJoin(side(blocks, "y")) \
+            .filter(F.col("xblk") <= F.col("yblk"))
+        pid, n_pairs = F.expr("yblk * (yblk + 1) div 2 + xblk"), nb * (nb + 1) // 2
+    else:
+        nx = block_count(1, _plan_bytes(x), other=1)
+        ny = block_count(P, _plan_bytes(y), other=nx)
+        pairs = side(pack(x, nx), "x").crossJoin(side(pack(y, ny), "y"))
+        pid, n_pairs = F.col("xblk") * ny + F.col("yblk"), nx * ny
+    return (pairs.withColumn("_pair", pid.cast("int"))
+            .repartitionById(n_pairs, "_pair").drop("_pair"))
+
+
+def blocked_jaccard_join(sh: DataFrame, threshold: float,
                          metric: str = "jaccard") -> DataFrame:
     """Exact all-pairs Jaccard join for SMALL-VOCABULARY corpora, as a
     block-partitioned inverted-index scan — fully distributed, nothing
@@ -24,8 +86,8 @@ def blocked_jaccard_join(sh: DataFrame, threshold: float, n_blocks: int = 16,
     (every element is frequent), prefix filtering cannot prune — the
     inverted-list cost sum(df(g)^2) is intrinsic.  This operator splits
     that cost across block pairs instead: documents are packed into
-    ``n_blocks`` dense set-blocks (ONE groupBy shuffle), the
-    NB*(NB+1)/2 unordered block pairs crossJoin, and each task
+    NB dense set-blocks (ONE groupBy shuffle), the NB*(NB+1)/2
+    unordered block pairs crossJoin (``block_pairs``), and each task
     intersects one block pair with a sparse postings expansion over the
     pair-local vocabulary — exact integer threshold math, bit-identical
     to the naive all-pairs SQL.
@@ -34,42 +96,25 @@ def blocked_jaccard_join(sh: DataFrame, threshold: float, n_blocks: int = 16,
     by doc_id.  Every unordered doc pair lives in exactly one unordered
     block pair, so no dedup is needed.
 
-    Scale contract: per-task memory is O(block), so n_blocks is chosen
-    to make blocks executor-sized (~10^5-10^6 docs); total work is the
-    intrinsic sum(df(g)^2) regardless of n_blocks.  The 10^12-file path
-    is MinHash-LSH (probabilistic); this is the EXACT quadratic
-    baseline, distributed."""
-    import pandas as pd
-
-    def pack_part(it):
+    Scale contract: NB comes from ``block_count`` (one wave of pairs,
+    no block above BLOCK_BYTES); per-task memory is one block pair.
+    Total work is the intrinsic sum(df(g)^2) regardless of NB.  The
+    10^12-file path is MinHash-LSH (probabilistic); this is the EXACT
+    quadratic baseline, distributed."""
+    def block_sets(pdf):
         import numpy as np
 
-        # one exchange, not two: repartition(n_blocks, _blk) already
-        # co-locates every row of a block in one partition, so the
-        # partition-level groupby here replaces groupBy.applyInPandas
-        # (which would add a second hash exchange of the same rows)
-        parts = [pdf for pdf in it]
-        if not parts:
-            return
-        for blk, pdf in pd.concat(parts).groupby("_blk", sort=False):
-            pdf = pdf.sort_values(["doc_id", "g"])
-            docs = pdf["doc_id"].to_numpy()
-            uniq, start = np.unique(docs, return_index=True)
-            offsets = np.append(start, docs.size).astype(np.int64)
-            yield _pack_row(int(blk), uniq, offsets,
-                            pdf["g"].to_numpy().astype(np.int64))
+        pdf = pdf.sort_values(["doc_id", "g"])
+        docs = pdf["doc_id"].to_numpy()
+        uniq, start = np.unique(docs, return_index=True)
+        return uniq, np.append(start, docs.size), pdf["g"].to_numpy().astype(np.int64)
 
-    blocks = (
-        sh.withColumn("_blk", F.pmod(F.col("doc_id"), F.lit(n_blocks)))
-        .repartition(n_blocks, "_blk")
-        .mapInPandas(pack_part, schema=_PACK_SCHEMA())
-    )
-    return _sweep_block_pairs(blocks, threshold, n_blocks, metric)
+    return _sweep_block_pairs(block_pairs(_set_packer(block_sets), sh),
+                              threshold, metric)
 
 
 def blocked_jaccard_join_text(docs: DataFrame, id_col: str, text_col: str,
                               k: int, threshold: float,
-                              n_blocks: int = 16,
                               metric: str = "jaccard") -> DataFrame:
     """blocked_jaccard_join specialized to char-k-gram sets of a text
     column: shingling happens INSIDE the pack UDF (numpy rolling hash
@@ -77,39 +122,47 @@ def blocked_jaccard_join_text(docs: DataFrame, id_col: str, text_col: str,
     shuffled once — no exploded (doc, gram) rows ever exist as a
     DataFrame.  Empty text packs one sentinel gram, mirroring the SQL
     substr('', i, k) = '' singleton set."""
-    import pandas as pd
-
-    def pack_part(it):
+    def block_sets(pdf):
         import numpy as np
 
         from codedup import kernels as K
 
-        # one exchange, not two (see blocked_jaccard_join.pack_part)
+        pdf = pdf.sort_values("doc_id")
+        offsets = [0]
+        grams = []
+        for text in pdf[text_col]:
+            h = np.unique(K.shingle_hashes(text, k, normalize_ws=False))
+            if h.size == 0:
+                h = np.zeros(1, dtype=np.uint64)  # '' gram sentinel
+            grams.append(h.view(np.int64))
+            offsets.append(offsets[-1] + h.size)
+        return pdf["doc_id"].to_numpy(), offsets, np.concatenate(grams)
+
+    docs = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias(text_col))
+    return _sweep_block_pairs(block_pairs(_set_packer(block_sets), docs),
+                              threshold, metric)
+
+
+def _set_packer(block_sets):
+    """block_pairs' ``pack``: block doc_id % n.  One exchange, not two:
+    repartition(n, _blk) co-locates each block, so a partition-level
+    groupby replaces groupBy.applyInPandas (a second hash exchange of
+    the same rows).  ``block_sets(pdf)`` -> (doc_ids, offsets, grams)."""
+    import pandas as pd
+
+    def pack_part(it):
         parts = [pdf for pdf in it]
         if not parts:
             return
         for blk, pdf in pd.concat(parts).groupby("_blk", sort=False):
-            pdf = pdf.sort_values(id_col)
-            offsets = [0]
-            grams = []
-            for text in pdf[text_col]:
-                h = np.unique(K.shingle_hashes(text, k, normalize_ws=False))
-                if h.size == 0:
-                    h = np.zeros(1, dtype=np.uint64)  # '' gram sentinel
-                grams.append(h.view(np.int64))
-                offsets.append(offsets[-1] + h.size)
-            yield _pack_row(int(blk),
-                            pdf[id_col].to_numpy(),
-                            np.asarray(offsets, dtype=np.int64),
-                            np.concatenate(grams))
+            yield _pack_row(int(blk), *block_sets(pdf))
 
-    blocks = (
-        docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias(text_col))
-        .withColumn("_blk", F.pmod(F.col("doc_id"), F.lit(n_blocks)))
-        .repartition(n_blocks, "_blk")
-        .mapInPandas(pack_part, schema=_PACK_SCHEMA())
+    return lambda df, n: (
+        df.withColumn("_blk", F.pmod(F.col("doc_id"), F.lit(n)))
+        .repartition(n, "_blk")
+        .mapInPandas(pack_part, schema="blk long, doc_ids binary, offsets binary,"
+                                        " vocab binary, inv binary")
     )
-    return _sweep_block_pairs(blocks, threshold, n_blocks, metric)
 
 
 def _pack_row(blk: int, doc_ids, offsets, grams):
@@ -145,24 +198,12 @@ def _pack_row(blk: int, doc_ids, offsets, grams):
     })
 
 
-def _PACK_SCHEMA():
-    from pyspark.sql import types as T
-
-    return T.StructType([
-        T.StructField("blk", T.LongType()),
-        T.StructField("doc_ids", T.BinaryType()),
-        T.StructField("offsets", T.BinaryType()),
-        T.StructField("vocab", T.BinaryType()),
-        T.StructField("inv", T.BinaryType()),
-    ])
-
-
-def _sweep_block_pairs(blocks: DataFrame, threshold: float, n_blocks: int,
+def _sweep_block_pairs(pairs: DataFrame, threshold: float,
                        metric: str = "jaccard") -> DataFrame:
-    """Shared sweep over packed set-blocks: unordered block pairs
-    crossJoin; each task intersects one pair with a sparse
-    inverted-index postings expansion over the pair-local vocabulary
-    (cost = the intrinsic sum_g df_x(g) * df_y(g), exact int64 counts).
+    """Shared sweep over ``block_pairs`` of packed set-blocks: each task
+    intersects one block pair with a sparse inverted-index postings
+    expansion over the pair-local vocabulary (cost = the intrinsic
+    sum_g df_x(g) * df_y(g), exact int64 counts).
 
     metric="jaccard":      threshold on c / (na + nb - c)
     metric="containment":  threshold on c / min(na, nb) — max-containment,
@@ -173,27 +214,8 @@ def _sweep_block_pairs(blocks: DataFrame, threshold: float, n_blocks: int,
         raise ValueError(f"unknown metric {metric!r}")
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
     min_ppm = int(round(threshold * 1_000_000))
-    spark = blocks.sparkSession
-    # both crossJoin sides read this; without an eager checkpoint the
-    # lazy plan re-runs the shingle/pack UDF once per side
-    blocks = blocks.localCheckpoint(eager=True)
-    x = blocks.toDF("xblk", "xdocs", "xoff", "xv", "xinv")
-    y = blocks.toDF("yblk", "ydocs", "yoff", "yv", "yinv")
-    # one block pair per task: the sweep is CPU-dense and pairs are few,
-    # so per-pair tasks give the scheduler the finest stealing grain
-    # (4-5 pairs lumped per task left a 20-30% straggler tail; a
-    # shuffle-free cartesian was tried and loses — the join plans as a
-    # nested loop whose task count is the block partitioning, leaving
-    # one task to grind 16 pairs serially)
-    n_pairs = n_blocks * (n_blocks + 1) // 2
-    pairs = (
-        x.crossJoin(y)
-        .filter(F.col("xblk") <= F.col("yblk"))
-        .repartition(max(spark.sparkContext.defaultParallelism, n_pairs))
-    )
 
     X_CHUNK = 1024    # x docs per count matrix: X_CHUNK * n_y int64
     # per-gram expansion-vs-gemm breakeven: a gemm column costs
@@ -207,15 +229,15 @@ def _sweep_block_pairs(blocks: DataFrame, threshold: float, n_blocks: int,
     def gen(it):
         for pdf in it:
             for row in pdf.itertuples(index=False):
-                xdocs = np.frombuffer(row.xdocs, dtype=np.int64)
-                xoff = np.frombuffer(row.xoff, dtype=np.int64)
-                vx = np.frombuffer(row.xv, dtype=np.int64)
+                xdocs = np.frombuffer(row.xdoc_ids, dtype=np.int64)
+                xoff = np.frombuffer(row.xoffsets, dtype=np.int64)
+                vx = np.frombuffer(row.xvocab, dtype=np.int64)
                 ivx = np.frombuffer(
                     row.xinv,
                     dtype=np.int16 if vx.size < (1 << 15) else np.int32)
-                ydocs = np.frombuffer(row.ydocs, dtype=np.int64)
-                yoff = np.frombuffer(row.yoff, dtype=np.int64)
-                vy = np.frombuffer(row.yv, dtype=np.int64)
+                ydocs = np.frombuffer(row.ydoc_ids, dtype=np.int64)
+                yoff = np.frombuffer(row.yoffsets, dtype=np.int64)
+                vy = np.frombuffer(row.yvocab, dtype=np.int64)
                 ivy = np.frombuffer(
                     row.yinv,
                     dtype=np.int16 if vy.size < (1 << 15) else np.int32)
@@ -385,6 +407,5 @@ def _sweep_block_pairs(blocks: DataFrame, threshold: float, n_blocks: int,
                         "nb": np.concatenate(out_nb),
                     }).astype("int64")
 
-    schema = T.StructType([T.StructField(c, T.LongType()) for c in ("a", "b", "c", "na", "nb")])
-    return pairs.mapInPandas(gen, schema=schema)
+    return pairs.mapInPandas(gen, schema="a long, b long, c long, na long, nb long")
 

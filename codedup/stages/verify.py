@@ -6,8 +6,8 @@ check, dedup.py:220-227, split into cheap->expensive tiers):
 
   hamming   — SimHash Hamming distance, computed JVM-side with
               bit_count(xor) BEFORE the Python boundary (K5 analog,
-              hasher.py:60-71).  Recorded as a signal; not used as a
-              prefilter by default (protects the 0.99 recall bar).
+              hasher.py:60-71).  Recorded as a signal only; never a
+              prefilter (protects the 0.99 recall bar).
   jaccard   — exact Jaccard over the true shingle sets (K10); the
               primary accept/reject filter.
   lcs_frac  — suffix-array longest-common-substring / min(len), over
@@ -79,8 +79,6 @@ def verify_pairs(pairs: DataFrame, reps: DataFrame, sigs: DataFrame, cfg: DedupC
         )
         with_sim = with_sim.filter(F.expr(agree) >= F.lit(est_min * cfg.num_perm))
     with_sim = with_sim.drop("mh_a", "mh_b")
-    if cfg.simhash_hamming_max is not None and cfg.simhash_prefilter:
-        with_sim = with_sim.filter(F.col("hamming") <= cfg.simhash_hamming_max)
 
     content = reps.select("file_id", "content")
     joined = (
@@ -91,11 +89,12 @@ def verify_pairs(pairs: DataFrame, reps: DataFrame, sigs: DataFrame, cfg: DedupC
         # Explicit repartition: AQE's advisory-size coalescing would shrink
         # this shuffle to ~8 partitions (64 MB each) and cap the Python
         # verify stage's parallelism; verification is CPU-bound per pair,
-        # not bytes-bound, so spread it across all cores.  Round-robin
-        # (not by "a") keeps hub files from skewing one task; the local
-        # sort then groups each partition's share of a hub's pairs so
-        # the per-partition memo below still hits.
-        .repartition(cfg.shuffle_partitions)
+        # not bytes-bound, so spread it over the cores, as
+        # minhash_chain does before signatures.  Round-robin (not by "a")
+        # keeps hub files from skewing one task; the local sort then
+        # groups each partition's share of a hub's pairs so the
+        # per-partition memo below still hits.
+        .repartition(pairs.sparkSession.sparkContext.defaultParallelism)
         .sortWithinPartitions("a", "b")
     )
 

@@ -82,6 +82,10 @@ class IncrementalDedup:
         self._tables = (self.sig_dir, self.bands_dir, self.pairs_dir,
                         self.content_dir, self.stats_dir)
 
+    @property
+    def _shuffle_partitions(self) -> int:   # the deployment's setting
+        return int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+
     # --- state access ---
     def _recover_compaction(self, path: str) -> None:
         """Repair a compact() interrupted by a crash (ADVICE r3 medium):
@@ -126,7 +130,7 @@ class IncrementalDedup:
         # superlinearly.  repartition (not coalesce: coalesce would cap
         # the upstream compute stage's parallelism) shuffles only this
         # batch's small output.
-        n_files = max(self.cfg.shuffle_partitions // 16, 2)
+        n_files = max(self._shuffle_partitions // 16, 2)
         df.repartition(n_files).write.mode("overwrite").parquet(
             os.path.join(table_dir, f"batch_id={batch_id}"))
 
@@ -184,7 +188,7 @@ class IncrementalDedup:
                     F.sum("cnt").alias("cnt"), F.min("rep").alias("rep"))
             before = sum(len(fs) for _, _, fs in os.walk(d))
             tmp, old = d + "._compact", d + "._old"
-            df.coalesce(max(self.cfg.shuffle_partitions // 4, 1)) \
+            df.coalesce(max(self._shuffle_partitions // 4, 1)) \
                 .write.mode("overwrite").parquet(tmp)
             os.rename(d, old)            # live state parked, atomically
             os.makedirs(d)
@@ -237,7 +241,7 @@ class IncrementalDedup:
 
         tmp = os.path.join(self.stats_dir, f".tmp-boot-{os.getpid()}")
         shutil.rmtree(tmp, ignore_errors=True)
-        boot.repartition(max(self.cfg.shuffle_partitions // 16, 2)) \
+        boot.repartition(max(self._shuffle_partitions // 16, 2)) \
             .write.mode("overwrite").parquet(tmp)
         os.rename(tmp, os.path.join(self.stats_dir, "batch_id=-1"))
         return self._read_or_none(self.stats_dir)

@@ -1,11 +1,12 @@
-"""AnnParams (VERDICT r2 #6): the ANN/block knobs are config now; a
+"""AnnParams (VERDICT r2 #6): the ANN knobs are config now; a
 different setting must change the physical plan/work but never break
-the semantics — blocking is result-invariant by construction, and the
-pruned searches degrade to exact brute force when the knobs are opened
-fully."""
+the semantics — the pruned searches degrade to exact brute force when
+the knobs are opened fully.  Blocking (derived, not configured) is
+result-invariant by construction."""
 
 import pandas as pd
 
+from codedup import operators
 from codedup.config import DEFAULT_ANN, AnnParams
 from codedup.queries import (
     q_ann_lsh_bucketed,
@@ -20,15 +21,18 @@ def _pdf(df):
     return df.toPandas().sort_values(list(df.columns), ignore_index=True)
 
 
-def test_blocking_is_result_invariant(spark):
-    """emb_blocks/probe_blocks split rows, never the dim axis — any
-    setting gives bit-identical top-k."""
+def test_blocking_is_result_invariant(spark, monkeypatch):
+    """Block counts split rows, never the dim axis — any forced count
+    (block_count faked) gives bit-identical top-k and pairs."""
     want = _pdf(q_ann_topk_cosine(spark, SF))
-    got = _pdf(q_ann_topk_cosine(spark, SF,
-                                 AnnParams(emb_blocks=3, probe_blocks=2)))
-    assert got.equals(want)
     w2 = _pdf(q_embedding_similar_pairs(spark, SF))
-    g2 = _pdf(q_embedding_similar_pairs(spark, SF, AnnParams(emb_blocks=5)))
+    # block_pairs asks for the probe count, then the candidate count
+    forced = iter([2, 3])
+    monkeypatch.setattr(operators, "block_count", lambda *a, **kw: next(forced))
+    got = _pdf(q_ann_topk_cosine(spark, SF))
+    assert got.equals(want)
+    monkeypatch.setattr(operators, "block_count", lambda *a, **kw: 5)
+    g2 = _pdf(q_embedding_similar_pairs(spark, SF))
     assert g2.equals(w2)
 
 

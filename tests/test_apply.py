@@ -95,7 +95,7 @@ def test_plan_moves_properties_random(spark):
 
     rng = np.random.default_rng(5)
     basenames = ["a.py", "a_1.py", "a_2.py", "a_1_1.py", "a_1_2.py", "b", "b_1",
-                 "b_1_1", "c.tar.gz", "README", "x.py"]
+                 "b_1_1", "c.tar.gz", "README", "x.py", "_1.py", "a.", "a._1"]
     for trial in range(8):
         movers = []
         fid = 0
@@ -107,7 +107,8 @@ def test_plan_moves_properties_random(spark):
         if not movers:
             continue
         existing_names = list(rng.choice(
-            ["a.py", "a_1.py", "a_2.py", "a_1_1.py", "b", "b_1", "c.tar.gz", "zzz"],
+            ["a.py", "a_1.py", "a_2.py", "a_1_1.py", "b", "b_1", "c.tar.gz", "zzz",
+             ".py", "a._1"],
             size=int(rng.integers(0, 5)), replace=False))
         acts = spark.createDataFrame(
             movers, "file_id long, key string, cluster_id long, rank int, action string")

@@ -86,7 +86,7 @@ def test_spark_submit_py_files_demo(tmp_path):
             "from codedup import pipeline\n"
             "from codedup.config import DedupConfig\n"
             "spark = SparkSession.builder.getOrCreate()\n"
-            "res = pipeline.run(spark, [sys.argv[1]], DedupConfig(shuffle_partitions=4),\n"
+            "res = pipeline.run(spark, [sys.argv[1]], DedupConfig(),\n"
             "                   work_dir=sys.argv[2], run_id='demo', resume=False)\n"
             "n = res.verified.count()\n"
             "print('SUBMIT_DEMO_PAIRS=%d' % n)\n"

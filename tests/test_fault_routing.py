@@ -22,7 +22,7 @@ def test_signature_fault_is_routed_not_fatal(spark, tmp_path, monkeypatch):
     files.to_parquet(src, index=False)
 
     monkeypatch.setenv("CODEDUP_FAULT_INJECT", "POISON_MARKER")
-    cfg = DedupConfig(shuffle_partitions=4)
+    cfg = DedupConfig()
     res = pipeline.run(spark, [src], cfg, work_dir=str(tmp_path / "w"),
                        run_id="f", resume=False)
 
@@ -49,7 +49,7 @@ def test_verify_fault_recorded_not_fatal(spark, monkeypatch):
     from codedup.stages.verify import verify_pairs
 
     monkeypatch.setenv("CODEDUP_FAULT_INJECT", "VERIFY_POISON")
-    cfg = DedupConfig(shuffle_partitions=4)
+    cfg = DedupConfig()
     body = "def g():\n    return 42\n" * 20
     reps = spark.createDataFrame(
         [(1, body + "VERIFY_POISON\n"), (2, body + "VERIFY_POISON !\n"),

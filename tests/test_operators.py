@@ -4,7 +4,8 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from codedup.operators import blocked_jaccard_join
+from codedup import operators
+from codedup.operators import block_count, blocked_jaccard_join
 
 
 def _brute_force(sets: dict[int, set], t: float) -> set[tuple[int, ...]]:
@@ -41,15 +42,48 @@ def _to_df(spark, sets):
     return spark.createDataFrame(rows, "doc_id long, g long")
 
 
+# the sweep's result must not depend on its execution shape: every test
+# below runs at these forced block counts (block_count faked)
+FORCED_BLOCKS = (1, 2, 4, 16)
+
+
+def _force_blocks(monkeypatch, n_blocks):
+    monkeypatch.setattr(operators, "block_count", lambda *a, **kw: n_blocks)
+
+
+def test_block_count_fills_one_wave():
+    """block_count is a pure function of (task slots, bytes)."""
+    # triangle: smallest nb with nb(nb+1)/2 >= P
+    assert block_count(4, 0) == 3
+    assert block_count(32, 0) == 8
+    assert block_count(1, 0) == 1
+    # grid against k blocks: smallest n with k*n >= P
+    for p, k in [(4, 1), (4, 3), (32, 1), (32, 5), (7, 2)]:
+        n = block_count(p, 0, other=k)
+        assert k * n >= p and k * (n - 1) < p
+    # the byte term raises the count to ceil(bytes / BLOCK_BYTES)
+    bb = operators.BLOCK_BYTES
+    assert block_count(4, 10 * bb) == 10
+    assert block_count(4, 10 * bb + 1) == 11
+    assert block_count(4, 2 * bb) == 3
+    assert block_count(4, 10 * bb, other=4) == 10
+    # never below 1
+    assert block_count(0, 0) == 1
+    assert block_count(0, 0, other=8) == 1
+
+
 @pytest.mark.parametrize("t", [0.5, 0.6, 0.8])
-def test_blocked_join_exact(spark, random_sets, t):
+def test_blocked_join_exact(spark, random_sets, monkeypatch, t):
     sh = _to_df(spark, random_sets)
-    got = blocked_jaccard_join(sh, t, n_blocks=4).toPandas()
-    got_set = set(zip(got.a, got.b, got.c, got.na, got.nb))
-    assert got_set == _brute_force(random_sets, t)
+    want = _brute_force(random_sets, t)
+    for n_blocks in FORCED_BLOCKS:
+        _force_blocks(monkeypatch, n_blocks)
+        got = blocked_jaccard_join(sh, t).toPandas()
+        got_set = set(zip(got.a, got.b, got.c, got.na, got.nb))
+        assert got_set == want, n_blocks
 
 
-def test_blocked_containment_exact(spark, random_sets):
+def test_blocked_containment_exact(spark, random_sets, monkeypatch):
     """metric='containment' must match brute force c/min(|A|,|B|)."""
     t = 0.7
 
@@ -65,6 +99,8 @@ def test_blocked_containment_exact(spark, random_sets):
         return out
 
     sh = _to_df(spark, random_sets)
-    got = blocked_jaccard_join(sh, t, n_blocks=4, metric="containment").toPandas()
-    got = got[(got.c * 1_000_000) // got[["na", "nb"]].min(axis=1) >= 700_000]
-    assert set(zip(got.a, got.b, got.c)) == brute()
+    for n_blocks in FORCED_BLOCKS:
+        _force_blocks(monkeypatch, n_blocks)
+        got = blocked_jaccard_join(sh, t, metric="containment").toPandas()
+        got = got[(got.c * 1_000_000) // got[["na", "nb"]].min(axis=1) >= 700_000]
+        assert set(zip(got.a, got.b, got.c)) == brute(), n_blocks

@@ -4,7 +4,7 @@ embedding operators' scale rules were asserted, never demonstrated).
 Pipeline measured, in the exact shapes DESIGN_AT_SCALE.md claims:
 
   1. train    KMeans coarse quantizer on a 100k SAMPLE (cells ~ sqrt(n),
-              per AnnParams' rule) — offline-quantizer shape;
+              per the ann.IVF_N_CELLS rule) — offline-quantizer shape;
   2. assign   full table in ONE Arrow argmin pass (probe_cells nprobe=1
               — the path VERDICT r3 #4 mandated for the full-table job,
               NOT the windowed _ranked_cells form);

@@ -4,7 +4,7 @@ Usage: python tools/recall_at_scale.py <corpus_dir> [work_dir] [cores]
            [--margin M] [--lcs-cap N] [--no-lcs] [--pairs]
            [--shuffle N] [--driver-mem G]
 
---shuffle (default 128) sizes cfg/session shuffle partitions to the
+--shuffle (default 128) sizes the session's shuffle partitions to the
 tier; --driver-mem (default 8g) raises the local-mode heap for tiers
 past ~4M files (the 768-dim ANN tier taught that 8g dies on wide
 concurrent parquet decodes — same lesson applies as file count grows).
@@ -139,7 +139,7 @@ def main() -> int:
     from codedup.config import DedupConfig
     from codedup.session import build_session
 
-    cfg = DedupConfig(shuffle_partitions=shuffle, **kw)
+    cfg = DedupConfig(**kw)
     spark = build_session(f"local[{cores}]", app_name="recall-at-scale",
                           shuffle_partitions=shuffle,
                           extra={"spark.driver.memory": driver_mem})

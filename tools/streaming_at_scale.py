@@ -77,7 +77,7 @@ def main() -> int:
     from codedup.session import build_session
     from codedup.streaming import IncrementalDedup
 
-    cfg = DedupConfig(shuffle_partitions=128)
+    cfg = DedupConfig()
     spark = build_session(f"local[{cores}]", app_name="streaming-at-scale",
                           shuffle_partitions=128,
                           extra={"spark.driver.memory": driver_mem}
@@ -102,9 +102,8 @@ def main() -> int:
             staged.filter(F.col("_b") == b).drop("_b").coalesce(4) \
                 .write.mode("overwrite").parquet(os.path.join(drops_dir, f"d{b:03d}"))
 
-    stream_cfg = DedupConfig(shuffle_partitions=stream_shuffle)
     spark.conf.set("spark.sql.shuffle.partitions", str(stream_shuffle))
-    inc = IncrementalDedup(spark, stream_work, stream_cfg, compact_every=8)
+    inc = IncrementalDedup(spark, stream_work, cfg, compact_every=8)
     batch_walls, state_sizes = [], []
     t_stream0 = time.time()
     for b in range(n_batches):

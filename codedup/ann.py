@@ -1,20 +1,28 @@
-"""IVF (inverted-file) approximate nearest neighbor over embedding
-columns — the coarse-quantizer scale path, complementing the
-sign-random-projection LSH variant in queries.py (J6 family).
+"""Embedding similarity search (J6 family): the one cosine kernel
+every embedding search shares, and the IVF (inverted-file) approximate
+nearest neighbor search built on it.
+
+Kernel: :func:`cosine` scores a probes × members block with one gemm,
+        :func:`topk` keeps each probe's tie-aware top-k of a block, and
+        :func:`rerank` takes the global top-k.  :func:`keyed_topk` is
+        the keyed cogroup search IVF and sign-random-projection LSH
+        (queries.q_ann_lsh_bucketed) share; brute-force top-k, the
+        all-pairs threshold join and SemDeDup call the same cosine.
 
 Index:  pyspark.ml KMeans (fixed seed) partitions the corpus into
         n_cells Voronoi cells; every vector stores its cell id.
 Search: each probe ranks the n_cells centroids (centroid matrix is
         genuinely broadcast-small: n_cells x dim), keeps its ``nprobe``
-        nearest cells, EQUI-joins the cell assignments on cell id —
-        a hash join that prunes to ~ n * nprobe / n_cells candidates
-        per probe — then scores exact cosine inside the candidates and
-        window-ranks the global top-k.
+        nearest cells and meets the members of those cells, keyed by
+        cell id — pruning to ~ n * nprobe / n_cells candidates per
+        probe — then scores exact cosine inside the candidates and
+        ranks the global top-k.
 
 Like every IVF, recall is probabilistic (a true neighbor can sit just
-across a cell boundary), so this is verified by a recall@k test against
-the exact brute-force block matmul (tests/test_ann_ivf.py), not by a
-value-exact SQL oracle.  At 10^12 rows: n_cells ~ sqrt(n), the
+across a cell boundary), so recall@k is tested against the exact
+brute-force block matmul (tests/test_ann_ivf.py); with the pinned
+centroids the search is also value-exact against its DuckDB oracle
+(queries.SQL_ANN_IVF_TOPK).  At 10^12 rows: n_cells ~ sqrt(n), the
 assignments table is bucketed by cell, and the probe-side explode is
 nprobe rows per query — the same join-pruning story the bucketed-LSH
 plan test asserts.
@@ -158,78 +166,70 @@ def _ranked_cells(emb: DataFrame, centroids: list[list[float]],
     return d.withColumn("rn", F.row_number().over(w)).drop("c")
 
 
-def ivf_topk_blocks(assigned: DataFrame, centroids: list[list[float]],
-                    probes: DataFrame, k: int = 5, nprobe: int = 4,
-                    id_col: str = "vec_id", emb_col: str = "embedding") -> DataFrame:
-    """IVF search, the FULL-SCALE form (VERDICT r3 #2/#4): probes fan
-    out to their nprobe nearest cells (one small Arrow stage), then the
-    scoring is a cell-COGROUPED block matmul — probes of a cell meet
-    members of the same cell in one pandas cogroup task, the cosine
-    block is one BLAS gemm, and only each cell's local top-k survives
-    to the (tiny) global re-rank.  No per-pair SQL lambdas: at n=10^6,
-    cells=10^3, nprobe=10 the expression form would interpret ~10^9
-    lambda steps; this does one 10^3 x 10^3 x dim gemm per cell.
+def cosine(q, m):
+    """Cosine similarity of every row of ``q`` against every row of
+    ``m`` in float64: ``(q @ m.T) / (|q| · |m|)`` — one gemm, then one
+    division by the product of the two row norms, the order of
+    operations the DuckDB oracles use.  A zero-norm row gives NaN.
 
-    Equivalent to ivf_topk on the same assignment (tested); returns
-    (query_id, neighbor_id, rank) ranked by (cosine rounded 6,
-    neighbor_id)."""
-    import pandas as pd
+    Memory: the (rows of q) × (rows of m) float64 result plus one
+    temporary of the same shape (the norm products)."""
     import numpy as np
 
-    px = probe_cells(probes, centroids, nprobe, id_col, emb_col) \
-        .select(F.col(id_col).alias("query_id"), F.col(emb_col).alias("qa"), "cell")
-    mem = assigned.select(
-        F.col(id_col).alias("neighbor_id"), F.col(emb_col).alias("eb"), "cell")
+    q = np.asarray(q, dtype=np.float64)
+    m = np.asarray(m, dtype=np.float64)
+    qn = np.sqrt((q * q).sum(axis=1))
+    mn = np.sqrt((m * m).sum(axis=1))
+    sim = q @ m.T
+    with np.errstate(divide="ignore", invalid="ignore"):
+        sim /= qn[:, None] * mn[None, :]
+    return sim
 
-    def score(pl: pd.DataFrame, mr: pd.DataFrame) -> pd.DataFrame:
-        if not len(pl) or not len(mr):
-            return pd.DataFrame({"query_id": [], "neighbor_id": [], "sim6": []}) \
-                .astype({"query_id": "int64", "neighbor_id": "int64", "sim6": "float64"})
-        q = np.stack(pl["qa"].to_numpy()).astype(np.float64)
-        m = np.stack(mr["eb"].to_numpy()).astype(np.float64)
-        qn = q / np.linalg.norm(q, axis=1, keepdims=True)
-        mn = m / np.linalg.norm(m, axis=1, keepdims=True)
-        sim = np.round(qn @ mn.T, 6)
-        qid = pl["query_id"].to_numpy()
-        nid = mr["neighbor_id"].to_numpy()
-        sim[qid[:, None] == nid[None, :]] = -np.inf    # self-match
-        # NaN (zero-norm vector) -> -inf: excluded by the isfinite mask
-        # either way, but argpartition would otherwise rank NaN on top
-        np.copyto(sim, -np.inf, where=np.isnan(sim))
-        # cell-local top-k, TIE-AWARE (ADVICE r4): the global window
-        # ranks by (sim6 DESC, neighbor_id ASC), so when several
-        # members tie at the k-th similarity the survivors must be the
-        # LOWEST neighbor ids — argpartition alone breaks ties
-        # arbitrarily.  Hybrid (VERDICT r5 #2): argpartition to the
-        # k-th value, extend the slice to EVERY column tied at it, and
-        # lexsort only that slice — O(n + t log t) per row instead of
-        # the full-row lexsort's O(n log n), with the identical order.
-        # Self-matches (-inf) sort last and are dropped by the
-        # isfinite mask.
-        kk = min(k, sim.shape[1])
-        rows_out, cols_out = [], []
-        if sim.shape[1] > kk:
-            part = np.argpartition(-sim, kk - 1, axis=1)[:, :kk]
-            kth = np.take_along_axis(sim, part, axis=1).min(axis=1)
-        else:
-            kth = np.full(sim.shape[0], -np.inf)
-        for r in range(sim.shape[0]):
-            cand = np.nonzero(sim[r] >= kth[r])[0]
-            order = np.lexsort((nid[cand], -sim[r, cand]))[:kk]
-            sel = cand[order]
-            rows_out.append(np.full(sel.size, r, dtype=np.int64))
-            cols_out.append(sel)
-        rows = np.concatenate(rows_out) if rows_out else np.empty(0, dtype=np.int64)
-        cols = np.concatenate(cols_out) if cols_out else np.empty(0, dtype=np.int64)
-        keep = np.isfinite(sim[rows, cols])
-        return pd.DataFrame({
-            "query_id": qid[rows[keep]],
-            "neighbor_id": nid[cols[keep]],
-            "sim6": sim[rows[keep], cols[keep]],
-        })
 
-    cand = px.groupBy("cell").cogroup(mem.groupBy("cell")).applyInPandas(
-        score, schema="query_id long, neighbor_id long, sim6 double")
+def topk(sim, qids, nids, k: int):
+    """The per-group top-k of every embedding search: ``sim`` is a
+    probes × members block from :func:`cosine` (overwritten), ``qids``
+    / ``nids`` its row / column ids.  Returns a pandas frame (query_id,
+    neighbor_id, sim6) with each probe's k best members under (sim6
+    desc, neighbor_id asc), sim6 = the similarity rounded to 6.
+    Self-matches and NaN (zero-norm vectors) are excluded.
+
+    TIE-AWARE (ADVICE r4): members tied at the k-th similarity resolve
+    to the LOWEST neighbor ids, so the union of per-group top-ks holds
+    the global top-k :func:`rerank` takes.  The k-th value bounds the
+    candidates (ties included) and one lexsort orders them.
+
+    Per-task memory bound of the kernel (this plus :func:`cosine`):
+    about two probes × members float64 arrays (16 bytes per pair) and
+    a few one-byte masks of that shape, plus the two input matrices —
+    never a probes × members × dim array."""
+    import numpy as np
+    import pandas as pd
+
+    np.round(sim, 6, out=sim)
+    sim[qids[:, None] == nids[None, :]] = -np.inf
+    np.copyto(sim, -np.inf, where=np.isnan(sim))
+    n = sim.shape[1]
+    if n > k:
+        kth = np.partition(sim, n - k, axis=1)[:, n - k]
+    else:
+        kth = np.full(sim.shape[0], -np.inf)
+    rows, cols = np.nonzero((sim >= kth[:, None]) & np.isfinite(sim))
+    s = sim[rows, cols]
+    order = np.lexsort((nids[cols], -s, rows))
+    rows, cols, s = rows[order], cols[order], s[order]
+    # position within the probe's run of candidates; keep the first k
+    keep = np.arange(rows.size) - np.searchsorted(rows, rows) < k
+    return pd.DataFrame({"query_id": qids[rows[keep]],
+                         "neighbor_id": nids[cols[keep]],
+                         "sim6": s[keep]})
+
+
+def rerank(cand: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, sim6) candidates -> (query_id,
+    neighbor_id, rank) for each query's global top-k under (sim6 desc,
+    neighbor_id asc) — the order every exact and approximate search
+    and its oracle rank by."""
     w = Window.partitionBy("query_id").orderBy(F.desc("sim6"), F.asc("neighbor_id"))
     return (
         cand.withColumn("rank", F.row_number().over(w))
@@ -238,26 +238,90 @@ def ivf_topk_blocks(assigned: DataFrame, centroids: list[list[float]],
     )
 
 
+def keyed_topk(probes: DataFrame, members: DataFrame, k: int) -> DataFrame:
+    """Keyed top-k cosine search: probes (query_id, qa, key) meet the
+    members (neighbor_id, eb, key) that share their key in one pandas
+    cogroup task — one :func:`cosine` gemm and one :func:`topk` per
+    key — and only each key's local top-k reaches the global
+    :func:`rerank`.  A probe may carry several keys (IVF cells, LSH
+    multi-probe buckets) but must reach each member through at most
+    one of them, so no pair is scored twice.  Memory per task is the
+    :func:`topk` bound for one key's probes × members.
+
+    IVF keys probes by :func:`probe_cells` and members by their cell;
+    sign-random-projection LSH keys them by the sign-bit bucket plus
+    its Hamming flips (queries.q_ann_lsh_bucketed)."""
+    cand = probes.groupBy("key").cogroup(members.groupBy("key")).applyInPandas(
+        lambda pl, mr: _key_topk(pl, mr, k),
+        schema="query_id long, neighbor_id long, sim6 double")
+    return rerank(cand, k)
+
+
+# The Arrow tasks reach the kernels through private module-level
+# functions (_key_topk, _cell_drops): a task closure pickles the values
+# of the globals it reads, so a public name rebound at run time (e.g.
+# wrapped by a tracer) would travel with the task; a module-level
+# function is pickled by name and resolves the kernels in the worker.
+def _key_topk(pl, mr, k: int):
+    """keyed_topk's task: one key's probes × members -> topk frame."""
+    import numpy as np
+    import pandas as pd
+
+    if not len(pl) or not len(mr):
+        return pd.DataFrame({"query_id": [], "neighbor_id": [], "sim6": []}) \
+            .astype({"query_id": "int64", "neighbor_id": "int64", "sim6": "float64"})
+    return topk(cosine(np.stack(pl["qa"].to_numpy()), np.stack(mr["eb"].to_numpy())),
+                pl["query_id"].to_numpy(), mr["neighbor_id"].to_numpy(), k)
+
+
+def ivf_topk_blocks(assigned: DataFrame, centroids: list[list[float]],
+                    probes: DataFrame, k: int = 5, nprobe: int = 4,
+                    id_col: str = "vec_id", emb_col: str = "embedding") -> DataFrame:
+    """IVF search, the FULL-SCALE form (VERDICT r3 #2/#4): probes fan
+    out to their nprobe nearest cells (one small Arrow stage), then
+    :func:`keyed_topk` scores each cell's probes against its members
+    with one BLAS gemm.  No per-pair SQL lambdas: at n=10^6,
+    cells=10^3, nprobe=10 the expression form would interpret ~10^9
+    lambda steps; this does one 10^3 x 10^3 x dim gemm per cell.
+
+    Equivalent to ivf_topk on the same assignment (tested); returns
+    (query_id, neighbor_id, rank) ranked by (cosine rounded 6,
+    neighbor_id)."""
+    px = probe_cells(probes, centroids, nprobe, id_col, emb_col).select(
+        F.col(id_col).alias("query_id"), F.col(emb_col).alias("qa"), F.col("cell").alias("key"))
+    mem = assigned.select(
+        F.col(id_col).alias("neighbor_id"), F.col(emb_col).alias("eb"), F.col("cell").alias("key"))
+    return keyed_topk(px, mem, k)
+
+
+def _cell_drops(pdf, threshold: float, id_col: str, emb_col: str):
+    """The SemDeDup gram kernel for one cell: -> (the cell's rows sorted
+    by id, dropped mask), where a vector is dropped when some lower-id vector of the
+    cell has cosine (rounded to 6) >= threshold.  Memory: two cell ×
+    cell float64 arrays plus the cell's vectors."""
+    import numpy as np
+
+    pdf = pdf.sort_values(id_col, ignore_index=True)
+    v = np.stack(pdf[emb_col].to_numpy())
+    sim = np.round(cosine(v, v), 6)
+    # dropped[j] = any i<j with sim >= tau  (keep-lowest-id policy)
+    return pdf, np.triu(sim >= threshold, k=1).any(axis=0)
+
+
 def semantic_dedup_cells(assigned: DataFrame, threshold: float,
                          id_col: str = "vec_id", emb_col: str = "embedding") -> DataFrame:
     """SemDeDup, the FULL-SCALE form: within each cell a vector is
     dropped when some lower-id vector in the same cell has cosine >=
-    threshold — same policy as the oracle-gated q_semantic_dedup, but
-    the within-cell pair join is ONE normalized gram matrix per cell
-    (applyInPandas, BLAS) instead of n^2/cells SQL lambda evaluations.
-    Cells are the partition unit, exactly how the 100 TB job buckets.
+    threshold — same policy as the oracle SQL_SEMANTIC_DEDUP, but the
+    within-cell pair join is ONE gram matrix per cell (applyInPandas,
+    BLAS) instead of n^2/cells SQL lambda evaluations.  Cells are the
+    partition unit, exactly how the 100 TB job buckets.
 
     Returns (vec_id, cell, kept int)."""
     import pandas as pd
-    import numpy as np
 
     def dedup(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col, ignore_index=True)
-        v = np.stack(pdf[emb_col].to_numpy()).astype(np.float64)
-        vn = v / np.linalg.norm(v, axis=1, keepdims=True)
-        sim = np.round(vn @ vn.T, 6)
-        # dropped[j] = any i<j with sim >= tau  (keep-lowest-id policy)
-        dropped = np.triu(sim >= threshold, k=1).any(axis=0)
+        pdf, dropped = _cell_drops(pdf, threshold, id_col, emb_col)
         return pd.DataFrame({
             id_col: pdf[id_col].to_numpy(),
             "cell": pdf["cell"].to_numpy(),
@@ -281,16 +345,11 @@ def semantic_dedup_multiprobe(emb: DataFrame, centroids: list[list[float]],
     single-cell cost.  Returns (vec_id, cell, kept) with cell = the
     PRIMARY (nearest) cell, like semantic_dedup_cells."""
     import pandas as pd
-    import numpy as np
 
     multi = probe_cells(emb, centroids, nprobe, id_col, emb_col)
 
     def dropped_in_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col, ignore_index=True)
-        v = np.stack(pdf[emb_col].to_numpy()).astype(np.float64)
-        vn = v / np.linalg.norm(v, axis=1, keepdims=True)
-        sim = np.round(vn @ vn.T, 6)
-        dropped = np.triu(sim >= threshold, k=1).any(axis=0)
+        pdf, dropped = _cell_drops(pdf, threshold, id_col, emb_col)
         return pd.DataFrame({id_col: pdf[id_col].to_numpy()[dropped]})
 
     dropped = (
@@ -330,9 +389,4 @@ def ivf_topk(assigned: DataFrame, centroids: list[list[float]],
         .withColumn("sim6", F.round(
             F.expr(dot) / (F.expr(norm.format("qa")) * F.expr(norm.format("eb"))), 6))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim6"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"))
-    )
+    return rerank(cand, k)

@@ -174,7 +174,7 @@ def run(
             .select(F.col("a").alias("u"), F.col("b").alias("v"))
         )
         edges = near_edges.unionByName(eedges)
-        return connected_components(edges, cfg)
+        return connected_components(edges)
 
     clusters = stage("clusters", build_clusters)
     members = stage("members", lambda: rank_members(clusters, fp))

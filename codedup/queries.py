@@ -716,18 +716,19 @@ def q_ann_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Ranking by (cosine rounded to 6, vec_id) so cross-engine last-ulp
     noise cannot flip ranks; output carries ids + rank only (no floats)
-    for exact comparison.  Per-neighbor dot products and norms are
+    for exact comparison.  Every block pair runs the shared kernel
+    (ann.cosine, ann.topk); per-neighbor dot products and norms are
     computed identically to the unblocked version (blocking splits rows,
     never the dim axis), so values are bit-identical."""
-    import pandas as pd
-
+    from codedup.ann import rerank
     from codedup.operators import block_pairs
 
     emb = _t(spark, sf_dir, "embeddings")
     pairs = block_pairs(_pack_blocks, emb.filter(F.col("vec_id") % 50 == 0), emb)
 
     def gen(it):
-        import numpy as np
+        # imported in the task, not captured: see the note on ann._key_topk
+        from codedup.ann import cosine, topk
 
         for pdf in it:
             for qids_l, qmat_b, nids_l, nmat_b in zip(
@@ -735,27 +736,10 @@ def q_ann_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             ):
                 qids, q = _unpack(qids_l, qmat_b)
                 nids, m = _unpack(nids_l, nmat_b)
-                qn = np.sqrt((q * q).sum(axis=1))
-                nn = np.sqrt((m * m).sum(axis=1))
-                sims = np.round((q @ m.T) / (qn[:, None] * nn[None, :]), 6)
-                out_q, out_n, out_s = [], [], []
-                for row, qid in zip(sims, qids):
-                    mask = nids != qid
-                    cids, csims = nids[mask], row[mask]
-                    order = np.lexsort((cids, -csims))[:5]
-                    out_q.extend([int(qid)] * len(order))
-                    out_n.extend(cids[order].tolist())
-                    out_s.extend(csims[order].tolist())
-                yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n,
-                                    "sim6": out_s})
+                yield topk(cosine(q, m), qids, nids, 5)
 
-    partial = pairs.mapInPandas(gen, schema="query_id long, neighbor_id long, sim6 double")
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim6"), F.asc("neighbor_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"))
-    )
+    return rerank(
+        pairs.mapInPandas(gen, schema="query_id long, neighbor_id long, sim6 double"), 5)
 
 
 SQL_ANN_TOPK_COSINE = """
@@ -788,9 +772,9 @@ def q_embedding_similar_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-blocks (one shuffle, no driver collect); the NB*(NB+1)/2
     unordered block pairs crossJoin (operators.block_pairs: blk_x <=
     blk_y halves the work, NB derived from the cores and the input);
-    each task computes one BLAS matmul and emits qualifying (min, max)
-    id pairs.  Every unordered doc pair lives in exactly one unordered
-    block pair, so no dedup is needed."""
+    each task computes one ann.cosine block and emits qualifying
+    (min, max) id pairs.  Every unordered doc pair lives in exactly one
+    unordered block pair, so no dedup is needed."""
     import pandas as pd
 
     from codedup.operators import block_pairs
@@ -800,6 +784,8 @@ def q_embedding_similar_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     def gen(it):
         import numpy as np
 
+        from codedup.ann import cosine
+
         for pdf in it:
             for xblk, xids_l, xmat_b, yblk, yids_l, ymat_b in zip(
                 pdf["xblk"], pdf["xids"], pdf["xmat"],
@@ -807,12 +793,9 @@ def q_embedding_similar_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             ):
                 xids, xm = _unpack(xids_l, xmat_b)
                 yids, ym = _unpack(yids_l, ymat_b)
-                xn = np.sqrt((xm * xm).sum(axis=1))
-                yn = np.sqrt((ym * ym).sum(axis=1))
-                sims = (xm @ ym.T) / (xn[:, None] * yn[None, :])
                 # within a block compare each unordered pair once;
                 # across blocks every (i, j) is a distinct doc pair
-                ok = sims >= 0.45
+                ok = cosine(xm, ym) >= 0.45
                 if xblk == yblk:
                     ok &= xids[:, None] < yids[None, :]
                 ai, bi = np.nonzero(ok)
@@ -888,7 +871,7 @@ def _doc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         return cached
     pairs = q_dedup_minhash_lsh(spark, sf_dir)
     edges = pairs.select(F.col("a").alias("u"), F.col("b").alias("v"))
-    cc = connected_components(edges, DedupConfig())
+    cc = connected_components(edges)
     relabel = cc.groupBy("cluster_id").agg(F.min("file_id").alias("root_doc"))
     out = (
         cc.join(relabel, "cluster_id")
@@ -1301,7 +1284,6 @@ FROM h GROUP BY 1
 # classifier (feedback-model analog, feedback.py:176-236)
 # ---------------------------------------------------------------------------
 
-ANN_PLANES = DEFAULT_ANN.n_planes      # -> 2^n_planes buckets
 ANN_DIM = 64                           # test-table embedding dim
 ANN_PROBE_HAMMING = DEFAULT_ANN.probe_hamming
 
@@ -1335,35 +1317,33 @@ def q_ann_lsh_bucketed(spark: SparkSession, sf_dir: str,
     by (cosine rounded to 6, vec_id).  This is the 10^12-row path —
     candidate count per probe is ~n/2^planes * (1+planes) instead of n.
 
-    Multi-probe is expressed as an EQUI-join: each probe row explodes
-    into its own bucket plus the ``ANN_PLANES`` single-bit flips (every
-    bucket at Hamming distance exactly 1), and joins candidates on
-    bucket equality.  Each (query, neighbor) pair matches through at
-    most one exploded value (the neighbor has ONE bucket; the probe's
-    1+planes values are pairwise distinct), so no dedup is needed — and
-    Catalyst plans a hash join that actually prunes, instead of the
+    Multi-probe is a KEYED search (ann.keyed_topk, the cogroup IVF
+    uses): each probe row explodes into its own bucket plus its
+    single-bit flips (every bucket at Hamming distance exactly 1), and
+    meets the members whose bucket equals one of those keys.  Each
+    (query, neighbor) pair matches through at most one exploded value
+    (the neighbor has ONE bucket; the probe's 1+planes values are
+    pairwise distinct), so no dedup is needed — and Catalyst plans a
+    keyed cogroup that actually prunes, instead of the
     BroadcastNestedLoopJoin a ``bit_count(xor) <= 1`` theta-join forces
-    (asserted in tests/test_explain_purity.py).  Exactly reproduced by
-    the oracle (identical literal hyperplanes)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    bcol = F.expr(_bucket_expr("embedding", base=0, n_planes=params.n_planes)).cast("long")
-    norm = "sqrt(aggregate(transform({0}, x -> x * x), 0D, (acc, v) -> acc + v))"
-    # norms are per ROW, not per pair: compute them once on each side
-    # before the join instead of re-deriving them for every candidate
-    # (guide §2.3 — shed work before it multiplies)
-    all_b = emb.select(F.col("vec_id").alias("neighbor_id"),
-                       F.col("embedding").alias("eb"), bcol.alias("nb"),
-                       F.expr(norm.format("embedding")).alias("en"))
-    probes = (
-        emb.filter(F.col("vec_id") % 50 == 0)
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qa"),
-                bcol.alias("qb"),
-                F.expr(norm.format("embedding")).alias("qn"))
-    )
+    (asserted in tests/test_explain_purity.py).  The buckets come from
+    the identical literal hyperplanes as the oracle, and the cosine
+    from the shared ann kernel."""
+    from codedup.ann import keyed_topk
+
     if params.probe_hamming not in (0, 1, 2):
         raise ValueError("probe_hamming > 2 not implemented (candidate "
                          "volume grows as C(planes, r) — explode further "
                          "flip combinations if a larger radius is needed)")
+    emb = _t(spark, sf_dir, "embeddings")
+    bcol = F.expr(_bucket_expr("embedding", base=0, n_planes=params.n_planes)).cast("long")
+    members = emb.select(F.col("vec_id").alias("neighbor_id"),
+                         F.col("embedding").alias("eb"), bcol.alias("key"))
+    probes = (
+        emb.filter(F.col("vec_id") % 50 == 0)
+        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qa"),
+                bcol.alias("qb"))
+    )
     flips = []
     if params.probe_hamming >= 1:
         flips += [F.col("qb").bitwiseXOR(F.lit(1 << j))
@@ -1373,65 +1353,9 @@ def q_ann_lsh_bucketed(spark: SparkSession, sf_dir: str,
                   for j in range(params.n_planes) for k in range(j + 1, params.n_planes)]
     # all 1 + p + C(p,2) exploded values are pairwise distinct, so each
     # (query, neighbor) pair still matches through at most one value
-    probe_buckets = F.array(F.col("qb"), *flips)
-    probes_x = probes.withColumn("pb", F.explode(probe_buckets)).drop("qb")
-
-    # Bucket-cogrouped Arrow scoring (guide §4.2): the unrolled 64-term
-    # SQL dot chain evaluated per PAIR materialized every candidate row
-    # with both 64-float arrays (~460 MB of row copies + ~85 ns/term
-    # expression eval = ~3.5 s at sf1.0 for 900k candidates).  The
-    # cogroup ships each bucket's probes and members through Arrow ONCE
-    # (~6 MB total) and computes the dot in numpy with the EXACT fold
-    # semantics of the old chain — each product is a float32 multiply,
-    # cast to double, accumulated strictly left-to-right in dimension
-    # order — so the raw dot is bit-identical; the division by the
-    # relational norms and round(..., 6) stay in Spark SQL unchanged.
-    # Bucket equality is still the join key (this is the same LSH
-    # pruning the hash-join form had, as the plan test asserts).
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    def score(key, probes_pdf: pd.DataFrame, cands_pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        if len(probes_pdf) == 0 or len(cands_pdf) == 0:
-            return pd.DataFrame({"query_id": pd.Series([], dtype="int64"),
-                                 "neighbor_id": pd.Series([], dtype="int64"),
-                                 "dot": pd.Series([], dtype="float64")})
-        qids = probes_pdf["query_id"].to_numpy()
-        nids = cands_pdf["neighbor_id"].to_numpy()
-        qmat = np.stack(probes_pdf["qa"].to_numpy()).astype(np.float32, copy=False)
-        cmat = np.stack(cands_pdf["eb"].to_numpy()).astype(np.float32, copy=False)
-        prod = qmat[:, None, :] * cmat[None, :, :]        # float32 products
-        acc = prod[:, :, 0].astype(np.float64)
-        for i in range(1, prod.shape[2]):                 # left-to-right fold
-            acc += prod[:, :, i]
-        qi, ni = np.nonzero(qids[:, None] != nids[None, :])
-        return pd.DataFrame({"query_id": qids[qi], "neighbor_id": nids[ni],
-                             "dot": acc[qi, ni]})
-
-    dot_schema = T.StructType([
-        T.StructField("query_id", T.LongType()),
-        T.StructField("neighbor_id", T.LongType()),
-        T.StructField("dot", T.DoubleType()),
-    ])
-    dots = (
-        probes_x.select("query_id", "qa", "pb").groupBy("pb")
-        .cogroup(all_b.select("neighbor_id", "eb", "nb").groupBy("nb"))
-        .applyInPandas(score, schema=dot_schema)
-    )
-    cand = (
-        dots.join(F.broadcast(probes.select("query_id", "qn")), "query_id")
-        .join(F.broadcast(all_b.select("neighbor_id", "en")), "neighbor_id")
-        .withColumn("sim6", F.round(F.col("dot") / (F.col("qn") * F.col("en")), 6))
-        .select("query_id", "neighbor_id", "sim6")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim6"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"))
-    )
+    probes_x = probes.select("query_id", "qa",
+                             F.explode(F.array(F.col("qb"), *flips)).alias("key"))
+    return keyed_topk(probes_x, members, 5)
 
 
 def _sql_ann_lsh() -> str:
@@ -2459,10 +2383,11 @@ def dsir_scores(docs: DataFrame, is_target,
     with a (lang, repo)-derived target sample through this same path.
 
     ``portable_hash=True`` buckets features with the md5-60bit hash the
-    DuckDB oracle can reproduce (the catalog path); ``False`` swaps in
-    JVM-native xxhash64 — measured ~4.7x faster on the bucket stage
-    with identical structure (bucketing only needs stability, not
-    cross-engine portability), so the tier path uses it."""
+    DuckDB oracle can reproduce (the catalog path, an Arrow kernel);
+    ``False`` runs the relational form with JVM-native
+    ``pmod(xxhash64(f), buckets)`` — bucketing only needs stability,
+    not cross-engine portability.  ``arrow=True`` is the tier path: a
+    crc32/splitmix64 Arrow kernel (see _dsir_bucket_counts_arrow)."""
     spark = docs.sparkSession
     b = buckets
     docs = docs.withColumn("_tgt", is_target)
@@ -2507,12 +2432,10 @@ def dsir_scores(docs: DataFrame, is_target,
             docs.repartition(spark.sparkContext.defaultParallelism)
             .select("doc_id", "_tgt", F.expr(feats).alias("fs"))
         )
-        bucket = (f"CAST(conv(substring(md5(f), 1, 15), 16, 10) AS BIGINT) % {b}"
-                  if portable_hash else f"pmod(xxhash64(f), {b})")
         fb = base.select(
             "doc_id", "_tgt", F.explode("fs").alias("f")
         ).select(
-            "doc_id", "_tgt", F.expr(bucket).alias("b"),
+            "doc_id", "_tgt", F.expr(f"pmod(xxhash64(f), {b})").alias("b"),
         )
         tgt = fb.filter(F.col("_tgt")).groupBy("b").agg(F.count("*").alias("tc"))
         # doc_b feeds three consumers (raw marginals, totals, scores) —
@@ -2954,7 +2877,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str,
     floats, value-exact against the DuckDB oracle.
 
     r4: executes through the full-scale form — argmin assignment +
-    one normalized gram per cell (semantic_dedup_cells) — proven
+    one ann.cosine gram per cell (semantic_dedup_cells) — proven
     equivalent to the within-cell SQL pair join at this tier
     (tests/test_ann_scale_path.py); the oracle keeps the explicit
     relational shape."""

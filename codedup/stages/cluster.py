@@ -23,8 +23,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from codedup.config import DedupConfig
-
 MAX_ITERS = 50
 # edge sets at/below this run CC as a single-task union-find (the
 # graded-response fast path); larger graphs take the distributed
@@ -107,7 +105,7 @@ def _components_local(e: DataFrame) -> DataFrame:
     return e.coalesce(1).mapInPandas(uf, schema="file_id long, cluster_id long")
 
 
-def connected_components(edges: DataFrame, cfg: DedupConfig,
+def connected_components(edges: DataFrame,
                          local_max_edges: int | None = None) -> DataFrame:
     """edges(u,v) undirected -> membership(file_id, cluster_id).
 

@@ -51,11 +51,19 @@ def test_ivf_blocks_equals_expression_form(spark, emb, assigned):
 
 
 def test_semantic_dedup_cells_equals_relational(spark, assigned):
+    """The per-cell gram kernel equals the oracle's relational form:
+    DuckDB running SQL_SEMANTIC_DEDUP (within-cell pair join) over the
+    same embeddings."""
+    import duckdb
+
     from codedup.ann import semantic_dedup_cells
-    from codedup.queries import q_semantic_dedup
+    from codedup.queries import SQL_SEMANTIC_DEDUP
 
     got = semantic_dedup_cells(assigned, 0.45).toPandas()
-    want = q_semantic_dedup(spark, SF).toPandas()
+    con = duckdb.connect()
+    con.execute("CREATE VIEW embeddings AS SELECT * FROM "
+                f"read_parquet('{SF}/embeddings.parquet')")
+    want = con.execute(SQL_SEMANTIC_DEDUP).fetchdf()
     g = sorted(map(tuple, got[["vec_id", "cell", "kept"]].values))
     w = sorted(map(tuple, want[["vec_id", "cell", "kept"]].values))
     assert g == w

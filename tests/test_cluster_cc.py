@@ -4,7 +4,6 @@ union-find oracle (SURVEY §5.2.2), plus stable-id properties."""
 import numpy as np
 from pyspark.sql import functions as F
 
-from codedup.config import DedupConfig
 from codedup.stages.cluster import connected_components
 
 
@@ -25,10 +24,9 @@ def _uf_components(edges: list[tuple[int, int]]) -> dict[int, int]:
     return {k: find(k) for k in parent}
 
 
-def _check(spark, edges: list[tuple[int, int]], cfg=None):
-    cfg = cfg or DedupConfig()
+def _check(spark, edges: list[tuple[int, int]]):
     df = spark.createDataFrame(edges, "u long, v long")
-    got = {r["file_id"]: r["cluster_id"] for r in connected_components(df, cfg).collect()}
+    got = {r["file_id"]: r["cluster_id"] for r in connected_components(df).collect()}
     exp = _uf_components(edges)
     assert got == exp, f"expected {exp}, got {got}"
 
@@ -60,7 +58,7 @@ def test_random_graph_vs_union_find(spark):
 
 def test_cluster_id_is_component_min(spark):
     df = spark.createDataFrame([(5, 9), (9, 3), (20, 21)], "u long, v long")
-    got = connected_components(df, DedupConfig()).toPandas()
+    got = connected_components(df).toPandas()
     c1 = got[got.file_id.isin([3, 5, 9])]
     assert (c1.cluster_id == 3).all()
     c2 = got[got.file_id.isin([20, 21])]
@@ -70,9 +68,9 @@ def test_cluster_id_is_component_min(spark):
 def test_partitioning_invariance(spark):
     edges = [(i, i + 1) for i in range(1, 40)] + [(100 + i, 100 + i + 1) for i in range(0, 20, 2)]
     df = spark.createDataFrame(edges, "u long, v long")
-    a = connected_components(df, DedupConfig()).toPandas().sort_values("file_id", ignore_index=True)
+    a = connected_components(df).toPandas().sort_values("file_id", ignore_index=True)
     b = (
-        connected_components(df.repartition(13), DedupConfig())
+        connected_components(df.repartition(13))
         .toPandas()
         .sort_values("file_id", ignore_index=True)
     )
@@ -92,9 +90,9 @@ def test_local_fast_path_equals_star_rounds(spark):
     nodes = rng.integers(-300, 300, size=(400, 2)).tolist()
     edges = [(int(u), int(v)) for u, v in nodes if u != v]
     df = spark.createDataFrame(edges, "u long, v long")
-    fast = connected_components(df, DedupConfig()) \
+    fast = connected_components(df) \
         .toPandas().sort_values("file_id", ignore_index=True)
-    star = connected_components(df, DedupConfig(), local_max_edges=0) \
+    star = connected_components(df, local_max_edges=0) \
         .toPandas().sort_values("file_id", ignore_index=True)
     assert fast.equals(star)
     # and both match the reference union-find

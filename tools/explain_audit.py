@@ -129,9 +129,9 @@ def main() -> int:
         sections.append((name, plan, notes))
         return bnlj_ok and m_ok
 
-    # round-6: candidate scoring moved into a bucket-cogrouped Arrow
-    # kernel; bucket equality is still the pruning key and the norm
-    # joins stay broadcast hash joins
+    # LSH scoring is the keyed cogroup search IVF also runs
+    # (ann.keyed_topk): bucket equality is the cogroup key, so it still
+    # prunes, and no join is left in the plan
     ok &= audit_cogrouped("query: ann_lsh_bucketed (multi-probe bucket cogroup)",
                           QUERIES["ann_lsh_bucketed"](spark, SF),
                           "FlatMapCoGroupsInPandas")

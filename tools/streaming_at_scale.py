@@ -146,7 +146,7 @@ def main() -> int:
         inc.pairs().filter(F.col("kind") != "fault")
         .select(F.col("a").alias("u"), F.col("b").alias("v"))
     )
-    stream_cc = connected_components(stream_edges, cfg).localCheckpoint(eager=True)
+    stream_cc = connected_components(stream_edges).localCheckpoint(eager=True)
 
     # COUNTING-based co-membership compare (same identity as
     # tools/recall_at_scale.py): |pairs| = sum C(n,2) over cluster

@@ -113,9 +113,10 @@ def shingle_hashes(text: str, k: int, normalize_ws: bool = True,
         import hashlib
         import re
 
-        # ASCII whitespace class only — Java regex \s (Spark split) and
-        # RE2 \s (DuckDB) are ASCII-only, while Python str.split() also
-        # eats Unicode whitespace; pin the class so all three agree
+        # ASCII whitespace class of Java regex \s (Spark split), vertical
+        # tab included; Python str.split() also eats Unicode whitespace
+        # and RE2 \s (DuckDB) omits \x0b, so the oracles spell out this
+        # same class (queries._WS)
         toks = [t for t in re.split("[ \\t\\n\\r\\f\\x0b]+", text) if t]
         if not toks:
             return np.empty(0, dtype=U64)

@@ -16,18 +16,30 @@ value-hash compare robust:
 
 from __future__ import annotations
 
+import functools
+import hashlib
+import zlib
 from collections.abc import Callable
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from codedup.config import DedupConfig
+from codedup.kernels import _splitmix64
 
 # Config used by the document-dedup queries: raw text (no ws
 # normalization — the SQL oracle sees raw substrings), char 8-grams.
 DOCS_CFG = DedupConfig(shingle_k=8, normalize_ws=False, jaccard_threshold=0.80)
 NGRAM_K = 8
 JACCARD_MIN_PPM = 800_000  # 0.80 as ppm
+
+# The token separator every engine shares: Java's \s (Spark split) and
+# the Python kernels split on these six ASCII characters, but RE2's \s
+# (DuckDB) leaves out the vertical tab, so the oracles spell the class
+# out.  The same text is a valid Python re and RE2 pattern.
+_WS = "[ \\t\\n\\r\\f\\x0b]+"
+_SQL_TOKENS = f"list_filter(string_split_regex(text, '{_WS}'), x -> x <> '')"
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -218,9 +230,9 @@ def q_doc_rarest_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_DOC_RAREST_TERMS = """
+SQL_DOC_RAREST_TERMS = f"""
 WITH toks AS (
-  SELECT DISTINCT doc_id, unnest(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS tok
+  SELECT DISTINCT doc_id, unnest({_SQL_TOKENS}) AS tok
   FROM documents
 ), dfs AS (
   SELECT tok, count(*) AS df FROM toks GROUP BY 1
@@ -374,9 +386,9 @@ def q_dedup_minhash_lsh_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _minhash_pipeline_pairs(spark, sf_dir, DOCS_TOKEN_CFG)
 
 
-SQL_DEDUP_MINHASH_LSH_TOKENS = """
+SQL_DEDUP_MINHASH_LSH_TOKENS = f"""
 WITH toks AS (
-  SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS tk
+  SELECT doc_id, {_SQL_TOKENS} AS tk
   FROM documents
 ), grams AS (
   -- zero-token docs keep one sentinel gram '' (array_to_string of the
@@ -521,9 +533,9 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_TEXT_STATS = """
+SQL_TEXT_STATS = f"""
 WITH toks AS (
-  SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS tk
+  SELECT doc_id, {_SQL_TOKENS} AS tk
   FROM documents
 )
 SELECT doc_id,
@@ -541,10 +553,11 @@ FROM toks
 # (RE2 in DuckDB has no lookahead; Java and RE2 agree on this subset).
 # The SQL-literal form differs per engine: Spark SQL string literals
 # process backslash escapes (regex \s must be written \\s), DuckDB's do
-# not (\s stays \s); apostrophes double in both.
-_BPE_CORE = "'s|'t|'re|'ve|'m|'ll|'d| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9{WS}]+|{WS}+"
+# not; RE2's \s also needs the vertical tab added (see _WS).
+# Apostrophes double in both.
+_BPE_CORE = "'s|'t|'re|'ve|'m|'ll|'d| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9{WS}]+|[{WS}]+"
 _BPE_SPARK_LIT = _BPE_CORE.format(WS="\\\\s").replace("'", "''")
-_BPE_DUCK_LIT = _BPE_CORE.format(WS="\\s").replace("'", "''")
+_BPE_DUCK_LIT = _BPE_CORE.format(WS="\\s\\x0b").replace("'", "''")
 
 
 def q_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -643,11 +656,11 @@ def q_token_count_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_TOKEN_COUNT_BY_LANG = """
+SQL_TOKEN_COUNT_BY_LANG = f"""
 SELECT lang,
        count(*) AS n_docs,
-       sum(len(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')))::BIGINT AS total_tokens,
-       max(len(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')))::BIGINT AS max_tokens
+       sum(len({_SQL_TOKENS}))::BIGINT AS total_tokens,
+       max(len({_SQL_TOKENS}))::BIGINT AS max_tokens
 FROM documents
 GROUP BY 1
 """
@@ -674,7 +687,6 @@ def _pack_blocks(emb: DataFrame, n_blocks: int) -> DataFrame:
     the packing is deterministic across runs and partitionings.  A block
     holds 8 bytes per float of its 1/n_blocks share of the rows; each
     crossJoin task then does one BLAS matmul per block pair."""
-    import numpy as np
     import pandas as pd
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -695,8 +707,6 @@ def _pack_blocks(emb: DataFrame, n_blocks: int) -> DataFrame:
 
 
 def _unpack(ids: list, mat_bytes: bytes):
-    import numpy as np
-
     ids_arr = np.asarray(ids, dtype=np.int64)
     m = np.frombuffer(mat_bytes, dtype=np.float64).reshape(len(ids_arr), -1)
     return ids_arr, m
@@ -782,8 +792,6 @@ def q_embedding_similar_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = block_pairs(_pack_blocks, _t(spark, sf_dir, "embeddings"))
 
     def gen(it):
-        import numpy as np
-
         from codedup.ann import cosine
 
         for pdf in it:
@@ -831,15 +839,19 @@ _SQL_EDGES = f"""
          LATERAL (SELECT unnest(generate_series(1, greatest(length(text)-{NGRAM_K - 1}, 1))) AS i) t
   ), sizes AS (
     SELECT doc_id, count(*) AS n FROM sh GROUP BY 1
-  ), edges AS (
-    SELECT x.doc_id AS a, y.doc_id AS b
+  ), inter AS (
+    SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS c
     FROM sh x JOIN sh y USING (g)
-    JOIN sizes sa ON sa.doc_id = x.doc_id
-    JOIN sizes sb ON sb.doc_id = y.doc_id
     WHERE x.doc_id < y.doc_id
-    GROUP BY 1, 2, sa.n, sb.n
-    HAVING (count(*) * 1000000) // (sa.n + sb.n - count(*)) >= {JACCARD_MIN_PPM}
-  ), ue AS (
+    GROUP BY 1, 2
+  ), edges AS MATERIALIZED (
+    -- materialized (with ue) so the recursion reads the edge list
+    -- instead of re-evaluating the shingle self-join per step
+    SELECT a, b FROM inter
+    JOIN sizes sa ON sa.doc_id = a
+    JOIN sizes sb ON sb.doc_id = b
+    WHERE (c * 1000000) // (sa.n + sb.n - c) >= {JACCARD_MIN_PPM}
+  ), ue AS MATERIALIZED (
     SELECT a, b FROM edges UNION SELECT b AS a, a AS b FROM edges
   ), closure AS (
     -- transitive closure by recursive CTE (small graphs; the Spark side
@@ -973,7 +985,7 @@ def _sql_simhash_tokens() -> str:
     return f"""
 WITH toks AS (
   SELECT DISTINCT doc_id, tok FROM (
-    SELECT doc_id, unnest(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS tok
+    SELECT doc_id, unnest({_SQL_TOKENS}) AS tok
     FROM documents
   )
 ), h AS (
@@ -1023,7 +1035,7 @@ def _sql_lang_id() -> str:
     for lang, words in _STOPSETS.items():
         arr = ", ".join(f"'{w}'" for w in words)
         hits.append(
-            f"len(list_filter(list_filter(string_split_regex(text, '\\s+'), x -> x <> ''),"
+            f"len(list_filter({_SQL_TOKENS},"
             f" x -> list_contains([{arr}], lower(x))))::BIGINT AS {lang}_hits"
         )
     return f"""
@@ -1110,9 +1122,6 @@ def _winnowing_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
     k_, w_ = NGRAM_K, WINNOW_W
 
     def batches(it):
-        import hashlib
-
-        import numpy as np
         import pandas as pd
 
         memo: dict[str, int] = {}
@@ -1291,8 +1300,6 @@ ANN_PROBE_HAMMING = DEFAULT_ANN.probe_hamming
 def _ann_planes(n_planes: int = DEFAULT_ANN.n_planes) -> list[list[float]]:
     """Deterministic random hyperplanes, shared verbatim by the Spark
     implementation and the generated oracle SQL."""
-    import numpy as np
-
     rng = np.random.default_rng(1234)
     planes = rng.standard_normal((n_planes, ANN_DIM))
     return [[round(float(x), 6) for x in p] for p in planes]
@@ -1576,7 +1583,7 @@ def q_doc_category_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SQL_DOC_CATEGORY_RULES = f"""
 WITH toks AS (
-  SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS tk
+  SELECT doc_id, {_SQL_TOKENS} AS tk
   FROM documents
 ), stats AS (
   SELECT doc_id,
@@ -1943,12 +1950,12 @@ def q_doc_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_DOC_REPETITION_STATS = """
+SQL_DOC_REPETITION_STATS = f"""
 WITH base AS (
   SELECT doc_id,
          list_filter(list_transform(string_split_regex(text, '\\n'), x -> trim(x)),
                      x -> x <> '') AS ln,
-         list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS tk
+         {_SQL_TOKENS} AS tk
   FROM documents
 ), head AS (
   SELECT doc_id, len(ln)::BIGINT AS n_lines, len(tk)::BIGINT AS n_tokens,
@@ -2084,7 +2091,7 @@ WITH base AS (
                       i -> array_to_string(list_slice(tk, i, i + {_DECON_K - 1}), ' ')))
                ELSE []::VARCHAR[] END) AS gr
   FROM (SELECT doc_id, source,
-               list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS tk
+               {_SQL_TOKENS} AS tk
         FROM documents)
 ), ev AS (
   SELECT DISTINCT unnest(gr) AS gram FROM base WHERE source = '{_DECON_EVAL_SOURCE}'
@@ -2177,7 +2184,7 @@ def _sql_gopher_quality_filter() -> str:
     return f"""
 WITH base AS (
   SELECT doc_id,
-         list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS tk
+         {_SQL_TOKENS} AS tk
   FROM documents
 ), sig AS (
   SELECT doc_id,
@@ -2204,8 +2211,8 @@ SQL_GOPHER_QUALITY_FILTER = _sql_gopher_quality_filter()
 
 # DSIR target-domain sample: docs from this source play the role of the
 # curated high-quality corpus; everything else is the raw pool being
-# scored.  Bucket count is small on purpose — the weight table must
-# broadcast (it is O(buckets) regardless of corpus size).
+# scored.  Bucket count is small on purpose — the weight vector is
+# O(buckets) regardless of corpus size, so it is collected, not joined.
 _DSIR_TARGET_SOURCE = "src3"
 _DSIR_BUCKETS = 64
 
@@ -2227,280 +2234,130 @@ def q_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores are exact integer dot products — no float accumulation whose
     summation order could differ between engines.
 
-    Scale shape: one map-only feature expansion, one (doc, bucket)
-    partial-aggregated count shuffle, bucket marginals are O(buckets)
-    rows, and the weight table broadcasts onto the doc-bucket counts —
-    the corpus text itself is never reshuffled.  At 10^12 files the
-    only wide exchange is the (doc_id, bucket) count, which map-side
-    combines to <= buckets rows per doc.  The global sel_rank window
-    runs over the two-long (score, id) score table; at 10^12 rows the
-    production form replaces it with a top-k threshold (distributed
-    quantile of score_micro, then a scan-side filter) — kept as an
-    exact global rank here because the oracle pins it."""
+    Scale shape: one Arrow pass (:func:`dsir_counts`) folds each
+    document into one dense row of ``_DSIR_BUCKETS`` counts, checkpointed
+    once; the text crosses only the round-robin exchange that spreads
+    that pass over the cores.  The bucket marginals are
+    one map-side-combined aggregate of O(buckets) rows, and the weight
+    vector they give is collected (64 longs).  Each raw doc's score
+    is then the dot product of its count row with that vector, so
+    nothing is joined and nothing is exchanged by doc_id.  The global
+    sel_rank window runs over the two-long (score, id) score table; at
+    10^12 rows the production form replaces it with a top-k threshold
+    (distributed quantile of score_micro, then a scan-side filter) —
+    kept as an exact global rank here because the oracle pins it."""
     docs = _t(spark, sf_dir, "documents")
     return dsir_scores(docs, F.col("source") == _DSIR_TARGET_SOURCE)
 
 
-def _dsir_bucket_counts_arrow(docs: DataFrame, buckets: int) -> DataFrame:
-    """One-pass Arrow kernel behind the DSIR tier path: per document,
-    whitespace-tokenize, hash unigrams (crc32 -> splitmix64 mix) and
-    NUMERIC bigrams (adjacent token hashes mixed — bigram strings are
-    never materialized), and emit PRE-AGGREGATED (doc_id, _tgt, b, c)
-    bucket counts: <= buckets rows per doc leave the kernel, so the
-    wide per-feature shuffle of the relational form disappears
-    entirely.  Same architecture as the signature stage
-    (stages/signatures.py): CPU-dense per-row work in one Arrow pass,
-    everything after it relational.  Tokenizer = str.split() (unicode
-    whitespace) vs the oracle path's java \\s+ — identical on ASCII
-    whitespace; the tier path does not claim oracle parity (the
-    catalog query q_dsir_importance stays on the portable SQL form)."""
+@functools.lru_cache(maxsize=1 << 20)
+def _md5_60(feature: str) -> int:
+    return int(hashlib.md5(feature.encode("utf-8", "surrogatepass"))
+               .hexdigest()[:15], 16)
+
+
+def dsir_md5_hash(toks: list[str]) -> np.ndarray:
+    """Portable DSIR feature hash, the one the oracle reproduces: the
+    md5-60bit value (``('0x' || substr(md5(f), 1, 15))::BIGINT``) of
+    every token and every space-joined adjacent-token bigram.  Memoized
+    per distinct feature, at most 2^20 features per worker."""
+    feats = toks + [a + " " + b for a, b in zip(toks, toks[1:])]
+    return np.fromiter(map(_md5_60, feats), dtype=np.uint64, count=len(feats))
+
+
+_BIGRAM_MIX = np.uint64(0x9E3779B97F4A7C15)
+
+
+def dsir_mix_hash(toks: list[str]) -> np.ndarray:
+    """Fast DSIR feature hash for tools/dsir_at_scale.py: crc32 of each
+    token through splitmix64; a bigram mixes its two token hashes, so
+    bigram strings are never built.  Same features as
+    :func:`dsir_md5_hash`, different buckets, no oracle."""
+    h = _splitmix64(np.fromiter(
+        (zlib.crc32(t.encode("utf-8", "surrogatepass")) for t in toks),
+        dtype=np.uint64, count=len(toks)))
+    return np.concatenate([h, _splitmix64(h[:-1] ^ (h[1:] * _BIGRAM_MIX))])
+
+
+def dsir_counts(docs: DataFrame,
+                feature_hash: Callable[[list[str]], np.ndarray]) -> DataFrame:
+    """The DSIR count kernel: one row ``(doc_id, _tgt, counts)`` per
+    document whose ``_tgt`` is not NULL.  ``counts`` has length
+    ``_DSIR_BUCKETS``; ``counts[b]`` is how many of the document's
+    features land in bucket ``b`` (``feature_hash(tokens) %
+    _DSIR_BUCKETS``).  Tokens are the non-empty pieces of ``text``
+    between ``_WS`` runs; an empty or NULL text gets the zero vector.
+
+    Per-task memory: the output batch, Arrow batch rows x
+    ``_DSIR_BUCKETS`` x 8 bytes (10k rows x 64 buckets = 5 MB), plus the
+    md5 memo of at most 2^20 features (:func:`dsir_md5_hash`)."""
     spark = docs.sparkSession
+    buckets = _DSIR_BUCKETS
 
     def batches(it):
-        import zlib
-
-        import numpy as np
-        import pandas as pd
-
-        from codedup.kernels import _splitmix64
-
-        mult = np.uint64(0x9E3779B97F4A7C15)
-        bkt = np.uint64(buckets)
-        for pdf in it:
-            ids, tgts, bs, cs = [], [], [], []
-            for doc_id, tgt, text in zip(pdf["doc_id"], pdf["_tgt"], pdf["text"]):
-                toks = text.split() if isinstance(text, str) else []
-                if not toks:
-                    continue
-                h = np.fromiter(
-                    (zlib.crc32(w.encode("utf-8", "surrogatepass"))
-                     for w in toks),
-                    dtype=np.uint64, count=len(toks))
-                h = _splitmix64(h)
-                if h.size >= 2:
-                    allh = np.concatenate([h, _splitmix64(h[:-1] ^ (h[1:] * mult))])
-                else:
-                    allh = h
-                cnt = np.bincount((allh % bkt).astype(np.int64),
-                                  minlength=buckets)
-                nz = np.nonzero(cnt)[0]
-                ids.append(np.full(nz.size, doc_id, dtype=np.int64))
-                tgts.append(np.repeat(bool(tgt), nz.size))
-                bs.append(nz.astype(np.int64))
-                cs.append(cnt[nz].astype(np.int64))
-            if ids:
-                yield pd.DataFrame({
-                    "doc_id": np.concatenate(ids),
-                    "_tgt": np.concatenate(tgts),
-                    "b": np.concatenate(bs),
-                    "c": np.concatenate(cs),
-                })
-
-    return (
-        docs.filter(F.col("_tgt").isNotNull())
-        .select("doc_id", "_tgt", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .mapInPandas(batches, schema="doc_id long, _tgt boolean, b long, c long")
-    )
-
-
-def _dsir_bucket_counts_md5(docs: DataFrame, buckets: int) -> DataFrame:
-    """Oracle-exact twin of :func:`_dsir_bucket_counts_arrow`: same
-    one-pass pre-aggregated (doc_id, _tgt, b, c) bucket counts, but
-    bucketed with the PORTABLE md5-60bit hash the DuckDB oracle
-    reproduces — tokens from the same ASCII whitespace class as the
-    java/RE2 \\s+ split (the kernels.shingle_hashes token-mode rule),
-    features = tokens + space-joined bigrams, b = md5_60bit(f) %
-    buckets.  Replaces the relational explode of one row per FEATURE
-    (~90/doc) + a corpus-wide (doc, bucket) shuffle with <= buckets
-    pre-aggregated rows per doc, and memoizes the md5 per distinct
-    feature per task (the feature vocabulary is tiny next to the
-    feature stream)."""
-    spark = docs.sparkSession
-
-    def batches(it):
-        import hashlib
         import re
 
-        import numpy as np
         import pandas as pd
 
-        ws = re.compile("[ \\t\\n\\r\\f\\x0b]+")
-        memo: dict[str, int] = {}
-
-        def bkt(f: str) -> int:
-            v = memo.get(f)
-            if v is None:
-                v = int(hashlib.md5(
-                    f.encode("utf-8", "surrogatepass")).hexdigest()[:15],
-                    16) % buckets
-                if len(memo) > (1 << 20):
-                    memo.clear()
-                memo[f] = v
-            return v
-
+        ws = re.compile(_WS)
+        bkt = np.uint64(buckets)
         for pdf in it:
-            ids, tgts, bs, cs = [], [], [], []
-            for doc_id, tgt, text in zip(pdf["doc_id"], pdf["_tgt"], pdf["text"]):
-                toks = [t for t in ws.split(text)] if isinstance(text, str) else []
-                toks = [t for t in toks if t]
-                if not toks:
-                    continue
-                feats = toks if len(toks) < 2 else toks + [
-                    toks[i] + " " + toks[i + 1] for i in range(len(toks) - 1)]
-                cnt = np.bincount(
-                    np.fromiter((bkt(f) for f in feats), dtype=np.int64,
-                                count=len(feats)),
-                    minlength=buckets)
-                nz = np.nonzero(cnt)[0]
-                ids.append(np.full(nz.size, doc_id, dtype=np.int64))
-                tgts.append(np.repeat(bool(tgt), nz.size))
-                bs.append(nz.astype(np.int64))
-                cs.append(cnt[nz].astype(np.int64))
-            if ids:
-                yield pd.DataFrame({
-                    "doc_id": np.concatenate(ids),
-                    "_tgt": np.concatenate(tgts),
-                    "b": np.concatenate(bs),
-                    "c": np.concatenate(cs),
-                })
+            counts = np.zeros((len(pdf), buckets), dtype=np.int64)
+            for row, text in zip(counts, pdf["text"]):
+                if isinstance(text, str):
+                    h = feature_hash([t for t in ws.split(text) if t])
+                    row += np.bincount((h % bkt).astype(np.int64),
+                                       minlength=buckets)
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "_tgt": pdf["_tgt"],
+                                "counts": list(counts)})
 
     return (
         docs.filter(F.col("_tgt").isNotNull())
         .select("doc_id", "_tgt", "text")
+        # the source is often a few dense files; spread the CPU-heavy
+        # tokenize+hash pass over every core
         .repartition(spark.sparkContext.defaultParallelism)
-        .mapInPandas(batches, schema="doc_id long, _tgt boolean, b long, c long")
+        .mapInPandas(batches,
+                     schema="doc_id long, _tgt boolean, counts array<long>")
     )
 
 
 def dsir_scores(docs: DataFrame, is_target,
-                buckets: int = _DSIR_BUCKETS,
-                portable_hash: bool = True,
-                arrow: bool = False) -> DataFrame:
+                feature_hash: Callable[[list[str]], np.ndarray] = dsir_md5_hash,
+                ) -> DataFrame:
     """Core of :func:`q_dsir_importance`, reusable over any table with
     (doc_id, text) and a boolean target-membership expression — the
     tier harness (tools/dsir_at_scale.py) scores source-code corpora
-    with a (lang, repo)-derived target sample through this same path.
+    with a (lang, repo)-derived target sample and :func:`dsir_mix_hash`.
+    Only the md5 default is oracle-exact."""
+    from pyspark import StorageLevel
 
-    ``portable_hash=True`` buckets features with the md5-60bit hash the
-    DuckDB oracle can reproduce (the catalog path, an Arrow kernel);
-    ``False`` runs the relational form with JVM-native
-    ``pmod(xxhash64(f), buckets)`` — bucketing only needs stability,
-    not cross-engine portability.  ``arrow=True`` is the tier path: a
-    crc32/splitmix64 Arrow kernel (see _dsir_bucket_counts_arrow)."""
-    spark = docs.sparkSession
-    b = buckets
-    docs = docs.withColumn("_tgt", is_target)
-    if arrow:
-        # tier form: pre-aggregated counts out of one Arrow pass;
-        # checkpoint so the kernel runs once across the three
-        # consumers.  DISK_ONLY: at the 7.1M tier the deserialized
-        # blocks otherwise occupy the unified pool and starve the
-        # downstream aggregates (AGGREGATE_OUT_OF_MEMORY)
-        from pyspark import StorageLevel
-        counts = _dsir_bucket_counts_arrow(docs, b).localCheckpoint(
-            eager=True, storageLevel=StorageLevel.DISK_ONLY)
-        tgt = (counts.filter(F.col("_tgt"))
-               .groupBy("b").agg(F.sum("c").alias("tc")))
-        doc_b = counts.filter(~F.col("_tgt")).select("doc_id", "b", "c")
-    elif portable_hash:
-        # catalog path: same pre-aggregated Arrow kernel as the tier
-        # form but with the oracle's md5-60bit bucketing — the earlier
-        # relational form exploded one row per FEATURE (~90/doc) and
-        # md5-hashed each occurrence; the kernel memoizes the hash per
-        # distinct feature and emits <= buckets rows per doc, so the
-        # wide per-feature exchange disappears (guide §4.2).  All
-        # aggregation and the broadcast-weights scoring stay relational.
-        counts = _dsir_bucket_counts_md5(docs, b).localCheckpoint(eager=True)
-        tgt = (counts.filter(F.col("_tgt"))
-               .groupBy("b").agg(F.sum("c").alias("tc")))
-        doc_b = counts.filter(~F.col("_tgt")).select("doc_id", "b", "c")
-    else:
-        # the token array is lambda-bound (transform over a 1-element
-        # array) so the split+filter runs ONCE per row — projection
-        # collapse would otherwise inline _TOKENS into every element_at
-        # of the bigram lambda and tokenization goes O(tokens^2)
-        feats = (f"element_at(transform(array({_TOKENS}), tk ->"
-                 " CASE WHEN size(tk) >= 2 THEN concat(tk,"
-                 " transform(sequence(1, size(tk) - 1),"
-                 " i -> concat(element_at(tk, i), ' ', element_at(tk, i + 1))))"
-                 " ELSE tk END), 1)")
-        # explicit repartition: the source is typically a handful of
-        # dense parquet files, which would pin the CPU-heavy
-        # tokenize+hash expansion to as few cores
-        base = (
-            docs.repartition(spark.sparkContext.defaultParallelism)
-            .select("doc_id", "_tgt", F.expr(feats).alias("fs"))
-        )
-        fb = base.select(
-            "doc_id", "_tgt", F.explode("fs").alias("f")
-        ).select(
-            "doc_id", "_tgt", F.expr(f"pmod(xxhash64(f), {b})").alias("b"),
-        )
-        tgt = fb.filter(F.col("_tgt")).groupBy("b").agg(F.count("*").alias("tc"))
-        # doc_b feeds three consumers (raw marginals, totals, scores) —
-        # an eager checkpoint keeps the explode+hash expansion from
-        # replaying once per branch (<= buckets rows/doc post-agg)
-        doc_b = (fb.filter(~F.col("_tgt"))
-                 .groupBy("doc_id", "b").agg(F.count("*").alias("c"))
-                 .localCheckpoint(eager=True))
-    raw = doc_b.groupBy("b").agg(F.sum("c").alias("rc"))
-    totals = (tgt.agg(F.coalesce(F.sum("tc"), F.lit(0)).alias("nt"))
-              .crossJoin(raw.agg(F.coalesce(F.sum("rc"), F.lit(0)).alias("nr"))))
-    weights = (
-        spark.range(b).select(F.col("id").alias("b"))
-        .join(tgt, "b", "left").join(raw, "b", "left")
-        .crossJoin(F.broadcast(totals))
-        .select(
-            "b",
-            F.expr(f"CAST(round((ln(coalesce(tc, 0) + 1) - ln(nt + {b})"
-                   f" - ln(coalesce(rc, 0) + 1) + ln(nr + {b}))"
-                   " * 1000000, 0) AS BIGINT)").alias("lw"),
-        )
+    b = _DSIR_BUCKETS
+    # materialized once for its two readers (marginals, scores); on
+    # disk, so the 7.1M-tier counts never crowd the execution pool
+    counts = dsir_counts(docs.withColumn("_tgt", is_target),
+                         feature_hash).localCheckpoint(
+        eager=True, storageLevel=StorageLevel.DISK_ONLY)
+    marginals = (
+        counts.select("_tgt", F.posexplode("counts").alias("b", "c"))
+        .groupBy("b")
+        .agg(F.sum(F.when(F.col("_tgt"), F.col("c")).otherwise(0)).alias("tc"),
+             F.sum(F.when(~F.col("_tgt"), F.col("c")).otherwise(0)).alias("rc"))
     )
-    if arrow:
-        # map-side scoring: the model IS the O(buckets) weight vector,
-        # so fetch it (constant-size collect — the broadcast analog)
-        # and fold the dot product inside a second Arrow pass.  The
-        # relational groupBy(doc_id) over the per-(doc, bucket) rows
-        # builds a near-useless partial hash map (keys ~unique per
-        # partition — ~1.4 GB/task at 7.1M docs, the tier OOM); the
-        # kernel emits <= one partial row per doc per batch instead,
-        # so the final aggregate sees ~n_docs rows.
-        import numpy as np
-        w_vec = np.zeros(b, dtype=np.int64)
-        for r in weights.collect():
-            w_vec[r["b"]] = r["lw"]
-
-        def score_batches(it):
-            import pandas as pd
-            for pdf in it:
-                g = (pd.DataFrame({
-                        "doc_id": pdf["doc_id"],
-                        "s": pdf["c"].to_numpy() * w_vec[pdf["b"].to_numpy()],
-                        "nf": pdf["c"]})
-                     .groupby("doc_id", as_index=False).sum())
-                yield g
-
-        scores = (
-            doc_b.mapInPandas(score_batches, schema="doc_id long, s long, nf long")
-            .groupBy("doc_id")
-            .agg(F.sum("s").alias("s"), F.sum("nf").alias("nf"))
-        )
-    else:
-        scores = (
-            doc_b.join(F.broadcast(weights), "b")
-            .groupBy("doc_id")
-            .agg(F.sum(F.col("c") * F.col("lw")).alias("s"),
-                 F.sum("c").alias("nf"))
-        )
+    lw = F.expr(f"CAST(round((ln(tc + 1) - ln(sum(tc) OVER () + {b})"
+                f" - ln(rc + 1) + ln(sum(rc) OVER () + {b}))"
+                " * 1000000, 0) AS BIGINT)")
+    w = [0] * b
+    for r in marginals.select("b", lw.alias("lw")).collect():
+        w[r["b"]] = r["lw"]
+    w_arr = ", ".join(f"{v}L" for v in w)
     return (
-        docs.filter(~F.col("_tgt")).select("doc_id")
-        .join(scores, "doc_id", "left")
+        counts.filter(~F.col("_tgt"))
         .select(
             "doc_id",
-            F.coalesce("nf", F.lit(0)).cast("long").alias("n_feats"),
-            F.coalesce("s", F.lit(0)).cast("long").alias("score_micro"),
+            F.expr("aggregate(counts, 0L, (s, c) -> s + c)").alias("n_feats"),
+            F.expr(f"aggregate(zip_with(counts, array({w_arr}),"
+                   " (c, w) -> c * w), 0L, (s, x) -> s + x)").alias("score_micro"),
         )
         .withColumn(
             "sel_rank",
@@ -2518,7 +2375,7 @@ WITH base AS (
                                            i -> tk[i] || ' ' || tk[i + 1]))
           ELSE tk END) AS fs
   FROM (SELECT doc_id, source,
-               list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS tk
+               {_SQL_TOKENS} AS tk
         FROM documents)
 ), fb AS (
   SELECT doc_id, source,

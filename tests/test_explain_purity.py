@@ -156,20 +156,20 @@ def test_decontaminate_broadcasts_eval_grams(spark):
 
 
 def test_dsir_importance_broadcasts_weights(spark):
-    """DSIR must join the O(buckets) weight table onto the doc-bucket
-    counts as a BROADCAST — a shuffle join would re-exchange the
-    corpus-side counts for a 64-row table.  (The 1-row totals crossJoin
-    is legitimately a broadcast nested loop.)  Since r6 the bucket
-    COUNTS come from the pre-aggregated Arrow kernel (the third
-    sanctioned Arrow stage, same §4.2 rationale as signatures/verify:
-    per-feature md5 explode was the query's cost center and the kernel
-    memoizes the hash per distinct feature); everything downstream is
-    still relational — MapInPandas is the ONLY Python node and no
-    row-at-a-time Python appears."""
-    from codedup.queries import q_dsir_importance
+    """DSIR scores each raw doc as the dot product of its dense count
+    row with the collected O(buckets) weight vector, so its plan has no
+    join and no exchange keyed by doc_id.  The count kernel is the one
+    Arrow stage and a MapInPandas (the query reads its checkpointed
+    output); no row-at-a-time Python appears anywhere."""
+    from codedup.queries import dsir_counts, dsir_md5_hash, q_dsir_importance
 
     df = q_dsir_importance(spark, "/root/testdata/sf0.001")
     plan = _plan(df)
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
-    assert "BroadcastHashJoin" in plan
+    assert "Join" not in plan, plan
+    assert "hashpartitioning(doc_id" not in plan, plan
+    for node in PY_NODES:
+        assert node not in plan, plan
+    docs = spark.createDataFrame([(0, False, "a b")],
+                                 "doc_id long, _tgt boolean, text string")
+    kernel = _plan(dsir_counts(docs, dsir_md5_hash))
+    assert [n for n in PY_NODES if n in kernel] == ["MapInPandas"], kernel

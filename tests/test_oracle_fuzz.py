@@ -8,7 +8,7 @@ example counts are small because each example pays a Spark job.
 
 import duckdb
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from codedup.queries import ORACLES, QUERIES
@@ -28,6 +28,11 @@ _FUZZED = ["doc_repetition_stats", "paragraph_dedup_stats", "doc_pii_scrub",
            "bpe_token_stats", "paragraph_dedup_apply", "doc_fingerprint",
            "substring_dedup_apply", "dedup_exact", "dedup_minhash_lsh",
            "gopher_quality_filter"]
+
+# the vertical tab (\x0b) separates tokens for Java's \s and the Python
+# kernels but not for RE2's \s; the oracles spell the class out
+_VT_TEXTS = ["the cat\x0bsat on the mat!\x0b", "the cat sat on the mat",
+             "the\x0b\x0bcat sat on the mat"]
 
 _SETTINGS = settings(
     max_examples=4, deadline=None, derandomize=True,
@@ -61,6 +66,7 @@ def test_fuzz_engine_equals_oracle(spark, tmp_path_factory, qname):
 
     @_SETTINGS
     @given(_TEXTS)
+    @example(_VT_TEXTS)
     def inner(texts):
         run[0] += 1
         d = str(tmp_path_factory.mktemp(f"fuzz_{qname}_{run[0]}"))
@@ -480,6 +486,7 @@ def test_fuzz_dsir_importance(spark, tmp_path_factory):
 
     @_SETTINGS
     @given(_DSIR_DOCS)
+    @example([(t, i == 1) for i, t in enumerate(_VT_TEXTS)])
     def inner(docs):
         run[0] += 1
         d = str(tmp_path_factory.mktemp(f"fz_dsir_{run[0]}"))

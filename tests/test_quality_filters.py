@@ -164,12 +164,13 @@ def test_dsir_importance_no_target_docs(spark, tmp_path):
 
 
 def test_dsir_fast_hash_preserves_domain_ordering(spark, tmp_path):
-    """The xxhash64 tier path buckets differently than the portable md5
-    hash but must carry the same domain signal: same schema, same raw
-    doc set, and the target-like doc still outranks the alien one."""
+    """The crc32/splitmix64 tier hash buckets differently than the
+    portable md5 hash but must carry the same domain signal: same
+    schema, same raw doc set, and the target-like doc still outranks
+    the alien one."""
     from pyspark.sql import functions as F
 
-    from codedup.queries import _DSIR_TARGET_SOURCE, dsir_scores
+    from codedup.queries import _DSIR_TARGET_SOURCE, dsir_mix_hash, dsir_scores
 
     target = "import numpy as np from collections import defaultdict"
     d = str(tmp_path)
@@ -182,20 +183,27 @@ def test_dsir_fast_hash_preserves_domain_ordering(spark, tmp_path):
     docs = spark.read.parquet(d + "/documents.parquet")
     got = {r["doc_id"]: r.asDict() for r in
            dsir_scores(docs, F.col("source") == _DSIR_TARGET_SOURCE,
-                       portable_hash=False).collect()}
+                       feature_hash=dsir_mix_hash).collect()}
     assert set(got) == {2, 3}
     assert got[2]["score_micro"] > got[3]["score_micro"]
     assert got[2]["sel_rank"] == 1 and got[3]["sel_rank"] == 2
 
 
 def test_dsir_arrow_structural_parity(spark, tmp_path):
-    """The Arrow tier kernel must agree with the relational form on
-    everything hash-independent: same raw doc set, identical per-doc
-    feature counts (ASCII whitespace => identical tokenization), and
-    the planted domain ordering."""
+    """The count kernel with the default md5 hash must equal the DuckDB
+    oracle row for row; with the crc32/splitmix64 tier hash it must
+    agree on everything hash-independent: same raw doc set, identical
+    per-doc feature counts (same tokenizer), and the planted domain
+    ordering."""
+    import duckdb
     from pyspark.sql import functions as F
 
-    from codedup.queries import _DSIR_TARGET_SOURCE, dsir_scores
+    from codedup.queries import (
+        _DSIR_TARGET_SOURCE,
+        SQL_DSIR_IMPORTANCE,
+        dsir_mix_hash,
+        dsir_scores,
+    )
 
     target = "import numpy as np from collections import defaultdict"
     d = str(tmp_path)
@@ -209,13 +217,19 @@ def test_dsir_arrow_structural_parity(spark, tmp_path):
     ])
     docs = spark.read.parquet(d + "/documents.parquet")
     is_tgt = F.col("source") == _DSIR_TARGET_SOURCE
-    arrow = {r["doc_id"]: r.asDict()
-             for r in dsir_scores(docs, is_tgt, arrow=True).collect()}
-    sql = {r["doc_id"]: r.asDict()
-           for r in dsir_scores(docs, is_tgt, portable_hash=False).collect()}
-    assert set(arrow) == set(sql) == {2, 3, 4, 5}
-    for k in arrow:
-        assert arrow[k]["n_feats"] == sql[k]["n_feats"], k
-    assert arrow[5]["n_feats"] == 1 and arrow[4]["n_feats"] == 0
-    assert arrow[2]["score_micro"] > arrow[3]["score_micro"]
-    assert sorted(r["sel_rank"] for r in arrow.values()) == [1, 2, 3, 4]
+    md5 = {r["doc_id"]: r.asDict() for r in dsir_scores(docs, is_tgt).collect()}
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM "
+                f"read_parquet('{d}/documents.parquet/*.parquet')")
+    cur = con.execute(SQL_DSIR_IMPORTANCE)
+    cols = [c[0] for c in cur.description]
+    oracle = {r[0]: dict(zip(cols, r)) for r in cur.fetchall()}
+    assert md5 == oracle
+    mix = {r["doc_id"]: r.asDict()
+           for r in dsir_scores(docs, is_tgt, feature_hash=dsir_mix_hash).collect()}
+    assert set(mix) == set(md5) == {2, 3, 4, 5}
+    for k in mix:
+        assert mix[k]["n_feats"] == md5[k]["n_feats"], k
+    assert mix[5]["n_feats"] == 1 and mix[4]["n_feats"] == 0
+    assert mix[2]["score_micro"] > mix[3]["score_micro"]
+    assert sorted(r["sel_rank"] for r in mix.values()) == [1, 2, 3, 4]

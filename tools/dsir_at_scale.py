@@ -44,7 +44,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from codedup.queries import dsir_scores
+    from codedup.queries import dsir_mix_hash, dsir_scores
     from codedup.session import build_session
 
     spark = build_session(
@@ -52,9 +52,8 @@ def main() -> None:
         shuffle_partitions=shuffle,
         extra={
             "spark.driver.memory": mem,
-            # the pre-aggregated counts checkpoint is storage-resident;
             # keep the protected storage fraction low so execution can
-            # evict it to disk instead of starving the aggregates
+            # evict cached blocks instead of starving the aggregates
             # (UNABLE_TO_ACQUIRE_MEMORY at the 7.1M tier otherwise)
             "spark.memory.storageFraction": "0.25",
         },
@@ -74,7 +73,7 @@ def main() -> None:
         n_target = docs.filter(is_target).count()
 
         t0 = time.time()
-        scored = dsir_scores(docs, is_target, arrow=True)
+        scored = dsir_scores(docs, is_target, feature_hash=dsir_mix_hash)
         out_path = os.path.join(work, "dsir_scores.parquet")
         scored.write.mode("overwrite").parquet(out_path)
         wall = time.time() - t0

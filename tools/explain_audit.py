@@ -170,10 +170,10 @@ def main() -> int:
                         QUERIES["winnowing_pairs"](spark, SF))
     ok &= audit("query: paragraph_dedup_stats (paragraph-df join)",
                 QUERIES["paragraph_dedup_stats"](spark, SF))
-    # round-5: DSIR keeps the corpus side un-reshuffled — the
-    # O(buckets) weight table must broadcast onto the doc-bucket counts
-    ok &= audit("query: dsir_importance (broadcast weight model)",
-                QUERIES["dsir_importance"](spark, SF), expect_broadcast=True)
+    # DSIR scores the checkpointed dense count rows against the
+    # collected O(buckets) weight vector: no join, no doc_id exchange
+    ok &= audit("query: dsir_importance (dot product with collected weights)",
+                QUERIES["dsir_importance"](spark, SF))
     # (plan is the post-cache projection over the shared verified-pair
     # table — audited property is the equi-join shape, not the Arrow
     # stages, which live in the pair pipeline audited above)

@@ -154,7 +154,7 @@ def run_scaling_leg(cores: int, corpus_dir: str) -> None:
     from codedup.session import build_session
     from codedup import pipeline
 
-    window = ("signatures", "bands", "candidates", "verified", "clusters")
+    window = ("signatures", "candidates", "verified", "clusters")
     cfg = DedupConfig()
     spark = build_session(f"local[{cores}]", app_name=f"codedup-scale-{cores}",
                           shuffle_partitions=64)

@@ -40,7 +40,6 @@ STAGES = [
     "exact_edges",
     "reps",
     "signatures",
-    "bands",
     "candidates",
     "verified",
     "clusters",
@@ -71,10 +70,12 @@ def checkpoint_stage(name: str, build) -> DataFrame:
 
 
 def minhash_chain(fp: DataFrame, cfg: DedupConfig, stage, sign=None):
-    """fingerprints -> reps -> signatures -> bands -> candidates ->
-    verified, each built through ``stage(name, build)``.  ``sign``
-    replaces ``compute_signatures(rep_ids, cfg)`` (the pipeline's
-    cross-run SignatureCache).  Returns (reps, signatures, verified)."""
+    """fingerprints -> reps -> signatures -> candidates -> verified,
+    each built through ``stage(name, build)``; LSH banding runs inside
+    the candidates stage (a pure JVM projection of the signatures, not
+    worth a checkpoint of its own).  ``sign`` replaces
+    ``compute_signatures(rep_ids, cfg)`` (the pipeline's cross-run
+    SignatureCache).  Returns (reps, signatures, verified)."""
     # materialized: consumed 3x downstream (signatures + both verify
     # content joins) — deriving it each time would re-shuffle the full
     # content column through the dedup window every consumer
@@ -90,8 +91,7 @@ def minhash_chain(fp: DataFrame, cfg: DedupConfig, stage, sign=None):
     # FAULT sentinel rows (n_shingles = -1, see signatures.py) stay
     # visible in the signatures table but never reach banding/verification
     good_sigs = sigs.filter(F.col("n_shingles") >= 0)
-    bands = stage("bands", lambda: band_rows(good_sigs, cfg))
-    cands = stage("candidates", lambda: candidate_pairs(bands, cfg))
+    cands = stage("candidates", lambda: candidate_pairs(band_rows(good_sigs, cfg), cfg))
     verified = stage("verified", lambda: verify_pairs(cands, reps, sigs, cfg))
     return reps, sigs, verified
 
@@ -154,15 +154,16 @@ def run(
     def cached_signatures(rep_ids: DataFrame, cfg: DedupConfig) -> DataFrame:
         cache = SignatureCache(store.root, cfg.fingerprint())
         cached = cache.read(spark)
+        misses = rep_ids if cached is None else \
+            rep_ids.join(cached.select("file_id"), "file_id", "left_anti")
+        new_sigs = compute_signatures(misses, cfg).localCheckpoint(eager=True)
+        # FAULT sentinels are this run's record, not a reusable result:
+        # caching one would make every later run skip that file
+        cache.append(new_sigs.filter(F.col("n_shingles") >= 0))
         if cached is None:
-            sigs = compute_signatures(rep_ids, cfg).localCheckpoint(eager=True)
-            cache.append(sigs)
-            return sigs
-        missing = rep_ids.join(cached.select("file_id"), "file_id", "left_anti")
-        new_sigs = compute_signatures(missing, cfg).localCheckpoint(eager=True)
-        cache.append(new_sigs)
-        reused = cached.join(rep_ids.select("file_id"), "file_id", "left_semi")
-        return reused.unionByName(new_sigs)
+            return new_sigs
+        hits = cached.join(rep_ids.select("file_id"), "file_id", "left_semi")
+        return hits.unionByName(new_sigs)
 
     _, _, verified = minhash_chain(
         fp, cfg, stage,

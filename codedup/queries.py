@@ -298,7 +298,10 @@ def _minhash_pipeline_pairs(spark: SparkSession, sf_dir: str, cfg: DedupConfig) 
     re-expanded; returns (a, b, jaccard_ppm) over doc_ids.  The stage
     chain is pipeline.minhash_chain with every stage checkpointed in
     session; the result is materialized once per (session, corpus,
-    config) — see _PAIRS_CACHE."""
+    config) — see _PAIRS_CACHE.  The re-expansion reads one
+    ``groupBy(sha256)`` table: per-row memory is one sha group's
+    sorted doc_id array, 8 bytes x group size (a cross-pair row holds
+    its two groups' arrays); no array larger than one group is built."""
     from codedup.pipeline import checkpoint_stage, minhash_chain
     from codedup.stages.fingerprint import fingerprint
 
@@ -315,14 +318,18 @@ def _minhash_pipeline_pairs(spark: SparkSession, sf_dir: str, cfg: DedupConfig) 
 
     # Re-expand through sha256 groups: LSH ran on one representative per
     # distinct content, but the all-pairs oracle (and the semantics)
-    # cover EVERY doc.  A verified rep pair fans out to all member cross
-    # pairs (members are byte-identical to their rep, so the Jaccard is
-    # the same), and each exact group of m docs contributes its m(m-1)/2
-    # intra pairs at Jaccard exactly 1.  Each doc belongs to one sha
-    # group and rep pairs are distinct group pairs, so expansion never
-    # duplicates a pair.
-    membs = fp.select("sha256", F.col("path").cast("long").alias("doc_id"))
-    rep_sha = fp.select("file_id", "sha256")
+    # cover EVERY doc.  One row per group holds its rep (min file_id,
+    # the row representatives() keeps) and its doc_ids, sorted.  A
+    # verified rep pair fans out to all member cross pairs (members are
+    # byte-identical to their rep, so the Jaccard is the same), and each
+    # group of m docs contributes its m(m-1)/2 intra pairs at Jaccard
+    # exactly 1: doc i pairs with the docs after it in the sorted array.
+    # Each doc belongs to one group and rep pairs are distinct group
+    # pairs, so expansion never duplicates a pair.
+    groups = fp.groupBy("sha256").agg(
+        F.min("file_id").alias("rep"),
+        F.array_sort(F.collect_list(F.col("path").cast("long"))).alias("docs"),
+    )
     ppm = (
         F.when(F.col("n_union") == 0, F.lit(1_000_000))
         .otherwise(F.expr("(n_inter * 1000000) div n_union"))
@@ -330,27 +337,17 @@ def _minhash_pipeline_pairs(spark: SparkSession, sf_dir: str, cfg: DedupConfig) 
     cross = (
         verified.filter(F.col("kind") != "fault")
         .select("a", "b", ppm.alias("jaccard_ppm"))
-        .join(rep_sha.select(F.col("file_id").alias("a"), F.col("sha256").alias("sha_a")), "a")
-        .join(rep_sha.select(F.col("file_id").alias("b"), F.col("sha256").alias("sha_b")), "b")
-        .join(membs.select(F.col("sha256").alias("sha_a"), F.col("doc_id").alias("da")), "sha_a")
-        .join(membs.select(F.col("sha256").alias("sha_b"), F.col("doc_id").alias("db")), "sha_b")
+        .join(groups.select(F.col("rep").alias("a"), F.col("docs").alias("da")), "a")
+        .join(groups.select(F.col("rep").alias("b"), F.col("docs").alias("db")), "b")
+        .select(F.explode("da").alias("da"), "db", "jaccard_ppm")
+        .select("da", F.explode("db").alias("db"), "jaccard_ppm")
         .select(F.least("da", "db").alias("a"), F.greatest("da", "db").alias("b"),
                 "jaccard_ppm")
     )
-    # restrict the intra-group expansion to sha groups that actually
-    # have >1 member BEFORE self-joining: the dup-group table
-    # map-combines to (usually) near-nothing, AQE broadcasts it, and
-    # the full membership no longer shuffles+sorts just to discover
-    # there are no exact-dup pairs (same move as candidate_pairs'
-    # stats join)
-    dup_shas = (membs.groupBy("sha256").agg(F.count(F.lit(1)).alias("n"))
-                .filter(F.col("n") > 1).select("sha256"))
-    m2 = membs.join(dup_shas, "sha256", "left_semi")
     intra = (
-        m2.alias("x")
-        .join(m2.alias("y"), "sha256")
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"),
+        groups.filter(F.size("docs") > 1)
+        .select("docs", F.posexplode("docs").alias("i", "a"))
+        .select("a", F.explode(F.expr("slice(docs, i + 2, size(docs))")).alias("b"),
                 F.lit(1_000_000).alias("jaccard_ppm"))
     )
     out = cross.unionByName(intra).localCheckpoint(eager=True)

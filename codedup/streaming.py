@@ -4,15 +4,19 @@ The reference is batch-with-resume (SURVEY §2.7) — its incremental unit
 is one file (cache.py:122-126).  This module exposes the same
 semantics over Structured Streaming: new file rows arrive on a stream,
 each micro-batch is deduplicated BOTH against itself and against
-everything seen before, and all state lives in the same checkpoint
-tables the batch pipeline uses (signature cache + cumulative bands +
-verified pairs) — so a streaming job and a batch job are
-interchangeable views of one incremental computation.
+everything seen before, and all state lives in tables of the row
+shapes the batch stages produce (signatures, band rows, verified
+pairs) — so a streaming job and a batch job are interchangeable views
+of one incremental computation.
 
 Shape: ``readStream`` (file source) → ``foreachBatch``: inside each
 batch we reuse the exact batch-stage functions (fingerprint,
-signatures, banding, verify) — no separate streaming implementations to
-drift out of sync.  State tables:
+signatures, banding, the candidates stage's ``bucket_pairs`` policy,
+verify) — no separate streaming implementations to drift out of sync.
+``process_batch`` does not call ``pipeline.minhash_chain``: its reps
+(history-aware exact collapse), candidates (touched buckets only) and
+verify inputs (pruned to candidate ids) all differ from the batch
+chain's.  State tables:
 
     <work>/stream/signatures/   all signatures seen (append-only)
     <work>/stream/bands/        all band rows seen (append-only)
@@ -35,7 +39,7 @@ from pyspark.sql import functions as F
 
 from codedup.config import DedupConfig
 from codedup.stages.banding import band_rows
-from codedup.stages.candidates import _salted_pairs
+from codedup.stages.candidates import bucket_pairs, star_regime
 from codedup.stages.exact import representatives
 from codedup.stages.fingerprint import fingerprint
 from codedup.stages.ingest import FILES_SCHEMA
@@ -249,25 +253,24 @@ class IncrementalDedup:
     def _incremental_candidates(self, new_bands: DataFrame,
                                 old_bands: DataFrame | None):
         """-> (candidate pairs touching new files, this batch's stats
-        delta).  The incremental twin of stages.candidates.
-        candidate_pairs (VERDICT r4 #2):
+        delta).  The pair policy is stages.candidates.bucket_pairs, the
+        same call the batch candidate_pairs makes (VERDICT r4 #2); what
+        is streaming's own is which rows reach it:
 
           * bucket SIZE and REP come from the persisted stats deltas
             merged with this batch's counts — no window over history;
           * only buckets touched by new files are processed at all
             (untouched buckets' pairs were earlier batches' output);
-          * small buckets (merged size <= cap) fetch their old members
-            via a broadcast semi-join keyed on the touched-bucket set
-            and emit the complete new-touching pair set;
-          * salted/auto medium buckets do the same through the salt
-            spread (_salted_pairs — identical policy, complete
-            coverage);
-          * star-regime buckets (auto beyond cap*salt_buckets, or any
-            hot bucket in star mode) NEVER fetch members: new members
-            edge to the merged rep, and when a new file takes over as
-            rep a single (new_rep, old_rep) bridge keeps the component
-            connected — the boilerplate bucket every batch touches
-            costs O(new members in it), not O(bucket).
+          * buckets below star_regime fetch their old members via a
+            broadcast semi-join keyed on the touched-bucket set, so the
+            small self-join and the salt spread see the whole bucket;
+          * star-regime buckets NEVER fetch members: the old rep stands
+            in for them, so new members edge to the merged rep and a
+            new file taking over as rep gets one (new_rep, old_rep)
+            bridge that keeps the component connected — the
+            boilerplate bucket every batch touches costs O(new members
+            in it), not O(bucket);
+          * only pairs touching a new file are kept.
 
         Per-batch shuffle volume is therefore ∝ this batch's bands +
         members of touched non-star buckets, independent of history
@@ -275,78 +278,42 @@ class IncrementalDedup:
         exchange).  At 10^12 scale the bands state would be bucketed by
         band_hash so even the scan prunes to touched buckets — same
         logical plan."""
-        cfg = self.cfg
-        cap = cfg.band_bucket_cap
-        giant_at = cap * cfg.salt_buckets
         new_stats = (
             new_bands.groupBy("band", "band_hash")
             .agg(F.count(F.lit(1)).alias("cnt"), F.min("file_id").alias("rep"))
             .localCheckpoint(eager=True)
         )
-        touched = new_stats.select("band", "band_hash")
+        # merged size/rep of each touched bucket, plus its old rep
+        # (null for a bucket no earlier batch touched)
+        merged = new_stats.withColumn("rep_old", F.lit(None).cast("long"))
         old_stats = self._bucket_stats()
         if old_stats is not None:
-            old_touched = (
-                old_stats.join(F.broadcast(touched), ["band", "band_hash"], "left_semi")
-                .groupBy("band", "band_hash")
-                .agg(F.sum("cnt").alias("cnt_old"), F.min("rep").alias("rep_old"))
-            )
-            tot = new_stats.join(old_touched, ["band", "band_hash"], "left")
-        else:
-            tot = new_stats.withColumn("cnt_old", F.lit(None).cast("long")) \
-                           .withColumn("rep_old", F.lit(None).cast("long"))
+            merged = merged.unionByName(
+                old_stats.join(F.broadcast(new_stats.select("band", "band_hash")),
+                               ["band", "band_hash"], "left_semi")
+                .withColumn("rep_old", F.col("rep")))
         tot = (
-            tot.select(
-                "band", "band_hash",
-                (F.col("cnt") + F.coalesce(F.col("cnt_old"), F.lit(0))).alias("bsz"),
-                F.least(F.col("rep"), F.coalesce(F.col("rep_old"), F.col("rep")))
-                .alias("rep"),
-                "rep_old",
-            )
+            merged.groupBy("band", "band_hash")
+            .agg(F.sum("cnt").alias("bsz"), F.min("rep").alias("rep"),
+                 F.min("rep_old").alias("rep_old"))
             .filter(F.col("bsz") > 1)
             .localCheckpoint(eager=True)   # small: one row per touched bucket
         )
-        if cfg.hot_bucket_mode == "star":
-            star_cond = F.col("bsz") > cap
-        elif cfg.hot_bucket_mode == "auto":
-            star_cond = F.col("bsz") > giant_at
-        else:  # salted: complete coverage everywhere, no star regime
-            star_cond = F.lit(False)
-
-        # member-needing buckets: everything below the star regime
-        mkeys = tot.filter(~star_cond).select("band", "band_hash", "bsz")
-        members = new_bands.join(
-            F.broadcast(mkeys.select("band", "band_hash")),
-            ["band", "band_hash"], "left_semi")
+        star = star_regime(self.cfg)
+        members = new_bands.select("band", "band_hash", "file_id")
         if old_bands is not None:
+            below = tot.filter(~star).select("band", "band_hash")
             members = members.unionByName(
-                old_bands.select(*new_bands.columns).join(
-                    F.broadcast(mkeys.select("band", "band_hash")),
-                    ["band", "band_hash"], "left_semi"))
-        sized = members.join(F.broadcast(mkeys), ["band", "band_hash"])
-        small = sized.filter(F.col("bsz") <= cap).select("band", "band_hash", "file_id")
-        pairs = (
-            small.alias("x").join(small.alias("y"), ["band", "band_hash"])
-            .filter(F.col("x.file_id") < F.col("y.file_id"))
-            .select(F.col("x.file_id").alias("a"), F.col("y.file_id").alias("b"))
-        )
-        hot_members = sized.filter(F.col("bsz") > cap)
-        pairs = pairs.unionByName(_salted_pairs(hot_members, cfg))
-
-        starb = tot.filter(star_cond)
-        star_new = (
-            new_bands.join(F.broadcast(starb.select("band", "band_hash", "rep")),
-                           ["band", "band_hash"])
-            .filter(F.col("file_id") != F.col("rep"))
-            .select(F.col("rep").alias("a"), F.col("file_id").alias("b"))
-        )
-        bridge = (
-            starb.filter(F.col("rep_old").isNotNull()
-                         & (F.col("rep") < F.col("rep_old")))
-            .select(F.col("rep").alias("a"), F.col("rep_old").alias("b"))
-        )
-        pairs = pairs.unionByName(star_new).unionByName(bridge) \
-            .dropDuplicates(["a", "b"])
+                old_bands.join(F.broadcast(below), ["band", "band_hash"], "left_semi")
+                .select("band", "band_hash", "file_id"))
+        # a star bucket's old members are represented by its old rep:
+        # the star edge (rep, rep_old) is the rep-takeover bridge
+        old_reps = tot.filter(star & F.col("rep_old").isNotNull()) \
+            .select("band", "band_hash", F.col("rep_old").alias("file_id"))
+        sized = members.unionByName(old_reps).join(
+            F.broadcast(tot.select("band", "band_hash", "bsz", "rep")),
+            ["band", "band_hash"])
+        pairs = bucket_pairs(sized, self.cfg)
 
         # keep only pairs touching a NEW file (old x old inside touched
         # small buckets were earlier batches' candidates)
@@ -390,13 +357,9 @@ class IncrementalDedup:
         new_bands = band_rows(new_sigs, cfg).localCheckpoint(eager=True)
 
         old_bands = self._read_or_none(self.bands_dir)
-        # Candidates: INCREMENTAL band-bucket state (VERDICT r4 #2) —
-        # per-(band, band_hash) size/rep stats persist as per-batch
-        # deltas; only buckets TOUCHED by new files are processed, with
-        # the same small/salted/star policy as the batch path.  Replaces
-        # the r3 form (candidate_pairs over new ∪ FULL history, filtered
-        # to new-touching), whose per-batch window re-shuffled every
-        # history band row.
+        # Candidates from the incremental band-bucket state (VERDICT r4
+        # #2): only buckets touched by new files, sized from persisted
+        # stats deltas, paired by the batch path's bucket_pairs.
         cands, new_stats = self._incremental_candidates(new_bands, old_bands)
         cands = cands.localCheckpoint(eager=True)   # feeds id-prune + verify
 

@@ -42,6 +42,13 @@ def test_signature_fault_is_routed_not_fatal(spark, tmp_path, monkeypatch):
     sigs2 = spark.read.parquet(str(tmp_path / "w2" / "runs" / "f2" / "signatures")).toPandas()
     assert (sigs2.n_shingles >= 0).all()
 
+    # a healthy rerun in the FIRST run's work dir must re-sign the
+    # poisoned row: the cross-run signature cache keeps no sentinels
+    pipeline.run(spark, [src], cfg, work_dir=str(tmp_path / "w"),
+                 run_id="f3", resume=False)
+    sigs3 = spark.read.parquet(str(tmp_path / "w" / "runs" / "f3" / "signatures")).toPandas()
+    assert len(sigs3) == 3 and (sigs3.n_shingles >= 0).all()
+
 
 def test_verify_fault_recorded_not_fatal(spark, monkeypatch):
     """A pair that explodes inside verification becomes a kind='fault'

@@ -308,3 +308,23 @@ def test_winnowing_guarantee(spark, tmp_path):
     want = {tuple(int(x) for x in r)
             for r in _oracle(d, ORACLES["doc_winnowing"]).itertuples(index=False)}
     assert got == want
+
+
+def test_large_exact_group_expands_to_all_pairs(spark, tmp_path):
+    """600 byte-identical docs (plus one distinct doc) re-expand from one
+    sha group to all 600*599/2 intra pairs at Jaccard 1.0, each once
+    with a < b.  Engine-only: the oracle's gram self-join over 600
+    identical docs is too slow for this tier."""
+    body = "def boiler():\n    return 'vendored copy'\n" * 8
+    rows = [(i, "py", body) for i in range(600)]
+    rows.append((600, "py", "an unrelated document with its own words"))
+    d = str(tmp_path)
+    spark.createDataFrame(rows, "doc_id long, lang string, text string") \
+        .coalesce(1).write.mode("overwrite").parquet(d + "/documents.parquet")
+
+    got = q_dedup_minhash_lsh(spark, d).toPandas()
+    assert len(got) == 600 * 599 // 2 == 179_700
+    assert (got.jaccard_ppm == 1_000_000).all()
+    assert (got.a < got.b).all()
+    assert not got.duplicated(["a", "b"]).any()
+    assert not ((got.a == 600) | (got.b == 600)).any()

@@ -262,3 +262,47 @@ def test_pre_stats_layout_bootstraps_and_persists(spark, drops, cfg, tmp_path):
               .agg(F.sum("cnt").alias("cnt"), F.min("rep").alias("rep"))
               .collect()}
     assert merged == fresh
+
+
+def _mode_pairs(mode):
+    """Hand-derived new-touching candidates for the planted buckets of
+    test_incremental_candidates_policy_modes (cap 4, 3 salts)."""
+    def touching(members, new):
+        return {(a, b) for a in members for b in members
+                if a < b and (a in new or b in new)}
+
+    a = touching({0, 1, 2, 3}, {0})                          # size 4: small
+    b_all = touching({5, 6, *range(10, 18)}, {5, 6})         # size 10
+    c_all = touching({7, 50, *range(100, 130)}, {7, 50})     # size 32
+    d = {(900, 901)}
+    b_star = {(5, 6), (5, 10)}        # new rep 5 bridges to old rep 10
+    c_star = {(7, 50), (7, 100)}      # new rep 7 bridges to old rep 100
+    return {
+        "star": a | b_star | c_star | d,          # every bucket > 4 is a star
+        "salted": a | b_all | c_all | d,          # complete coverage everywhere
+        "auto": a | b_all | c_star | d,           # star only above 4 * 3 = 12
+    }[mode]
+
+
+@pytest.mark.parametrize("mode,n_pairs", [("star", 8), ("salted", 82), ("auto", 23)])
+def test_incremental_candidates_policy_modes(spark, tmp_path, mode, n_pairs):
+    """The streaming bucket policy in all three hot-bucket modes: old
+    band rows are persisted state, the new rows touch a small bucket, a
+    medium and a giant hot bucket (each gaining a new min id, so the
+    star regime must bridge new rep to old rep), a brand-new bucket and
+    a singleton."""
+    schema = "file_id long, band int, band_hash long"
+    old = ([(i, 0, 1000) for i in (1, 2, 3)]
+           + [(i, 1, 1001) for i in range(10, 18)]
+           + [(i, 2, 1002) for i in range(100, 130)])
+    new = [(0, 0, 1000), (5, 1, 1001), (6, 1, 1001), (50, 2, 1002), (7, 2, 1002),
+           (900, 3, 1003), (901, 3, 1003), (902, 4, 1004)]
+    mcfg = DedupConfig(band_bucket_cap=4, salt_buckets=3, hot_bucket_mode=mode)
+    inc = IncrementalDedup(spark, str(tmp_path / mode), mcfg)
+    spark.createDataFrame(old, schema).write.parquet(
+        os.path.join(inc.bands_dir, "batch_id=0"))
+    cands, _ = inc._incremental_candidates(
+        spark.createDataFrame(new, schema), inc._read_or_none(inc.bands_dir))
+    got = [(r.a, r.b) for r in cands.collect()]
+    assert len(got) == len(set(got)) == n_pairs
+    assert set(got) == _mode_pairs(mode)

@@ -51,8 +51,7 @@ def main() -> int:
     fp = fingerprint(files)
     reps = representatives(fp)
     sigs = compute_signatures(reps.select("file_id", "content"), cfg)
-    bands = band_rows(sigs, cfg)
-    cands = candidate_pairs(bands, cfg)
+    cands = candidate_pairs(band_rows(sigs, cfg), cfg)
     verified = verify_pairs(cands, reps, sigs, cfg)
 
     sections: list[tuple[str, str, list[str]]] = []  # (name, plan, audit notes)
@@ -83,11 +82,10 @@ def main() -> int:
     ok &= audit("stage: fingerprint", fp)
     ok &= audit("stage: exact_edges", exact_edges(fp))
     ok &= audit("stage: signatures (Arrow boundary #1)", sigs, expect_no_python=False)
-    ok &= audit("stage: bands (downstream of parquet checkpoint)",
-                band_rows(spark.read.parquet(paths["files"]).limit(0).sparkSession
-                          .createDataFrame([], sigs.schema), cfg))
-    ok &= audit("stage: candidates", candidate_pairs(
-        spark.createDataFrame([], bands.schema), cfg))
+    # banding runs inside the candidates stage, downstream of the
+    # signatures checkpoint: audit it from a signatures-shaped input
+    ok &= audit("stage: candidates (banding + bucket join)", candidate_pairs(
+        band_rows(spark.createDataFrame([], sigs.schema), cfg), cfg))
     ok &= audit("stage: verify (Arrow boundary #2)", verified, expect_no_python=False)
 
     docs_pruned = spark.read.parquet(f"{SF}/documents.parquet").filter("lang = 'en'") \

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from codedup.config import DedupConfig
+from codedup.ids import collided_ids, split_id_collisions
 from codedup.stages.banding import band_rows
 from codedup.stages.candidates import candidate_pairs
 from codedup.stages.cluster import connected_components
@@ -140,15 +141,16 @@ def run(
     fp_all = stage("fingerprint", lambda: fingerprint(files))
     # 64-bit id-collision guard (ADVICE r1): collided rows become error
     # rows and never reach dedup — an apply job must not act on a
-    # merged identity
-    from codedup.ids import split_id_collisions
-
-    fp, id_collided = split_id_collisions(fp_all)
-    stage("id_errors", lambda: id_collided.select(
+    # merged identity.  The guard's aggregation runs once, in this
+    # stage's build; every consumer of ``fp`` sees a plain filter of
+    # the fingerprint table, with the id set read back from the
+    # committed id_errors table (so a resume never re-aggregates)
+    id_errors = stage("id_errors", lambda: split_id_collisions(fp_all)[1].select(
         "repo", "path", "commit",
         F.lit("identity").alias("stage"),
         F.lit("64-bit file_id collision").alias("message"),
     ))
+    fp, _ = split_id_collisions(fp_all, collided_ids(id_errors))
     eedges = stage("exact_edges", lambda: exact_edges(fp))
 
     def cached_signatures(rep_ids: DataFrame, cfg: DedupConfig) -> DataFrame:

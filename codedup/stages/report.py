@@ -301,7 +301,10 @@ def reference_style_report(fp: DataFrame, ranked: DataFrame, verified: DataFrame
 
 def summary(fp: DataFrame, ranked: DataFrame) -> dict:
     """Driver-side small dict mirroring the reference report summary
-    (report1.json:4-17).  Two aggregate jobs total."""
+    (report1.json:4-17).  Two aggregate actions: corpus totals over
+    ``fp`` and group totals over the per-cluster stats of ``ranked``
+    (each starts more than one Spark job; tests/test_job_counts.py pins
+    the pipeline's count)."""
     totals = fp.agg(
         F.count(F.lit(1)).alias("total_files"), F.sum("size").alias("total_size")
     ).first()

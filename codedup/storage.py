@@ -17,9 +17,12 @@ runtime jar exists):
     <root>/runs/<run_id>/<stage>.manifest.json       commit marker (written LAST -> atomic)
     <root>/cache/signatures/<config_fp>/             cross-run signature cache (append-only)
 
-Manifest records: config fingerprint, row count, wall_ms, and
+Manifest records: config fingerprint, row count, wall_ms,
 per-partition row counts (the north_rule's "per-partition lineage and
-metrics").
+metrics") and the stage schema.  Reading a stage back (right after its
+write, or on resume) takes the schema from the manifest, so it starts
+no Spark job; parquet schema inference would start one per read.  A
+manifest without a schema is not complete: the stage is recomputed.
 """
 
 from __future__ import annotations
@@ -29,7 +32,9 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
+from codedup.stages.signatures import SIG_SCHEMA
 
 
 class ParquetStorage:
@@ -49,17 +54,21 @@ class ParquetStorage:
 
     # --- resume contract ---
     def is_complete(self, stage: str) -> bool:
-        """A stage is complete iff its manifest exists AND was written
-        under the same config fingerprint (ST2 invalidation analog)."""
+        """A stage is complete iff its manifest exists, was written
+        under the same config fingerprint (ST2 invalidation analog) and
+        records the schema ``read`` needs."""
         p = self.manifest_path(stage)
         if not os.path.exists(p):
             return False
         with open(p) as f:
             m = json.load(f)
-        return m.get("config_fp") == self.config_fp
+        return m.get("config_fp") == self.config_fp and "schema" in m
 
     def read(self, spark: SparkSession, stage: str) -> DataFrame:
-        return spark.read.parquet(self.stage_dir(stage))
+        """The committed stage table, read with the schema its manifest
+        records: no footer-inference job."""
+        schema = T.StructType.fromJson(self.manifest(stage)["schema"])
+        return spark.read.schema(schema).parquet(self.stage_dir(stage))
 
     def manifest(self, stage: str) -> dict:
         with open(self.manifest_path(stage)) as f:
@@ -67,15 +76,16 @@ class ParquetStorage:
 
     def write(self, df: DataFrame, stage: str, extra: dict | None = None,
               t_start: float | None = None) -> DataFrame:
-        """Write stage output + manifest; returns the re-read DataFrame
-        (reading back cuts lineage like a checkpoint and ensures all
-        downstream consumers share one materialization).  ``t_start``:
-        when the stage's build began (so wall_ms covers eager work the
-        build did — e.g. CC iterations — not just the write)."""
+        """Write stage output + manifest; returns the committed table
+        through ``read`` (reading back cuts lineage like a checkpoint and
+        ensures all downstream consumers share one materialization; the
+        manifest carries ``df.schema``, so the read-back starts no
+        job).  ``t_start``: when the stage's build began (so wall_ms
+        covers eager work the build did — e.g. CC iterations — not just
+        the write)."""
         t0 = t_start if t_start is not None else time.time()
         path = self.stage_dir(stage)
         df.write.mode("overwrite").parquet(path)
-        out = df.sparkSession.read.parquet(path)
         # per-partition lineage from parquet footers (one file per write
         # task) — metadata-only, no extra Spark job
         import glob
@@ -96,13 +106,14 @@ class ParquetStorage:
             "n_partitions": len(per_part),
             "partitions": {k: int(v) for k, v in per_part.items()},
             "wall_ms": int((time.time() - t0) * 1000),
+            "schema": df.schema.jsonValue(),
             **(extra or {}),
         }
         tmp = self.manifest_path(stage) + ".tmp"
         with open(tmp, "w") as f:
             json.dump(manifest, f, indent=1, sort_keys=True)
         os.replace(tmp, self.manifest_path(stage))  # atomic commit marker
-        return out
+        return self.read(df.sparkSession, stage)
 
     def all_manifests(self) -> list[dict]:
         out = []
@@ -136,7 +147,8 @@ class SignatureCache:
     def read(self, spark: SparkSession) -> DataFrame | None:
         if not self.exists():
             return None
-        return spark.read.parquet(self.dir)
+        # the known schema: no footer-inference job
+        return spark.read.schema(SIG_SCHEMA).parquet(self.dir)
 
     def append(self, new_sigs: DataFrame) -> None:
         new_sigs.write.mode("append").parquet(self.dir)

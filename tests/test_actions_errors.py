@@ -1,5 +1,7 @@
 """Action-plan sink (S10) and errors side-channel tests."""
 
+import os
+
 from pyspark.sql import functions as F
 
 from codedup.stages.ingest import FILES_SCHEMA, split_invalid
@@ -45,8 +47,6 @@ def test_split_invalid_routes_bad_rows(spark):
 
 
 def test_errors_stage_persisted(spark, tiny, cfg, tmp_path):
-    import os
-
     from codedup import pipeline
 
     res = pipeline.run(spark, [tiny["paths"]["files"]], cfg,
@@ -78,3 +78,61 @@ def test_pipeline_has_id_errors_stage(run_tiny):
 
     assert "id_errors" in pipeline.STAGES
     assert "id_errors" in run_tiny.recomputed_stages
+
+
+def test_id_collision_guard_end_to_end(spark, tiny, cfg, run_tiny, tmp_path, monkeypatch):
+    """Two real keys forced onto one 64-bit id: the pipeline routes both
+    to id_errors, keeps them out of every dedup table, leaves every
+    other file's cluster as the unpatched run has it, and a full resume
+    excludes the same keys without recomputing a stage."""
+    from pyspark.sql import Window
+
+    from codedup import ids, pipeline
+
+    # two files of one repo, each a non-minimal member of a different
+    # exact group of >= 3 files: dropping them changes no representative
+    # and no other file's cluster
+    w = Window.partitionBy("sha256")
+    cand = (
+        run_tiny.fingerprints
+        .withColumn("_n", F.count(F.lit(1)).over(w))
+        .withColumn("_min", F.min("file_id").over(w))
+        .filter((F.col("_n") >= 3) & (F.col("file_id") != F.col("_min")))
+        .select("file_id", "repo", "path", "commit", "sha256")
+        .orderBy("repo", "path")
+        .collect()
+    )
+    a, b = next((x, y) for i, x in enumerate(cand) for y in cand[i + 1:]
+                if x["repo"] == y["repo"] and x["sha256"] != y["sha256"])
+    chosen = {(r["repo"], r["path"], r["commit"]) for r in (a, b)}
+
+    real_file_id_col = ids.file_id_col
+
+    def colliding_file_id_col():
+        hit = F.concat_ws("\x00", *ids.KEY_COLS).isin(
+            *["\x00".join(k) for k in sorted(chosen)])
+        return F.when(hit, F.lit(a["file_id"])).otherwise(real_file_id_col()).alias("file_id")
+
+    monkeypatch.setattr(ids, "file_id_col", colliding_file_id_col)
+    work = str(tmp_path / "w")
+
+    def check_excluded(res):
+        errs = spark.read.parquet(os.path.join(work, "runs", "c", "id_errors")).collect()
+        assert {(r["repo"], r["path"], r["commit"]) for r in errs} == chosen
+        assert {r["message"] for r in errs} == {"64-bit file_id collision"}
+        keys = {f"{r}/{p}@{c}" for r, p, c in chosen}
+        bad_ids = {a["file_id"], b["file_id"]}
+        assert not bad_ids & {r["file_id"] for r in res.clusters.collect()}
+        assert not keys & {r["key"] for r in res.members.collect()}
+        assert not keys & {r["key"] for r in res.actions.collect()}
+        assert not bad_ids & {x for r in res.verified.select("a", "b").collect() for x in r}
+        before = {(r["file_id"], r["cluster_id"]) for r in run_tiny.clusters.collect()
+                  if r["file_id"] not in bad_ids}
+        assert {(r["file_id"], r["cluster_id"]) for r in res.clusters.collect()} == before
+
+    first = pipeline.run(spark, [tiny["paths"]["files"]], cfg, work_dir=work, run_id="c")
+    assert first.recomputed_stages == pipeline.STAGES
+    check_excluded(first)
+    again = pipeline.run(spark, [tiny["paths"]["files"]], cfg, work_dir=work, run_id="c")
+    assert again.recomputed_stages == []
+    check_excluded(again)

@@ -153,23 +153,32 @@ def run(
     fp, _ = split_id_collisions(fp_all, collided_ids(id_errors))
     eedges = stage("exact_edges", lambda: exact_edges(fp))
 
+    # ``cached`` lists the cache files once, before this run appends
+    cache = SignatureCache(store.root, cfg.fingerprint()) if hasattr(store, "root") else None
+    cached = cache.read(spark) if cache is not None else None
+
     def cached_signatures(rep_ids: DataFrame, cfg: DedupConfig) -> DataFrame:
-        cache = SignatureCache(store.root, cfg.fingerprint())
-        cached = cache.read(spark)
-        misses = rep_ids if cached is None else \
-            rep_ids.join(cached.select("file_id"), "file_id", "left_anti")
-        new_sigs = compute_signatures(misses, cfg).localCheckpoint(eager=True)
-        # FAULT sentinels are this run's record, not a reusable result:
-        # caching one would make every later run skip that file
-        cache.append(new_sigs.filter(F.col("n_shingles") >= 0))
         if cached is None:
-            return new_sigs
+            return compute_signatures(rep_ids, cfg)
+        misses = rep_ids.join(cached.select("file_id"), "file_id", "left_anti")
         hits = cached.join(rep_ids.select("file_id"), "file_id", "left_semi")
-        return hits.unionByName(new_sigs)
+        return hits.unionByName(compute_signatures(misses, cfg))
+
+    def chain_stage(name: str, build) -> DataFrame:
+        out = stage(name, build)
+        if name == "signatures" and cache is not None and name in recomputed:
+            # appended from the committed stage table, so the kernel runs
+            # once per representative.  FAULT sentinels are this run's
+            # record, not a reusable result: caching one would make every
+            # later run skip that file
+            new_sigs = out.filter(F.col("n_shingles") >= 0)
+            if cached is not None:
+                new_sigs = new_sigs.join(cached.select("file_id"), "file_id", "left_anti")
+            cache.append(new_sigs)
+        return out
 
     _, _, verified = minhash_chain(
-        fp, cfg, stage,
-        sign=cached_signatures if hasattr(store, "root") else None)
+        fp, cfg, chain_stage, sign=cached_signatures if cache is not None else None)
 
     def build_clusters() -> DataFrame:
         near_edges = (

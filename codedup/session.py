@@ -18,6 +18,16 @@ from pyspark.sql import SparkSession
 ARROW_MAX_RECORDS = 2048
 
 
+def _local_cores(master: str | None) -> int | None:
+    """N of a ``local[N]`` master; None for any other master (a cluster
+    manager, ``local[*]``, or spark-submit deciding)."""
+    if master and master.startswith("local["):
+        n = master[6:].rstrip("]")
+        if n.isdigit():
+            return int(n)
+    return None
+
+
 def _driver_memory(master: str | None) -> str:
     """Driver heap sizing.  In local mode the driver JVM IS every
     executor: all shuffle blocks, broadcast builds and checkpointed
@@ -31,11 +41,26 @@ def _driver_memory(master: str | None) -> str:
     env = os.environ.get("CODEDUP_DRIVER_MEMORY")
     if env:
         return env
-    if master and master.startswith("local["):
-        n = master[6:].rstrip("]")
-        if n.isdigit():
-            return f"{max(8, min(int(n) * 3 // 4, 48))}g"
-    return "8g"
+    n = _local_cores(master)
+    return f"{max(8, min(n * 3 // 4, 48))}g" if n else "8g"
+
+
+def default_jvm_opts(master: str | None) -> str:
+    """The JVM options ``build_session`` gives the driver and executors
+    unless CODEDUP_JVM_OPTS replaces the whole string.
+
+    ``-XX:UseAVX=2`` caps the vector ISA: OpenJDK 17's AVX-512
+    arraycopy stubs (jlong_disjoint_arraycopy_avx3) segfaulted
+    intermittently on a virtualized CPU when copying multi-MB primitive
+    arrays (twice under the blocked-sweep shuffle, SEGV_MAPERR inside
+    the stub); AVX2 copies are within noise for this workload.
+
+    ``local[N]`` adds ``-XX:CICompilerCount=max(2, N // 2)``, the JIT
+    compiler threads (why: ``build_session``).  Tiered compilation
+    rejects a count below 2, which is one C1 and one C2 thread.  Any
+    other master keeps HotSpot's own sizing."""
+    n = _local_cores(master)
+    return "-XX:UseAVX=2" + (f" -XX:CICompilerCount={max(2, n // 2)}" if n else "")
 
 
 def build_session(
@@ -44,6 +69,22 @@ def build_session(
     shuffle_partitions: int = 32,
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
+    """The engine's SparkSession.  ``master=None`` leaves the master to
+    spark-submit.
+
+    For ``local[N]`` the driver heap (``_driver_memory``) and the JIT
+    compiler threads (``default_jvm_opts``) follow N, because in local
+    mode the driver JVM is every executor.  The compiler rule is
+    ``-XX:CICompilerCount=max(2, N // 2)``.  A run of seconds spends
+    much of its CPU compiling, mostly in C2.  HotSpot's own sizing gives
+    4 cores one C1 and two C2 threads, and the second C2 thread compiles
+    code that then runs for only seconds.  On a 4-core host, one
+    ``batch_dedup`` benchmark run under ``-XX:+CITime`` compiled for
+    66.8 s (C2 55.5 s) with HotSpot's sizing and 39.1 s (C2 29.1 s)
+    with one C2 thread.  Only N = 4 was measured.  HotSpot sizes from
+    the host's cores, not from N; on an N-core host its count is 3 at
+    N = 4, 4 at 8 and 15 at 32, against the rule's 2, 4 and 16.
+    CODEDUP_JVM_OPTS replaces the whole option string."""
     # One BLAS thread per task slot (guide §4.5): every executor core
     # runs one Python worker, and numpy's OpenBLAS otherwise spawns
     # nproc threads PER WORKER — on a 32-slot host that is 32x32 = 1024
@@ -55,7 +96,7 @@ def build_session(
     for var in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS",
                 "MKL_NUM_THREADS", "NUMEXPR_NUM_THREADS"):
         os.environ.setdefault(var, blas)
-    jvm_opts = os.environ.get("CODEDUP_JVM_OPTS", "-XX:UseAVX=2")
+    jvm_opts = os.environ.get("CODEDUP_JVM_OPTS", default_jvm_opts(master))
     b = SparkSession.builder.appName(app_name)
     # the same pinning must reach remote executors' Python workers when
     # running under a real cluster manager (local mode inherits the
@@ -75,13 +116,6 @@ def build_session(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.warehouse.dir", os.path.join(tempfile.gettempdir(), "codedup_warehouse"))
         .config("spark.driver.memory", _driver_memory(master))
-        # cap vector ISA at AVX2: OpenJDK 17's AVX-512 arraycopy stubs
-        # (jlong_disjoint_arraycopy_avx3) segfault intermittently on
-        # this VM's virtualized CPU when copying multi-MB primitive
-        # arrays (reproduced twice under the blocked-sweep shuffle,
-        # SEGV_MAPERR inside the stub).  AVX2 copies are within noise
-        # for this workload; a deployment on trusted hardware can
-        # override via CODEDUP_JVM_OPTS.
         .config("spark.driver.extraJavaOptions", jvm_opts)
         .config("spark.executor.extraJavaOptions", jvm_opts)
         .config("spark.ui.enabled", "false")

@@ -36,12 +36,13 @@ def cluster_stats(ranked: DataFrame) -> DataFrame:
 
     A cluster whose members all share one sha256 is an exact group
     (match_type='exact', dedup.py:30); otherwise it contains true
-    near-duplicates."""
+    near-duplicates.  ``min = max`` decides it in the one hash
+    aggregate, where a distinct count would plan a second one."""
     return ranked.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("n_files"),
         F.sum("size").alias("total_size"),
         (F.sum("size") - F.max("size")).alias("potential_savings"),
-        F.countDistinct("sha256").alias("n_distinct_contents"),
+        (F.min("sha256") == F.max("sha256")).alias("exact"),
     )
 
 
@@ -301,28 +302,25 @@ def reference_style_report(fp: DataFrame, ranked: DataFrame, verified: DataFrame
 
 def summary(fp: DataFrame, ranked: DataFrame) -> dict:
     """Driver-side small dict mirroring the reference report summary
-    (report1.json:4-17).  Two aggregate actions: corpus totals over
-    ``fp`` and group totals over the per-cluster stats of ``ranked``
-    (each starts more than one Spark job; tests/test_job_counts.py pins
-    the pipeline's count)."""
+    (report1.json:4-17).  One aggregate action: the corpus totals over
+    ``fp`` cross-joined with the group totals over the per-cluster
+    stats of ``ranked`` (both single-row; tests/test_job_counts.py
+    pins the pipeline's job count)."""
     totals = fp.agg(
         F.count(F.lit(1)).alias("total_files"), F.sum("size").alias("total_size")
-    ).first()
-    agg = (
-        cluster_stats(ranked)
-        .agg(
-            F.count(F.lit(1)).alias("groups"),
-            F.sum("n_files").alias("files_in_groups"),
-            F.sum(F.when(F.col("n_distinct_contents") == 1, 1).otherwise(0)).alias("exact_groups"),
-            F.sum(F.when(F.col("n_distinct_contents") > 1, 1).otherwise(0)).alias("near_groups"),
-            F.sum("potential_savings").alias("potential_savings"),
-        )
-        .first()
     )
+    groups = cluster_stats(ranked).agg(
+        F.count(F.lit(1)).alias("groups"),
+        F.sum("n_files").alias("files_in_groups"),
+        F.sum(F.col("exact").cast("int")).alias("exact_groups"),
+        F.sum((~F.col("exact")).cast("int")).alias("near_groups"),
+        F.sum("potential_savings").alias("potential_savings"),
+    )
+    agg = totals.crossJoin(groups).first()
     return {
         "summary": {
-            "total_files": int(totals["total_files"] or 0),
-            "total_size_bytes": int(totals["total_size"] or 0),
+            "total_files": int(agg["total_files"] or 0),
+            "total_size_bytes": int(agg["total_size"] or 0),
             "duplicate_groups": int(agg["groups"] or 0),
             "files_in_groups": int(agg["files_in_groups"] or 0),
             "exact_only_groups": int(agg["exact_groups"] or 0),

@@ -18,11 +18,13 @@ from pyspark.sql import types as T
 from codedup import pipeline
 from codedup.storage import ParquetStorage
 
-# measured on the tiny corpus: a cold run starts 41 jobs and a full
-# resume 7 (the collided-id read plus the summary's two aggregations);
-# before the guard ran once and reads carried their schema, 64 and 20
-COLD_RUN_MAX_JOBS = 41
-RESUME_MAX_JOBS = 7
+# measured on the tiny corpus: a cold run starts 39 jobs and a full
+# resume 6 (the collided-id read plus the summary's one aggregate
+# action); 41 and 7 while the summary ran two actions and the signature
+# cache was appended from an eager checkpoint, 64 and 20 before the
+# guard ran once and reads carried their schema
+COLD_RUN_MAX_JOBS = 39
+RESUME_MAX_JOBS = 6
 
 
 @contextlib.contextmanager

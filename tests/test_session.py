@@ -1,15 +1,30 @@
-"""build_session's JVM pin: the AVX2 cap (or its CODEDUP_JVM_OPTS
-override) must be active in the running driver JVM, and a flag the JVM
-did not start with is reported on stderr."""
+"""build_session's JVM options: the default string follows the master
+(the AVX2 cap everywhere, the JIT compiler threads for ``local[N]``),
+it (or its CODEDUP_JVM_OPTS override) must be active in the running
+driver JVM, and a flag the JVM did not start with is reported on
+stderr."""
 
 import os
 
-from codedup.session import missing_jvm_opts
+import pytest
+
+from codedup.session import default_jvm_opts, missing_jvm_opts
+
+
+@pytest.mark.parametrize("master, opts", [
+    ("local[1]", "-XX:UseAVX=2 -XX:CICompilerCount=2"),   # tiered JIT's floor
+    ("local[4]", "-XX:UseAVX=2 -XX:CICompilerCount=2"),
+    ("local[32]", "-XX:UseAVX=2 -XX:CICompilerCount=16"),
+    (None, "-XX:UseAVX=2"),                              # HotSpot's own sizing
+])
+def test_default_jvm_opts(master, opts):
+    assert default_jvm_opts(master) == opts
 
 
 def test_avx2_pin_active_in_driver_jvm(spark, capsys):
-    # ``spark`` is the shared session from conftest, built by build_session
-    opts = os.environ.get("CODEDUP_JVM_OPTS", "-XX:UseAVX=2")
+    # ``spark`` is the shared session from conftest, built by
+    # build_session("local[4]")
+    opts = os.environ.get("CODEDUP_JVM_OPTS", default_jvm_opts("local[4]"))
     assert missing_jvm_opts(spark, opts) == []
     assert "WARNING" not in capsys.readouterr().err
 

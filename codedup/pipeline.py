@@ -164,21 +164,17 @@ def run(
         hits = cached.join(rep_ids.select("file_id"), "file_id", "left_semi")
         return hits.unionByName(compute_signatures(misses, cfg))
 
-    def chain_stage(name: str, build) -> DataFrame:
-        out = stage(name, build)
-        if name == "signatures" and cache is not None and name in recomputed:
-            # appended from the committed stage table, so the kernel runs
-            # once per representative.  FAULT sentinels are this run's
-            # record, not a reusable result: caching one would make every
-            # later run skip that file
-            new_sigs = out.filter(F.col("n_shingles") >= 0)
-            if cached is not None:
-                new_sigs = new_sigs.join(cached.select("file_id"), "file_id", "left_anti")
-            cache.append(new_sigs)
-        return out
-
-    _, _, verified = minhash_chain(
-        fp, cfg, chain_stage, sign=cached_signatures if cache is not None else None)
+    _, sigs, verified = minhash_chain(
+        fp, cfg, stage, sign=cached_signatures if cache is not None else None)
+    if cache is not None and "signatures" in recomputed:
+        # appended from the committed stage table, so the kernel runs
+        # once per representative.  FAULT sentinels are this run's
+        # record, not a reusable result: caching one would make every
+        # later run skip that file
+        new_sigs = sigs.filter(F.col("n_shingles") >= 0)
+        if cached is not None:
+            new_sigs = new_sigs.join(cached.select("file_id"), "file_id", "left_anti")
+        cache.append(new_sigs)
 
     def build_clusters() -> DataFrame:
         near_edges = (

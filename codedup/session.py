@@ -55,12 +55,13 @@ def default_jvm_opts(master: str | None) -> str:
     arrays (twice under the blocked-sweep shuffle, SEGV_MAPERR inside
     the stub); AVX2 copies are within noise for this workload.
 
-    ``local[N]`` adds ``-XX:CICompilerCount=max(2, N // 2)``, the JIT
-    compiler threads (why: ``build_session``).  Tiered compilation
-    rejects a count below 2, which is one C1 and one C2 thread.  Any
-    other master keeps HotSpot's own sizing."""
+    ``local[N]`` with N <= 4 adds ``-XX:CICompilerCount=2``, one C1 and
+    one C2 JIT thread (why: ``build_session``).  2 is the least tiered
+    compilation accepts and the least HotSpot picks itself, so the flag
+    never raises HotSpot's count on any host.  A larger N, and any
+    other master, keeps HotSpot's own sizing."""
     n = _local_cores(master)
-    return "-XX:UseAVX=2" + (f" -XX:CICompilerCount={max(2, n // 2)}" if n else "")
+    return "-XX:UseAVX=2" + (" -XX:CICompilerCount=2" if n and n <= 4 else "")
 
 
 def build_session(
@@ -74,16 +75,13 @@ def build_session(
 
     For ``local[N]`` the driver heap (``_driver_memory``) and the JIT
     compiler threads (``default_jvm_opts``) follow N, because in local
-    mode the driver JVM is every executor.  The compiler rule is
-    ``-XX:CICompilerCount=max(2, N // 2)``.  A run of seconds spends
-    much of its CPU compiling, mostly in C2.  HotSpot's own sizing gives
-    4 cores one C1 and two C2 threads, and the second C2 thread compiles
-    code that then runs for only seconds.  On a 4-core host, one
-    ``batch_dedup`` benchmark run under ``-XX:+CITime`` compiled for
-    66.8 s (C2 55.5 s) with HotSpot's sizing and 39.1 s (C2 29.1 s)
-    with one C2 thread.  Only N = 4 was measured.  HotSpot sizes from
-    the host's cores, not from N; on an N-core host its count is 3 at
-    N = 4, 4 at 8 and 15 at 32, against the rule's 2, 4 and 16.
+    mode the driver JVM is every executor.  A run of seconds spends much
+    of its CPU compiling, mostly in C2.  HotSpot sizes its compiler
+    threads from the host's cores, not from N: 4 cores get one C1 and
+    two C2 threads, and the second C2 thread compiles code that then
+    runs for only seconds.  So N <= 4 runs one C2 thread.  Only N = 4 on
+    a 4-core host was measured (see README); a larger N keeps HotSpot's
+    sizing.
     CODEDUP_JVM_OPTS replaces the whole option string."""
     # One BLAS thread per task slot (guide §4.5): every executor core
     # runs one Python worker, and numpy's OpenBLAS otherwise spawns

@@ -1,5 +1,5 @@
 """build_session's JVM options: the default string follows the master
-(the AVX2 cap everywhere, the JIT compiler threads for ``local[N]``),
+(the AVX2 cap everywhere, one C2 JIT thread for ``local[N]``, N <= 4),
 it (or its CODEDUP_JVM_OPTS override) must be active in the running
 driver JVM, and a flag the JVM did not start with is reported on
 stderr."""
@@ -14,8 +14,9 @@ from codedup.session import default_jvm_opts, missing_jvm_opts
 @pytest.mark.parametrize("master, opts", [
     ("local[1]", "-XX:UseAVX=2 -XX:CICompilerCount=2"),   # tiered JIT's floor
     ("local[4]", "-XX:UseAVX=2 -XX:CICompilerCount=2"),
-    ("local[32]", "-XX:UseAVX=2 -XX:CICompilerCount=16"),
-    (None, "-XX:UseAVX=2"),                              # HotSpot's own sizing
+    ("local[8]", "-XX:UseAVX=2"),                        # HotSpot's own sizing
+    ("local[32]", "-XX:UseAVX=2"),
+    (None, "-XX:UseAVX=2"),
 ])
 def test_default_jvm_opts(master, opts):
     assert default_jvm_opts(master) == opts

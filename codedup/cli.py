@@ -108,7 +108,11 @@ def main(argv: list[str] | None = None) -> int:
         }.items()
         if v is not None
     }
-    cfg = DedupConfig(**overrides)
+    try:
+        cfg = DedupConfig(**overrides)
+    except ValueError as e:
+        print(f"error: {e}", file=sys.stderr)
+        return 2
 
     from codedup import pipeline
     from codedup.session import build_session
@@ -144,7 +148,7 @@ def main(argv: list[str] | None = None) -> int:
         if args.full_report or args.html:
             from codedup.stages.report import reference_style_report
 
-            full = reference_style_report(res.fingerprints, res.members, res.verified)
+            full = reference_style_report(res.report, res.members, res.verified)
             out = full if args.full_report else dict(res.report)
         else:
             out = dict(res.report)

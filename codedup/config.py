@@ -33,10 +33,9 @@ class DedupConfig:
     normalize_ws: bool = True     # strip trailing ws per line, CRLF->LF before shingling
 
     # --- signatures ---
-    num_perm: int = 128           # MinHash permutations (north_star: 128)
     minhash_seed: int = 42
 
-    # --- LSH banding (north_star: b=16, r=8) ---
+    # --- LSH banding (north_star: b=16, r=8); num_perm = bands * rows_per_band ---
     bands: int = 16
     rows_per_band: int = 8
 
@@ -69,6 +68,11 @@ class DedupConfig:
     hot_bucket_mode: str = "star"
     salt_buckets: int = 8
 
+    @property
+    def num_perm(self) -> int:
+        """MinHash permutations: one signature slot per band row (north_star: 128)."""
+        return self.bands * self.rows_per_band
+
     def fingerprint(self) -> str:
         """Stable 16-hex config id; keys checkpoint manifests."""
         blob = json.dumps(asdict(self), sort_keys=True).encode()
@@ -78,10 +82,10 @@ class DedupConfig:
         return replace(self, **kw)
 
     def __post_init__(self) -> None:
-        if self.bands * self.rows_per_band != self.num_perm:
+        if self.bands < 1 or self.rows_per_band < 1:
             raise ValueError(
-                f"bands*rows_per_band must equal num_perm "
-                f"({self.bands}*{self.rows_per_band} != {self.num_perm})"
+                f"bands and rows_per_band must be positive "
+                f"(got {self.bands}, {self.rows_per_band})"
             )
         if self.shingle_mode not in ("char", "token"):
             raise ValueError(f"unknown shingle_mode {self.shingle_mode!r}")

@@ -82,8 +82,11 @@ class IcebergStorage:
               t_start: float | None = None) -> DataFrame:
         """Data + manifest in ONE atomic Iceberg commit
         (createOrReplace); returns the re-read table so downstream
-        consumers share the committed snapshot."""
+        consumers share the committed snapshot.  The frame is evaluated
+        once: the lazy local checkpoint stores its blocks while the row
+        count for the manifest runs, and the commit writes those blocks."""
         t0 = t_start if t_start is not None else time.time()
+        df = df.localCheckpoint(eager=False)
         rows = df.count()
         manifest = {
             "stage": stage,

@@ -242,9 +242,11 @@ def greedy_groups(verified: DataFrame, order: DataFrame) -> list[list[str]]:
     return groups
 
 
-def reference_style_report(fp: DataFrame, ranked: DataFrame, verified: DataFrame) -> dict:
+def reference_style_report(summary_rep: dict, ranked: DataFrame, verified: DataFrame) -> dict:
     """Full report in the reference's JSON shape (cli.py:285-321,
     report1.json): summary + exact_duplicates[] + similar_groups[].
+    ``summary_rep`` is the run's ``summary(fp, ranked)`` (the pipeline's
+    ``report``), passed in rather than recomputed.
 
     A cluster whose members share one sha256 maps to the reference's
     exact_duplicates entry; clusters with >1 distinct content map to
@@ -293,7 +295,7 @@ def reference_style_report(fp: DataFrame, ranked: DataFrame, verified: DataFrame
             })
 
     return {
-        **summary(fp, ranked),
+        **summary_rep,
         "exact_duplicates": exact,
         "similar_groups": similar,
         "errors": [],

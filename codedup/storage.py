@@ -37,6 +37,24 @@ from pyspark.sql import types as T
 from codedup.stages.signatures import SIG_SCHEMA
 
 
+def partition_rows(path: str) -> dict[str, int]:
+    """Per-partition lineage of a written stage: rows per write task,
+    from the parquet footers (metadata-only, no Spark job).  Spark names
+    a task's files ``part-<id>-...`` with the id zero-padded to at least
+    5 digits, so the key is the whole id: ``part-100000`` and
+    ``part-10000`` are different tasks."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    out: dict[str, int] = {}
+    for i, f in enumerate(sorted(glob.glob(os.path.join(path, "*.parquet")))):
+        name = os.path.basename(f)
+        key = name.split("-")[1] if "-" in name else str(i)
+        out[key] = out.get(key, 0) + pq.ParquetFile(f).metadata.num_rows
+    return out
+
+
 class ParquetStorage:
     def __init__(self, root: str, run_id: str, config_fp: str):
         self.root = root
@@ -86,18 +104,7 @@ class ParquetStorage:
         t0 = t_start if t_start is not None else time.time()
         path = self.stage_dir(stage)
         df.write.mode("overwrite").parquet(path)
-        # per-partition lineage from parquet footers (one file per write
-        # task) — metadata-only, no extra Spark job
-        import glob
-
-        import pyarrow.parquet as pq
-
-        part_files = sorted(glob.glob(os.path.join(path, "*.parquet")))
-        per_part = {
-            os.path.basename(f).split("-")[1][:5] if "-" in os.path.basename(f) else str(i):
-                pq.ParquetFile(f).metadata.num_rows
-            for i, f in enumerate(part_files)
-        }
+        per_part = partition_rows(path)
         manifest = {
             "stage": stage,
             "run_id": self.run_id,

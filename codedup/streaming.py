@@ -44,7 +44,7 @@ from codedup.stages.exact import representatives
 from codedup.stages.fingerprint import fingerprint
 from codedup.stages.ingest import FILES_SCHEMA
 from codedup.stages.signatures import compute_signatures
-from codedup.stages.verify import verify_pairs
+from codedup.stages.verify import VERIFIED_SCHEMA, verify_pairs
 
 
 class IncrementalDedup:
@@ -210,10 +210,7 @@ class IncrementalDedup:
     def pairs(self) -> DataFrame:
         df = self._read_or_none(self.pairs_dir)
         if df is None:
-            return self.spark.createDataFrame(
-                [], "a long, b long, jaccard double, n_inter long, n_union long,"
-                    " hamming int, lcs_frac double, kind string"
-            )
+            return self.spark.createDataFrame([], VERIFIED_SCHEMA)
         return df
 
     def _bucket_stats(self) -> DataFrame | None:

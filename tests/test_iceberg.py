@@ -34,19 +34,47 @@ class FakeWriterV2:
         return self
 
     def createOrReplace(self):
-        # atomic: data + properties land together
+        # atomic: data + properties land together; writing runs the plan
+        self.df.evaluate()
         self.store.tables[self.ident] = {"df": self.df, "props": dict(self.props)}
 
 
 class FakeDF:
+    """A lazy frame: every action re-runs its plan (counted in
+    ``evals``) unless it goes through a local checkpoint."""
+
     def __init__(self, rows, spark):
         self.rows, self.spark = rows, spark
+        self.evals = 0
+
+    def evaluate(self):
+        self.evals += 1
+        return self.rows
 
     def count(self):
-        return len(self.rows)
+        return len(self.evaluate())
 
     def writeTo(self, ident):
         return FakeWriterV2(self, ident, self.spark)
+
+    def localCheckpoint(self, eager=True):
+        return FakeCheckpoint(self, eager)
+
+
+class FakeCheckpoint(FakeDF):
+    """The parent's plan runs on the first action (or at once when
+    eager); later actions read the stored rows."""
+
+    def __init__(self, parent, eager):
+        super().__init__(None, parent.spark)
+        self.parent = parent
+        if eager:
+            self.evaluate()
+
+    def evaluate(self):
+        if self.rows is None:
+            self.rows = self.parent.evaluate()
+        return self.rows
 
 
 class FakeCatalog:
@@ -111,9 +139,10 @@ def test_write_commits_data_and_manifest_atomically(fake):
     st = IcebergStorage(fake, "lake", "codedup", "r1", "fp1")
     df = FakeDF([1, 2, 3], fake)
     out = st.write(df, "signatures", extra={"note": "x"})
-    assert out is df
     ident = "lake.codedup.r1_signatures"
     assert ident in fake.tables
+    assert out is fake.tables[ident]["df"]     # the committed table
+    assert df.evals == 1                       # the count and the commit share one run
     m = json.loads(fake.tables[ident]["props"][MANIFEST_PROP])
     assert m["rows"] == 3 and m["config_fp"] == "fp1" and m["note"] == "x"
     assert st.is_complete("signatures")

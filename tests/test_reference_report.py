@@ -2,10 +2,12 @@
 
 
 def test_reference_style_report(run_tiny, oracle_tiny):
-    from codedup.stages.report import reference_style_report
+    from codedup.stages.report import reference_style_report, summary
 
-    rep = reference_style_report(run_tiny.fingerprints, run_tiny.members, run_tiny.verified)
+    rep = reference_style_report(run_tiny.report, run_tiny.members, run_tiny.verified)
     assert set(rep) == {"summary", "exact_duplicates", "similar_groups", "errors"}
+    # the run's summary is passed through: equal to recomputing it
+    assert rep["summary"] == summary(run_tiny.fingerprints, run_tiny.members)["summary"]
 
     # exact groups = clusters whose members share one sha (matches the
     # oracle's sha-identical groups that are NOT merged into near ones)

@@ -52,6 +52,21 @@ def test_manifests_record_lineage(work, cfg):
         assert m["n_partitions"] >= 1
 
 
+def test_partition_ids_past_five_digits(tmp_path):
+    """Spark pads part ids to at least 5 digits, so a stage written by
+    more than 100,000 tasks has part-100000 beside part-10000: two
+    partitions, every row counted."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from codedup.storage import partition_rows
+
+    for pid, n in (("10000", 2), ("100000", 3)):
+        pq.write_table(pa.table({"x": list(range(n))}),
+                       str(tmp_path / f"part-{pid}-5f1e-c000.snappy.parquet"))
+    assert partition_rows(str(tmp_path)) == {"10000": 2, "100000": 3}
+
+
 def test_signature_cache_incremental(spark, tiny, cfg, work):
     """File-level incrementality: signatures for already-seen file_ids
     are reused via anti-join (cache.py:63-126 analog)."""

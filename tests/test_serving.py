@@ -39,6 +39,23 @@ def test_cli_query_runner():
     assert len(rows) == 6 and {"l_returnflag", "sum_qty"} <= set(rows[0])
 
 
+def test_banding_flags_derive_num_perm(tmp_path):
+    """num_perm is bands * rows_per_band, so --bands or --rows-per-band
+    alone is a valid config: a missing source is the error (exit 2),
+    and a non-positive band shape is rejected with exit 2 too."""
+    from codedup import cli
+    from codedup.config import DedupConfig
+
+    assert DedupConfig(bands=32).num_perm == 256
+    assert DedupConfig().num_perm == 128
+    with pytest.raises(ValueError):
+        DedupConfig(rows_per_band=0)
+    args = ["--source", str(tmp_path / "missing"), "--work-dir", str(tmp_path)]
+    assert cli.main(args + ["--bands", "32"]) == 2
+    assert cli.main(args + ["--rows-per-band", "4"]) == 2
+    assert cli.main(args + ["--bands", "0"]) == 2
+
+
 def test_format_size_python_and_column_agree(spark):
     vals = [0, 17, 1023, 1024, 1536, 1048576, 3 * 1024 ** 3, 5 * 1024 ** 4]
     py = [format_size(v) for v in vals]
@@ -84,7 +101,7 @@ def test_delete_sink_plans_only_exact_dups_and_is_idempotent(spark, tmp_path):
 def test_html_report_renders(run_tiny):
     from codedup.stages.report import reference_style_report
 
-    rep = reference_style_report(run_tiny.fingerprints, run_tiny.members,
+    rep = reference_style_report(run_tiny.report, run_tiny.members,
                                  run_tiny.verified)
     html = render_html_report(rep)
     assert html.startswith("<!doctype html>")

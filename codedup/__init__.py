@@ -10,8 +10,8 @@ single-process Python loops — see /root/reference/src/image_dedup/dedup.py):
 
     files (repo, path, commit, lang, content)
       -> fingerprint: file_id=xxhash64, sha256=sha2(content), size      [JVM codegen]
-      -> exact clusters: groupBy(sha256)                                [shuffle hash agg]
-      -> representatives (one per distinct content)                     [window]
+      -> sha groups: one row per distinct content (rep = min file_id,   [one groupBy(sha256)]
+         sorted member ids -> exact edges)
       -> signatures: shingles -> 128-perm MinHash + 64-bit SimHash      [Arrow pandas UDF]
       -> LSH banding b=16 x r=8 -> band_hash                            [posexplode + xxhash64]
       -> candidate pairs: skew-aware bucket join (cap + star collapse)  [shuffle join, AQE]

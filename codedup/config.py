@@ -21,11 +21,13 @@ class DedupConfig:
     field, so a field that is an execution shape (partition or block
     counts, batch sizes) would invalidate checkpoints for nothing."""
 
-    # Bump whenever kernels.py changes hash semantics: it participates in
-    # the fingerprint, so stale signature caches self-invalidate (the
-    # reference's cache has no such guard — a silent-staleness bug class).
-    kernel_version: int = 4  # v4: char shingles window CODE POINTS (not
-    #     utf-8 bytes) and shingle_mode="token" is implemented
+    # Bump whenever a kernel's hash semantics or a stage table's layout
+    # changes: it participates in the fingerprint, so stale signature
+    # caches and stage checkpoints self-invalidate (the reference's
+    # cache has no such guard — a silent-staleness bug class).
+    kernel_version: int = 5  # v5: the reps stage is the sha-group table
+    #     (file_id, sha256, content, members); v4: char shingles window
+    #     CODE POINTS (not utf-8 bytes) and shingle_mode="token" is implemented
 
     # --- shingling (replaces image decode, hasher.py:19-47) ---
     shingle_k: int = 9            # char n-gram length

@@ -6,9 +6,12 @@ DAG of DataFrame->DataFrame stages, each optionally committed to a
 checkpoint table.  ``run`` with resume=True skips every stage whose
 manifest is already committed under the current config fingerprint —
 the north_rule's "resumes from the last completed stage without
-recomputation" (tested in tests/test_resume.py).  The MinHash part of
-the DAG is ``minhash_chain``, shared with the LSH catalog queries,
-which materialize each stage in session (``checkpoint_stage``).
+recomputation" (tested in tests/test_resume.py).  The exact phase is
+one sha-group table (``reps``, one ``groupBy(sha256)``): the MinHash
+part of the DAG, ``minhash_chain``, runs on its representatives, and
+the exact edges are a projection of its member arrays.  The LSH catalog
+queries share the same table and chain, materializing each stage in
+session (``checkpoint_stage``).
 """
 
 from __future__ import annotations
@@ -38,7 +41,6 @@ STAGES = [
     "errors",
     "fingerprint",
     "id_errors",
-    "exact_edges",
     "reps",
     "signatures",
     "candidates",
@@ -70,31 +72,29 @@ def checkpoint_stage(name: str, build) -> DataFrame:
     return build().localCheckpoint(eager=True)
 
 
-def minhash_chain(fp: DataFrame, cfg: DedupConfig, stage, sign=None):
-    """fingerprints -> reps -> signatures -> candidates -> verified,
-    each built through ``stage(name, build)``; LSH banding runs inside
-    the candidates stage (a pure JVM projection of the signatures, not
-    worth a checkpoint of its own).  ``sign`` replaces
-    ``compute_signatures(rep_ids, cfg)`` (the pipeline's cross-run
-    SignatureCache).  Returns (reps, signatures, verified)."""
-    # materialized: consumed 3x downstream (signatures + both verify
-    # content joins) — deriving it each time would re-shuffle the full
-    # content column through the dedup window every consumer
-    reps = stage("reps", lambda: representatives(fp))
+def minhash_chain(reps: DataFrame, cfg: DedupConfig, stage, sign=None):
+    """reps -> signatures -> candidates -> verified, each built through
+    ``stage(name, build)``; LSH banding runs inside the candidates stage
+    (a pure JVM projection of the signatures, not worth a checkpoint of
+    its own).  ``reps`` is the caller's materialized
+    ``representatives`` table (read 3x: signatures and both verify
+    content joins).  ``sign`` replaces ``compute_signatures(rep_ids,
+    cfg)`` (the pipeline's cross-run SignatureCache).  Returns
+    (signatures, verified)."""
     # explicit spread before the signature kernel: AQE's advisory-size
     # coalescing shrinks the representatives exchange (and a parquet
     # re-read packs small files) into a handful of partitions — right
     # for byte-bound stages, wrong for this CPU-bound Arrow stage (same
     # rationale as the verify-stage repartition)
     rep_ids = reps.select("file_id", "content").repartition(
-        fp.sparkSession.sparkContext.defaultParallelism)
+        reps.sparkSession.sparkContext.defaultParallelism)
     sigs = stage("signatures", lambda: (sign or compute_signatures)(rep_ids, cfg))
     # FAULT sentinel rows (n_shingles = -1, see signatures.py) stay
     # visible in the signatures table but never reach banding/verification
     good_sigs = sigs.filter(F.col("n_shingles") >= 0)
     cands = stage("candidates", lambda: candidate_pairs(band_rows(good_sigs, cfg), cfg))
     verified = stage("verified", lambda: verify_pairs(cands, reps, sigs, cfg))
-    return reps, sigs, verified
+    return sigs, verified
 
 
 def run(
@@ -151,7 +151,9 @@ def run(
         F.lit("64-bit file_id collision").alias("message"),
     ))
     fp, _ = split_id_collisions(fp_all, collided_ids(id_errors))
-    eedges = stage("exact_edges", lambda: exact_edges(fp))
+    # the one sha-group table: LSH runs on its representatives, and its
+    # member arrays give the exact edges
+    reps = stage("reps", lambda: representatives(fp))
 
     # ``cached`` lists the cache files once, before this run appends
     cache = SignatureCache(store.root, cfg.fingerprint()) if hasattr(store, "root") else None
@@ -164,8 +166,8 @@ def run(
         hits = cached.join(rep_ids.select("file_id"), "file_id", "left_semi")
         return hits.unionByName(compute_signatures(misses, cfg))
 
-    _, sigs, verified = minhash_chain(
-        fp, cfg, stage, sign=cached_signatures if cache is not None else None)
+    sigs, verified = minhash_chain(
+        reps, cfg, stage, sign=cached_signatures if cache is not None else None)
     if cache is not None and "signatures" in recomputed:
         # appended from the committed stage table, so the kernel runs
         # once per representative.  FAULT sentinels are this run's
@@ -181,7 +183,7 @@ def run(
             verified.filter(F.col("kind") != "fault")  # fault rows are recorded, not clustered
             .select(F.col("a").alias("u"), F.col("b").alias("v"))
         )
-        edges = near_edges.unionByName(eedges)
+        edges = near_edges.unionByName(exact_edges(reps))
         return connected_components(edges)
 
     clusters = stage("clusters", build_clusters)

@@ -254,16 +254,16 @@ GROUP BY doc_id
 # ---------------------------------------------------------------------------
 
 # In-session reuse of the tables several catalog queries share (the
-# verified pairs per config, the doc clusters, the winnowing
-# fingerprints): the query-layer analog of the pipeline's stage reuse.
-# _memo is the one get-or-build; _PAIRS_CACHE is keyed by (application
-# id, corpus dir, tag) and BOUNDED: entries from other sessions are
-# dropped on insert (their checkpointed blocks died with that session)
-# and the count is capped, evicting oldest first.  Every entry is a
-# pipeline.checkpoint_stage (local checkpoint), so no CacheManager
-# entry exists and a dropped reference frees its blocks through the
-# ContextCleaner.  Cross-session reuse is pipeline.run's job (resumable
-# parquet stages under a work dir).
+# documents' sha groups, the verified pairs per config, the doc
+# clusters, the winnowing fingerprints): the query-layer analog of the
+# pipeline's stage reuse.  _memo is the one get-or-build; _PAIRS_CACHE
+# is keyed by (application id, corpus dir, tag) and BOUNDED: entries
+# from other sessions are dropped on insert (their checkpointed blocks
+# died with that session) and the count is capped, evicting oldest
+# first.  Every entry is a pipeline.checkpoint_stage (local
+# checkpoint), so no CacheManager entry exists and a dropped reference
+# frees its blocks through the ContextCleaner.  Cross-session reuse is
+# pipeline.run's job (resumable parquet stages under a work dir).
 _PAIRS_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 _PAIRS_CACHE_CAP = 8
 
@@ -303,39 +303,38 @@ def _minhash_pipeline_pairs(spark: SparkSession, sf_dir: str, cfg: DedupConfig) 
     re-expanded; returns (a, b, jaccard_ppm) over doc_ids.  The stage
     chain is pipeline.minhash_chain with every stage checkpointed in
     session; the result is memoized per (session, corpus, config) —
-    see _memo.  The re-expansion reads one
-    ``groupBy(sha256)`` table: per-row memory is one sha group's
-    sorted doc_id array, 8 bytes x group size (a cross-pair row holds
-    its two groups' arrays); no array larger than one group is built."""
+    see _memo."""
     return _memo(spark, sf_dir, cfg.fingerprint(),
                  lambda: _expanded_pairs(spark, sf_dir, cfg))
 
 
 def _expanded_pairs(spark: SparkSession, sf_dir: str, cfg: DedupConfig) -> DataFrame:
     from codedup.pipeline import checkpoint_stage, minhash_chain
+    from codedup.stages.exact import representatives
     from codedup.stages.fingerprint import fingerprint
 
     files = _docs_as_files(_t(spark, sf_dir, "documents"))
-    # spread the single-file documents scan before the fingerprint
-    # kernel, as minhash_chain does before the signature kernel
-    fp = checkpoint_stage("fingerprint", lambda: fingerprint(
-        files.repartition(spark.sparkContext.defaultParallelism)))
-    _, _, verified = minhash_chain(fp, cfg, checkpoint_stage)
+    # the sha-group table (doc_id members) does not depend on the
+    # shingle config, so both LSH queries share one build per session
+    # and corpus.  The single-file documents scan is spread before the
+    # fingerprint kernel, as minhash_chain does before the signature
+    # kernel
+    reps = _memo(spark, sf_dir, "reps", lambda: representatives(
+        fingerprint(files.repartition(spark.sparkContext.defaultParallelism)),
+        member=F.col("path").cast("long")))
+    _, verified = minhash_chain(reps, cfg, checkpoint_stage)
 
-    # Re-expand through sha256 groups: LSH ran on one representative per
-    # distinct content, but the all-pairs oracle (and the semantics)
-    # cover EVERY doc.  One row per group holds its rep (min file_id,
-    # the row representatives() keeps) and its doc_ids, sorted.  A
-    # verified rep pair fans out to all member cross pairs (members are
-    # byte-identical to their rep, so the Jaccard is the same), and each
-    # group of m docs contributes its m(m-1)/2 intra pairs at Jaccard
-    # exactly 1: doc i pairs with the docs after it in the sorted array.
-    # Each doc belongs to one group and rep pairs are distinct group
-    # pairs, so expansion never duplicates a pair.
-    groups = fp.groupBy("sha256").agg(
-        F.min("file_id").alias("rep"),
-        F.array_sort(F.collect_list(F.col("path").cast("long"))).alias("docs"),
-    )
+    # Re-expand through the sha groups: LSH ran on one representative
+    # per distinct content, but the all-pairs oracle (and the semantics)
+    # cover EVERY doc.  Each reps row holds its rep (min file_id) and its
+    # doc_ids, sorted.  A verified rep pair fans out to all member cross
+    # pairs (members are byte-identical to their rep, so the Jaccard is
+    # the same), and each group of m docs contributes its m(m-1)/2 intra
+    # pairs at Jaccard exactly 1: doc i pairs with the docs after it in
+    # the sorted array.  Each doc belongs to one group and rep pairs are
+    # distinct group pairs, so expansion never duplicates a pair.  A
+    # cross-pair row holds its two groups' arrays; no array larger than
+    # one group is built.
     ppm = (
         F.when(F.col("n_union") == 0, F.lit(1_000_000))
         .otherwise(F.expr("(n_inter * 1000000) div n_union"))
@@ -343,17 +342,17 @@ def _expanded_pairs(spark: SparkSession, sf_dir: str, cfg: DedupConfig) -> DataF
     cross = (
         verified.filter(F.col("kind") != "fault")
         .select("a", "b", ppm.alias("jaccard_ppm"))
-        .join(groups.select(F.col("rep").alias("a"), F.col("docs").alias("da")), "a")
-        .join(groups.select(F.col("rep").alias("b"), F.col("docs").alias("db")), "b")
+        .join(reps.select(F.col("file_id").alias("a"), F.col("members").alias("da")), "a")
+        .join(reps.select(F.col("file_id").alias("b"), F.col("members").alias("db")), "b")
         .select(F.explode("da").alias("da"), "db", "jaccard_ppm")
         .select("da", F.explode("db").alias("db"), "jaccard_ppm")
         .select(F.least("da", "db").alias("a"), F.greatest("da", "db").alias("b"),
                 "jaccard_ppm")
     )
     intra = (
-        groups.filter(F.size("docs") > 1)
-        .select("docs", F.posexplode("docs").alias("i", "a"))
-        .select("a", F.explode(F.expr("slice(docs, i + 2, size(docs))")).alias("b"),
+        reps.filter(F.size("members") > 1)
+        .select("members", F.posexplode("members").alias("i", "a"))
+        .select("a", F.explode(F.expr("slice(members, i + 2, size(members))")).alias("b"),
                 F.lit(1_000_000).alias("jaccard_ppm"))
     )
     return cross.unionByName(intra)

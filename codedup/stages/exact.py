@@ -4,64 +4,48 @@ Reference analogs:
   J1 exact-hash grouping via defaultdict (dedup.py:130, 182-188)
       -> groupBy("sha256") hash aggregate
   P2 group-size predicate len>1 (dedup.py:184-188)
-      -> count filter / window count
+      -> size(members) > 1
   P3 exact-dup exclusion before the similar phase (dedup.py:195-201)
-      -> row_number over sha256 = 1 (one representative per distinct
-         content); a genuine algorithmic optimization we keep — it
-         collapses vendored byte-identical copies before LSH ever runs.
+      -> one row per distinct content, min file_id as its
+         representative; a genuine algorithmic optimization we keep —
+         it collapses vendored byte-identical copies before LSH ever
+         runs.
 
-Outputs:
-  exact_edges(u,v): star edges member->min(file_id) per sha256 group,
-      fed into connected components so exact members land in the same
-      cluster as their representative's near-dup cluster.
-  representatives: one row per distinct content (all columns of the
-      fingerprinted input).
+The sha groups are built once, by ``representatives``; ``exact_edges``
+is a projection of that table.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def exact_edges(fp: DataFrame) -> DataFrame:
-    """Star edges (u=file_id, v=group-min file_id) for sha256 groups with >1 member.
+def representatives(fp: DataFrame, member: Column | str = "file_id") -> DataFrame:
+    """One row per distinct sha256, from one ``groupBy("sha256")``:
+    ``file_id`` (the representative: min file_id, deterministic across
+    runs and partitionings), ``sha256``, ``content`` (any member's: all
+    are byte-identical) and ``members``, the group's sorted ``member``
+    values (file ids by default; the LSH queries pass doc ids).
+
+    Per-row memory is one sha group's member array, 8 bytes x group
+    size: a 10^6-copy boilerplate file holds an 8 MB array in one row."""
+    return fp.groupBy("sha256").agg(
+        F.min("file_id").alias("file_id"),
+        F.any_value("content").alias("content"),
+        F.array_sort(F.collect_list(member)).alias("members"),
+    ).select("file_id", "sha256", "content", "members")
+
+
+def exact_edges(reps: DataFrame) -> DataFrame:
+    """Star edges (u=member file_id, v=representative) for sha256
+    groups with >1 member, projected from ``representatives(fp)``.
 
     Emitting member->min instead of all pairs keeps edge count linear in
     group size (a 10^6-copy boilerplate file yields 10^6-1 edges, not
     10^12 pairs) while preserving connectivity for CC."""
-    w = Window.partitionBy("sha256")
-    e = (
-        fp.select("file_id", "sha256")
-        .withColumn("v", F.min("file_id").over(w))
-        .withColumn("n", F.count(F.lit(1)).over(w))
-        .filter((F.col("n") > 1) & (F.col("file_id") != F.col("v")))
-        .select(F.col("file_id").alias("u"), "v")
-    )
-    return e
-
-
-def representatives(fp: DataFrame) -> DataFrame:
-    """One representative row per distinct sha256 (min file_id wins —
-    deterministic across runs and partitionings)."""
-    w = Window.partitionBy("sha256").orderBy("file_id")
     return (
-        fp.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
-def exact_groups(fp: DataFrame) -> DataFrame:
-    """Report-shaped exact groups: one row per sha256 with >1 member
-    (match_type='exact' analog, dedup.py:25-44)."""
-    return (
-        fp.groupBy("sha256")
-        .agg(
-            F.count(F.lit(1)).alias("n_files"),
-            F.min("file_id").alias("group_id"),
-            F.sum("size").alias("total_size"),
-            (F.sum("size") - F.max("size")).alias("potential_savings"),
-        )
-        .filter(F.col("n_files") > 1)
+        reps.filter(F.size("members") > 1)
+        .select(F.explode("members").alias("u"), F.col("file_id").alias("v"))
+        .filter(F.col("u") != F.col("v"))
     )

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from codedup.stages.banding import band_rows
 from codedup.stages.candidates import candidate_pairs
-from codedup.stages.exact import exact_edges, exact_groups, representatives
+from codedup.stages.exact import exact_edges, representatives
 from codedup.stages.fingerprint import fingerprint
 from codedup.stages.signatures import compute_signatures
 
@@ -31,8 +31,7 @@ def test_jvm_only_stages(spark, tiny, cfg):
     files = spark.read.parquet(tiny["paths"]["files"])
     fp = fingerprint(files)
     _assert_pure(fp, "fingerprint")
-    _assert_pure(exact_edges(fp), "exact_edges")
-    _assert_pure(exact_groups(fp), "exact_groups")
+    _assert_pure(exact_edges(representatives(fp)), "exact_edges")
     _assert_pure(representatives(fp), "representatives")
 
     # banding/candidates downstream of a parquet-materialized signatures

@@ -18,12 +18,13 @@ from pyspark.sql import types as T
 from codedup import pipeline
 from codedup.storage import ParquetStorage
 
-# measured on the tiny corpus: a cold run starts 39 jobs and a full
+# measured on the tiny corpus: a cold run starts 37 jobs and a full
 # resume 6 (the collided-id read plus the summary's one aggregate
-# action); 41 and 7 while the summary ran two actions and the signature
-# cache was appended from an eager checkpoint, 64 and 20 before the
-# guard ran once and reads carried their schema
-COLD_RUN_MAX_JOBS = 39
+# action); 39 while the exact edges were a stage of their own (a second
+# sha256 window), 41 and 7 while the summary ran two actions and the
+# signature cache was appended from an eager checkpoint, 64 and 20
+# before the guard ran once and reads carried their schema
+COLD_RUN_MAX_JOBS = 37
 RESUME_MAX_JOBS = 6
 
 

@@ -36,6 +36,24 @@ def test_same_session_reuses_pairs_without_recompute(spark, monkeypatch):
         Q.q_dedup_minhash_lsh(spark, SF)
 
 
+def test_lsh_queries_share_the_sha_groups(spark, monkeypatch):
+    """The documents' sha-group table is built once per session and
+    corpus: after dedup_minhash_lsh, the token-shingle query runs its
+    own chain on the same table without fingerprinting or grouping."""
+    Q.clear_pairs_cache()
+    Q.q_dedup_minhash_lsh(spark, SF).collect()
+    import codedup.stages.exact as exact
+    import codedup.stages.fingerprint as fpmod
+
+    def boom(*a, **k):
+        raise AssertionError("sha groups rebuilt despite the in-session table")
+
+    monkeypatch.setattr(exact, "representatives", boom)
+    monkeypatch.setattr(fpmod, "fingerprint", boom)
+    assert Q.q_dedup_minhash_lsh_tokens(spark, SF).count() > 0
+    Q.clear_pairs_cache()
+
+
 def test_in_memory_cache_bounded():
     Q.clear_pairs_cache()
     for i in range(2 * Q._PAIRS_CACHE_CAP):

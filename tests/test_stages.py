@@ -10,7 +10,7 @@ from codedup import kernels as K
 from codedup.config import DedupConfig
 from codedup.stages.banding import band_rows
 from codedup.stages.candidates import candidate_pairs
-from codedup.stages.exact import exact_edges, exact_groups, representatives
+from codedup.stages.exact import exact_edges, representatives
 from codedup.stages.fingerprint import fingerprint
 from codedup.stages.signatures import compute_signatures
 
@@ -38,9 +38,9 @@ def test_file_id_stable_across_partitionings(spark, tiny):
 
 def test_exact_groups_match_oracle(spark, tiny, oracle_tiny):
     fp = _fp(spark, tiny)
-    groups = exact_groups(fp)
-    eg = groups.join(fp.select("sha256", "key"), "sha256").toPandas()
-    spark_groups = set(frozenset(g["key"]) for _, g in eg.groupby("group_id"))
+    key = {r["file_id"]: r["key"] for r in fp.select("file_id", "key").collect()}
+    groups = representatives(fp).filter(F.size("members") > 1).collect()
+    spark_groups = {frozenset(key[m] for m in r["members"]) for r in groups}
     assert spark_groups == set(oracle_tiny.exact_groups)
 
 
@@ -59,10 +59,29 @@ def test_representatives_one_per_content(spark, tiny):
 
 def test_exact_edges_star_shape(spark, tiny):
     fp = _fp(spark, tiny)
-    e = exact_edges(fp).toPandas()
+    e = exact_edges(representatives(fp)).toPandas()
     assert (e.u != e.v).all()
     # every v is a group-min => v < u
     assert (e.v < e.u).all()
+
+    # a hot sha group: 2,000 byte-identical files are one reps row (its
+    # member array is the per-row memory bound) and 1,999 star edges
+    n = 2000
+    hot = spark.createDataFrame(
+        [("org/hot", f"vendor/{i}.py", "0" * 40, "python", "# vendored hot file\n")
+         for i in range(n)],
+        "repo string, path string, commit string, lang string, content string")
+    hot_fp = fingerprint(hot)
+    ids = sorted(r["file_id"] for r in hot_fp.select("file_id").collect())
+    reps = representatives(fp.unionByName(hot_fp))
+    hot_reps = reps.filter(F.size("members") == n)
+    row, = hot_reps.collect()
+    assert row["members"] == ids
+    assert row["file_id"] == ids[0]
+    he = exact_edges(hot_reps).toPandas()
+    assert len(he) == n - 1
+    assert (he.v == ids[0]).all()
+    assert sorted(he.u) == ids[1:]
 
 
 def test_signatures_match_kernels(spark, tiny, cfg):

@@ -42,7 +42,7 @@ def main() -> int:
     from codedup.queries import QUERIES
     from codedup.stages.banding import band_rows
     from codedup.stages.candidates import candidate_pairs
-    from codedup.stages.exact import exact_edges, representatives
+    from codedup.stages.exact import representatives
     from codedup.stages.fingerprint import fingerprint
     from codedup.stages.signatures import compute_signatures
     from codedup.stages.verify import verify_pairs
@@ -56,7 +56,8 @@ def main() -> int:
 
     sections: list[tuple[str, str, list[str]]] = []  # (name, plan, audit notes)
 
-    def audit(name, df, expect_no_python=True, expect_pushed=None, expect_broadcast=False):
+    def audit(name, df, expect_no_python=True, expect_pushed=None, expect_broadcast=False,
+              forbid=()):
         plan = plan_of(df)
         notes = []
         n_codegen = plan.count("WholeStageCodegen")
@@ -75,12 +76,16 @@ def main() -> int:
         if expect_broadcast:
             ok = "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
             notes.append(f"{'OK' if ok else 'VIOLATION'}: broadcast join present")
+        for node in forbid:
+            notes.append(f"{'OK' if node not in plan else 'VIOLATION'}: no {node}")
         sections.append((name, plan, notes))
         return all(n.startswith(("OK", "WholeStageCodegen")) for n in notes)
 
     ok = True
     ok &= audit("stage: fingerprint", fp)
-    ok &= audit("stage: exact_edges", exact_edges(fp))
+    # the one sha-group table: exact edges and the LSH representatives
+    # both derive from it
+    ok &= audit("stage: reps (one groupBy(sha256))", reps, forbid=("Window",))
     ok &= audit("stage: signatures (Arrow boundary #1)", sigs, expect_no_python=False)
     # banding runs inside the candidates stage, downstream of the
     # signatures checkpoint: audit it from a signatures-shaped input

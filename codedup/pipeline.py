@@ -2,16 +2,16 @@
 
 The reference's lifecycle (find_duplicates, dedup.py:77-107: enumerate
 -> hash+cache -> exact groups -> similar groups -> report) becomes a
-DAG of DataFrame->DataFrame stages, each optionally committed to a
-checkpoint table.  ``run`` with resume=True skips every stage whose
-manifest is already committed under the current config fingerprint —
-the north_rule's "resumes from the last completed stage without
-recomputation" (tested in tests/test_resume.py).  The exact phase is
-one sha-group table (``reps``, one ``groupBy(sha256)``): the MinHash
-part of the DAG, ``minhash_chain``, runs on its representatives, and
-the exact edges are a projection of its member arrays.  The LSH catalog
-queries share the same table and chain, materializing each stage in
-session (``checkpoint_stage``).
+DAG of DataFrame->DataFrame stages, each committed to a checkpoint
+table (there is no in-session ``run``).  ``run`` with resume=True skips
+every stage whose manifest is already committed under the current
+config fingerprint — the north_rule's "resumes from the last completed
+stage without recomputation" (tested in tests/test_resume.py).  The
+exact phase is one sha-group table (``reps``, one ``groupBy(sha256)``):
+the MinHash part of the DAG, ``minhash_chain``, runs on its
+representatives, and the exact edges are a projection of its member
+arrays.  The LSH catalog queries run the same chain in session,
+checkpointing only the tables two plans read (``checkpoint_stage``).
 """
 
 from __future__ import annotations
@@ -63,24 +63,24 @@ class PipelineResult:
 
 
 def checkpoint_stage(name: str, build) -> DataFrame:
-    """The in-session ``stage(name, build)`` materializer: an eager
-    local checkpoint cuts the lineage, so every consumer of the stage
-    reads one set of blocks instead of re-running its build (e.g. the
-    signature kernel once per verify join).  Nothing survives the
-    session; ``run`` with a ``work_dir`` uses the resumable parquet +
-    manifest form instead."""
+    """The in-session materializer, for a table two plans read: an
+    eager local checkpoint cuts the lineage, so each reader reads one
+    set of blocks instead of re-running the build (e.g. the signature
+    kernel for banding and again for verify).  A one-reader table stays
+    lazy.  Nothing survives the session; resumable stages are ``run``'s
+    parquet + manifest commits."""
     return build().localCheckpoint(eager=True)
 
 
 def minhash_chain(reps: DataFrame, cfg: DedupConfig, stage, sign=None):
     """reps -> signatures -> candidates -> verified, each built through
-    ``stage(name, build)``; LSH banding runs inside the candidates stage
-    (a pure JVM projection of the signatures, not worth a checkpoint of
-    its own).  ``reps`` is the caller's materialized
-    ``representatives`` table (read 3x: signatures and both verify
-    content joins).  ``sign`` replaces ``compute_signatures(rep_ids,
-    cfg)`` (the pipeline's cross-run SignatureCache).  Returns
-    (signatures, verified)."""
+    ``stage(name, build)``: ``run``'s commits every table, an in-session
+    one checkpoints only ``signatures`` (read by banding and verify).
+    LSH banding runs inside the candidates stage.  ``reps`` is the
+    caller's materialized ``representatives`` table (read 3x:
+    signatures and both verify content joins).  ``sign`` replaces
+    ``compute_signatures(rep_ids, cfg)`` (the pipeline's cross-run
+    SignatureCache).  Returns (signatures, verified)."""
     # explicit spread before the signature kernel: AQE's advisory-size
     # coalescing shrinks the representatives exchange (and a parquet
     # re-read packs small files) into a handful of partitions — right
@@ -108,24 +108,20 @@ def run(
     storage=None,
     source_format: str = "parquet",
 ) -> PipelineResult:
-    """``storage``: optional injected checkpoint backend implementing
-    the ParquetStorage contract (is_complete/read/write) — e.g.
-    iceberg.IcebergStorage on a cluster with a catalog.  Defaults to
-    ParquetStorage under ``work_dir``.  The cross-run SignatureCache is
+    """Commits each stage to ``storage``, an injected backend with the
+    ParquetStorage contract (is_complete/read/write) — e.g.
+    iceberg.IcebergStorage — or to ParquetStorage under ``work_dir``;
+    one of the two is required.  The cross-run SignatureCache is
     parquet-path-based and engages only for the default backend."""
     cfg = cfg or DedupConfig()
-    if storage is not None:
-        store = storage
-    else:
-        store = ParquetStorage(work_dir, run_id, cfg.fingerprint()) if work_dir else None
+    if storage is None and not work_dir:
+        raise ValueError("pipeline.run needs a work_dir or a storage to commit its stages to")
+    store = storage if storage is not None else ParquetStorage(work_dir, run_id, cfg.fingerprint())
     recomputed: list[str] = []
     dirty = False  # once any stage recomputes, everything downstream must too
 
     def stage(name: str, build) -> DataFrame:
         nonlocal dirty
-        if store is None:
-            recomputed.append(name)
-            return checkpoint_stage(name, build)
         if resume and not dirty and store.is_complete(name):
             return store.read(spark, name)
         dirty = True
@@ -136,8 +132,7 @@ def run(
 
     files, ingest_errors = split_invalid(
         read_files(spark, *source_paths, langs=langs, fmt=source_format))
-    if store is not None:
-        stage("errors", lambda: ingest_errors)
+    stage("errors", lambda: ingest_errors)
     fp_all = stage("fingerprint", lambda: fingerprint(files))
     # 64-bit id-collision guard (ADVICE r1): collided rows become error
     # rows and never reach dedup — an apply job must not act on a
@@ -191,7 +186,7 @@ def run(
     actions = stage("actions", lambda: action_plan(members))
     rep = summary(fp, members)
 
-    if store is not None and hasattr(store, "run_dir"):
+    if hasattr(store, "run_dir"):
         with open(os.path.join(store.run_dir, "report.json"), "w") as f:
             json.dump(rep, f, indent=1, sort_keys=True)
 

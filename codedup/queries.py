@@ -301,9 +301,9 @@ def _minhash_pipeline_pairs(spark: SparkSession, sf_dir: str, cfg: DedupConfig) 
     """MinHash(128) -> LSH(b=16,r=8) -> exact-verify over the documents
     table under ``cfg`` (char or token shingles), with exact-dup members
     re-expanded; returns (a, b, jaccard_ppm) over doc_ids.  The stage
-    chain is pipeline.minhash_chain with every stage checkpointed in
-    session; the result is memoized per (session, corpus, config) —
-    see _memo."""
+    chain is pipeline.minhash_chain; in session only ``signatures``
+    (read by banding and verify) is checkpointed, and the result is
+    memoized per (session, corpus, config) — see _memo."""
     return _memo(spark, sf_dir, cfg.fingerprint(),
                  lambda: _expanded_pairs(spark, sf_dir, cfg))
 
@@ -322,7 +322,10 @@ def _expanded_pairs(spark: SparkSession, sf_dir: str, cfg: DedupConfig) -> DataF
     reps = _memo(spark, sf_dir, "reps", lambda: representatives(
         fingerprint(files.repartition(spark.sparkContext.defaultParallelism)),
         member=F.col("path").cast("long")))
-    _, verified = minhash_chain(reps, cfg, checkpoint_stage)
+    # candidates and verified have one reader each (verified: the
+    # re-expansion below, which _memo checkpoints): left lazy
+    _, verified = minhash_chain(reps, cfg, lambda name, build: (
+        checkpoint_stage(name, build) if name == "signatures" else build()))
 
     # Re-expand through the sha groups: LSH ran on one representative
     # per distinct content, but the all-pairs oracle (and the semantics)

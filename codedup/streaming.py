@@ -16,7 +16,8 @@ verify) — no separate streaming implementations to drift out of sync.
 ``process_batch`` does not call ``pipeline.minhash_chain``: its reps
 (history-aware exact collapse), candidates (touched buckets only) and
 verify inputs (pruned to candidate ids) all differ from the batch
-chain's.  State tables:
+chain's.  It keeps the chain's rule: a checkpoint only on a table with
+several readers (named at each).  State tables:
 
     <work>/stream/signatures/   all signatures seen (append-only)
     <work>/stream/bands/        all band rows seen (append-only)
@@ -275,7 +276,7 @@ class IncrementalDedup:
         exchange).  At 10^12 scale the bands state would be bucketed by
         band_hash so even the scan prunes to touched buckets — same
         logical plan."""
-        new_stats = (
+        new_stats = (   # read by the merge, the stats semi-join and the stats write
             new_bands.groupBy("band", "band_hash")
             .agg(F.count(F.lit(1)).alias("cnt"), F.min("file_id").alias("rep"))
             .localCheckpoint(eager=True)
@@ -289,7 +290,7 @@ class IncrementalDedup:
                 old_stats.join(F.broadcast(new_stats.select("band", "band_hash")),
                                ["band", "band_hash"], "left_semi")
                 .withColumn("rep_old", F.col("rep")))
-        tot = (
+        tot = (   # read by below, old_reps and sized; lazy, each would rescan the stats
             merged.groupBy("band", "band_hash")
             .agg(F.sum("cnt").alias("bsz"), F.min("rep").alias("rep"),
                  F.min("rep_old").alias("rep_old"))
@@ -331,8 +332,7 @@ class IncrementalDedup:
             return  # at-least-once replay of a committed batch: no-op
         self._clear_staged(batch_id)  # purge any crashed partial attempt
         cfg = self.cfg
-        fp = fingerprint(batch).localCheckpoint(eager=True)
-        reps = representatives(fp)
+        reps = representatives(fingerprint(batch))
 
         seen = self.signatures()
         old_contents = self._read_or_none(self.content_dir)
@@ -342,15 +342,15 @@ class IncrementalDedup:
         # like within-batch exact groups
         new_reps = reps.select("file_id", "sha256", "content")
         if old_contents is not None:
-            new_reps = new_reps.join(
-                old_contents.select("sha256"), "sha256", "left_anti"
-            )
-        new_reps = new_reps.select("file_id", "content", "sha256")
+            new_reps = new_reps.join(old_contents.select("sha256"), "sha256", "left_anti")
         if seen is not None:
             new_reps = new_reps.join(seen.select("file_id"), "file_id", "left_anti")
-        new_sigs = compute_signatures(
+        # read by signatures, verify and the contents write; the history anti-joins run once
+        new_reps = new_reps.localCheckpoint(eager=True)
+        new_sigs = compute_signatures(   # read by banding, verify and the signatures write
             new_reps.select("file_id", "content"), cfg
         ).localCheckpoint(eager=True)
+        # read by the candidates (stats, members, new ids) and the bands write
         new_bands = band_rows(new_sigs, cfg).localCheckpoint(eager=True)
 
         old_bands = self._read_or_none(self.bands_dir)
@@ -366,7 +366,7 @@ class IncrementalDedup:
         # else every batch shuffles the whole accumulated corpus twice
         # and per-batch wall grows superlinearly (measured: 16.8 s ->
         # 142.7 s over 6 batches at the 355k tier before this prune).
-        cand_ids = (
+        cand_ids = (   # read by both semi-joins; lazy, each would aggregate its own copy
             cands.select(F.col("a").alias("file_id"))
             .unionByName(cands.select(F.col("b").alias("file_id")))
             .distinct().localCheckpoint(eager=True)

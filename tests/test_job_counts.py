@@ -5,7 +5,7 @@ rows, so job counts are pinned here: a committed stage reads back with
 the schema its manifest records (no parquet footer-inference job), the
 64-bit id-collision guard's aggregation runs once per run (it is not in
 the lineage of the clean fingerprints), and one pipeline run stays
-within a fixed number of jobs.
+within a fixed number of jobs, as does one streaming batch.
 """
 
 from __future__ import annotations
@@ -13,6 +13,7 @@ from __future__ import annotations
 import contextlib
 import json
 
+import pytest
 from pyspark.sql import types as T
 
 from codedup import pipeline
@@ -26,6 +27,10 @@ from codedup.storage import ParquetStorage
 # before the guard ran once and reads carried their schema
 COLD_RUN_MAX_JOBS = 37
 RESUME_MAX_JOBS = 6
+# measured on the tiny corpus's second of three drops: a streaming batch
+# with history starts 40 jobs; 46 while the fingerprints were
+# checkpointed and the new representatives (three readers) were not
+STREAM_BATCH_MAX_JOBS = 40
 
 
 @contextlib.contextmanager
@@ -103,3 +108,25 @@ def test_pipeline_job_counts(spark, tiny, cfg, tmp_path):
     assert again.recomputed_stages == []
     assert len(cold) <= COLD_RUN_MAX_JOBS, f"cold run started {len(cold)} jobs"
     assert len(resumed) <= RESUME_MAX_JOBS, f"full resume started {len(resumed)} jobs"
+
+
+def test_run_needs_a_store(spark, tiny, cfg):
+    with pytest.raises(ValueError, match="work_dir.*storage"):
+        pipeline.run(spark, [tiny["paths"]["files"]], cfg)
+
+
+def test_streaming_batch_job_count(spark, tiny, cfg, tmp_path):
+    from codedup.streaming import IncrementalDedup
+
+    files = tiny["tables"]["files"]
+    drops = []
+    for i in range(2):
+        p = str(tmp_path / f"drop_{i}.parquet")
+        files.iloc[i::3].reset_index(drop=True).to_parquet(p, index=False)
+        drops.append(p)
+    inc = IncrementalDedup(spark, str(tmp_path / "w"), cfg)
+    inc.process_batch(spark.read.parquet(drops[0]), 0)
+    with counted_jobs(spark, "stream-batch") as batch:
+        inc.process_batch(spark.read.parquet(drops[1]), 1)
+    assert inc.pairs().count() > 0
+    assert len(batch) <= STREAM_BATCH_MAX_JOBS, f"streaming batch started {len(batch)} jobs"

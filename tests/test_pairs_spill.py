@@ -54,6 +54,27 @@ def test_lsh_queries_share_the_sha_groups(spark, monkeypatch):
     Q.clear_pairs_cache()
 
 
+def test_lsh_build_materializes_only_tables_read_twice(spark, monkeypatch):
+    """One dedup_minhash_lsh build checkpoints the sha groups (read by
+    signatures, verify and the re-expansion), the signatures (read by
+    banding and verify) and the memoized pairs; candidates and verified
+    each have one reader and stay lazy."""
+    import codedup.pipeline as pipemod
+
+    names = []
+    real = pipemod.checkpoint_stage
+
+    def recording(name, build):
+        names.append(name)
+        return real(name, build)
+
+    monkeypatch.setattr(pipemod, "checkpoint_stage", recording)
+    Q.clear_pairs_cache()
+    assert Q.q_dedup_minhash_lsh(spark, SF).count() > 0
+    assert sorted(names) == sorted(["reps", "signatures", Q.DOCS_CFG.fingerprint()])
+    Q.clear_pairs_cache()
+
+
 def test_in_memory_cache_bounded():
     Q.clear_pairs_cache()
     for i in range(2 * Q._PAIRS_CACHE_CAP):

@@ -15,8 +15,9 @@ verify is ~70% of large-tier wall; tools/sweep_verify.py drives this
 script across a margin x cap grid and reports verify wall vs recall).
 
 corpus_dir must contain files.parquet + truth_clusters.parquet (written
-by codedup.fixtures.write_corpus).  Runs the pipeline (resuming from
-work_dir if given), then scores the clustering against truth:
+by codedup.fixtures.write_corpus).  Runs the pipeline, resuming from
+work_dir if given (else fresh, in a temporary directory removed at
+exit), then scores the clustering against truth:
 
     truth co-membership: keys sharing a truth_cluster_id
     pred  co-membership: truth keys sharing a predicted cluster_id
@@ -43,10 +44,12 @@ Prints one JSON line with stage walls from the run's manifests.
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import json
 import os
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
@@ -146,20 +149,20 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     n = spark.read.parquet(f"{corpus}/files.parquet").count()
 
-    t0 = time.time()
-    res = pipeline.run(spark, [f"{corpus}/files.parquet"], cfg,
-                       work_dir=work, run_id="recall", resume=bool(work))
-    wall = time.time() - t0
+    with contextlib.nullcontext(work) if work else tempfile.TemporaryDirectory() as run_dir:
+        t0 = time.time()
+        res = pipeline.run(spark, [f"{corpus}/files.parquet"], cfg,
+                           work_dir=run_dir, run_id="recall", resume=bool(work))
+        wall = time.time() - t0
 
-    truth = spark.read.parquet(f"{corpus}/truth_clusters.parquet")
-    t_score = time.time()
-    score = score_pairs if use_pairs else score_counting
-    n_truth, n_pred, n_inter = score(truth, res.members)
-    score_wall = time.time() - t_score
+        truth = spark.read.parquet(f"{corpus}/truth_clusters.parquet")
+        t_score = time.time()
+        score = score_pairs if use_pairs else score_counting
+        n_truth, n_pred, n_inter = score(truth, res.members)
+        score_wall = time.time() - t_score
 
-    stages = {}
-    if work:
-        for m in glob.glob(os.path.join(work, "runs", "recall", "*.manifest.json")):
+        stages = {}
+        for m in glob.glob(os.path.join(run_dir, "runs", "recall", "*.manifest.json")):
             with open(m) as f:
                 d = json.load(f)
             stages[d["stage"]] = round(d["wall_ms"] / 1000, 1)

@@ -76,7 +76,8 @@ def minhash_chain(reps: DataFrame, cfg: DedupConfig, stage, sign=None):
     """reps -> signatures -> candidates -> verified, each built through
     ``stage(name, build)``: ``run``'s commits every table, an in-session
     one checkpoints only ``signatures`` (read by banding and verify).
-    LSH banding runs inside the candidates stage.  ``reps`` is the
+    LSH banding runs inside the candidates stage, and ``band_rows``
+    keeps FAULT signature rows out of it.  ``reps`` is the
     caller's materialized ``representatives`` table (read 3x:
     signatures and both verify content joins).  ``sign`` replaces
     ``compute_signatures(rep_ids, cfg)`` (the pipeline's cross-run
@@ -89,10 +90,7 @@ def minhash_chain(reps: DataFrame, cfg: DedupConfig, stage, sign=None):
     rep_ids = reps.select("file_id", "content").repartition(
         reps.sparkSession.sparkContext.defaultParallelism)
     sigs = stage("signatures", lambda: (sign or compute_signatures)(rep_ids, cfg))
-    # FAULT sentinel rows (n_shingles = -1, see signatures.py) stay
-    # visible in the signatures table but never reach banding/verification
-    good_sigs = sigs.filter(F.col("n_shingles") >= 0)
-    cands = stage("candidates", lambda: candidate_pairs(band_rows(good_sigs, cfg), cfg))
+    cands = stage("candidates", lambda: candidate_pairs(band_rows(sigs, cfg), cfg))
     verified = stage("verified", lambda: verify_pairs(cands, reps, sigs, cfg))
     return sigs, verified
 

@@ -136,8 +136,10 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_DEDUP_NGRAM_JACCARD = f"""
-WITH sh AS (
+# The all-pairs char-8-gram oracles share one fragment: the distinct
+# grams per document (sh), their set sizes, and the intersection count
+# of every pair sharing a gram (inter, a < b)
+_SQL_NGRAM_INTER = f"""sh AS (
   SELECT DISTINCT doc_id, substr(text, i, {NGRAM_K}) AS g
   FROM documents,
        LATERAL (SELECT unnest(generate_series(1, greatest(length(text)-{NGRAM_K - 1}, 1))) AS i) t
@@ -148,7 +150,10 @@ WITH sh AS (
   FROM sh x JOIN sh y USING (g)
   WHERE x.doc_id < y.doc_id
   GROUP BY 1, 2
-)
+)"""
+
+SQL_DEDUP_NGRAM_JACCARD = f"""
+WITH {_SQL_NGRAM_INTER}
 SELECT a, b, (c * 1000000) // (sa.n + sb.n - c) AS jaccard_ppm
 FROM inter
 JOIN sizes sa ON sa.doc_id = a
@@ -176,18 +181,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_DEDUP_CONTAINMENT = f"""
-WITH sh AS (
-  SELECT DISTINCT doc_id, substr(text, i, {NGRAM_K}) AS g
-  FROM documents,
-       LATERAL (SELECT unnest(generate_series(1, greatest(length(text)-{NGRAM_K - 1}, 1))) AS i) t
-), sizes AS (
-  SELECT doc_id, count(*) AS n FROM sh GROUP BY 1
-), inter AS (
-  SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS c
-  FROM sh x JOIN sh y USING (g)
-  WHERE x.doc_id < y.doc_id
-  GROUP BY 1, 2
-)
+WITH {_SQL_NGRAM_INTER}
 SELECT a, b, (c * 1000000) // least(sa.n, sb.n) AS containment_ppm
 FROM inter
 JOIN sizes sa ON sa.doc_id = a
@@ -420,18 +414,7 @@ WHERE (c * 1000000) // (sa.n + sb.n - c) >= 800000
 
 
 SQL_DEDUP_MINHASH_LSH = f"""
-WITH sh AS (
-  SELECT DISTINCT doc_id, substr(text, i, {NGRAM_K}) AS g
-  FROM documents,
-       LATERAL (SELECT unnest(generate_series(1, greatest(length(text)-{NGRAM_K - 1}, 1))) AS i) t
-), sizes AS (
-  SELECT doc_id, count(*) AS n FROM sh GROUP BY 1
-), inter AS (
-  SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS c
-  FROM sh x JOIN sh y USING (g)
-  WHERE x.doc_id < y.doc_id
-  GROUP BY 1, 2
-)
+WITH {_SQL_NGRAM_INTER}
 SELECT a, b, (c * 1000000) // (sa.n + sb.n - c) AS jaccard_ppm
 FROM inter
 JOIN sizes sa ON sa.doc_id = a
@@ -484,18 +467,7 @@ def q_dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_DEDUP_INCREMENTAL_BATCH = f"""
-WITH sh AS (
-  SELECT DISTINCT doc_id, substr(text, i, {NGRAM_K}) AS g
-  FROM documents,
-       LATERAL (SELECT unnest(generate_series(1, greatest(length(text)-{NGRAM_K - 1}, 1))) AS i) t
-), sizes AS (
-  SELECT doc_id, count(*) AS n FROM sh GROUP BY 1
-), inter AS (
-  SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS c
-  FROM sh x JOIN sh y USING (g)
-  WHERE x.doc_id < y.doc_id
-  GROUP BY 1, 2
-), srcs AS (
+WITH {_SQL_NGRAM_INTER}, srcs AS (
   SELECT doc_id,
          (CASE WHEN source = '{_INCR_NEW_SOURCE}' THEN 1 ELSE 0 END) AS is_new
   FROM documents
@@ -836,18 +808,7 @@ WHERE list_sum(list_transform(generate_series(1, len(x.embedding)),
 # shared oracle fragment: exact all-pairs jaccard edges at >= 0.8 (the
 # same pair set dedup_minhash_lsh is verified against)
 _SQL_EDGES = f"""
-  sh AS (
-    SELECT DISTINCT doc_id, substr(text, i, {NGRAM_K}) AS g
-    FROM documents,
-         LATERAL (SELECT unnest(generate_series(1, greatest(length(text)-{NGRAM_K - 1}, 1))) AS i) t
-  ), sizes AS (
-    SELECT doc_id, count(*) AS n FROM sh GROUP BY 1
-  ), inter AS (
-    SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS c
-    FROM sh x JOIN sh y USING (g)
-    WHERE x.doc_id < y.doc_id
-    GROUP BY 1, 2
-  ), edges AS MATERIALIZED (
+  {_SQL_NGRAM_INTER}, edges AS MATERIALIZED (
     -- materialized (with ue) so the recursion reads the edge list
     -- instead of re-evaluating the shingle self-join per step
     SELECT a, b FROM inter

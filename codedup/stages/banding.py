@@ -21,6 +21,12 @@ from codedup.config import DedupConfig
 def band_rows(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
     """signatures -> (file_id, band, band_hash) with b rows per file.
 
+    The chain's one fault rule lives here: a FAULT row (``n_shingles =
+    -1`` and an empty MinHash, written when shingling a file failed; see
+    signatures.py) stays visible in the signatures table but gets no
+    band rows, so it never reaches candidates or verify — in the batch
+    chain and in streaming alike.
+
     band_hash = xxhash64(band, minhash[band*r .. band*r+r-1]); hashing
     the band id in prevents cross-band collisions from aliasing."""
     b, r = cfg.bands, cfg.rows_per_band
@@ -32,6 +38,7 @@ def band_rows(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
         for i in range(b)
     ])
     return (
-        sigs.select("file_id", F.explode(bands).alias("bh"))
+        sigs.filter(F.col("n_shingles") >= 0)
+        .select("file_id", F.explode(bands).alias("bh"))
         .select("file_id", F.col("bh.band").alias("band"), F.col("bh.band_hash").alias("band_hash"))
     )

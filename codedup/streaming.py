@@ -16,13 +16,21 @@ verify) — no separate streaming implementations to drift out of sync.
 ``process_batch`` does not call ``pipeline.minhash_chain``: its reps
 (history-aware exact collapse), candidates (touched buckets only) and
 verify inputs (pruned to candidate ids) all differ from the batch
-chain's.  It keeps the chain's rule: a checkpoint only on a table with
-several readers (named at each).  State tables:
+chain's.  It keeps the chain's rules: a checkpoint only on a table with
+several readers (named at each), and ``band_rows`` keeps FAULT
+signature rows (kept in ``signatures/``) out of the bands.  State:
 
+    <work>/stream/config_fp     the DedupConfig fingerprint of the state
     <work>/stream/signatures/   all signatures seen (append-only)
     <work>/stream/bands/        all band rows seen (append-only)
     <work>/stream/pairs/        verified pairs (append-only)
+    <work>/stream/contents/     (file_id, content, sha256) of signed reps
     <work>/stream/bucket_stats/ per-(band, band_hash) size/rep deltas
+
+One config per state, as for the batch stages: a fresh root records its
+fingerprint, and opening state recorded under another config, or state
+with no record, raises ``ValueError`` (band hashes and signatures of
+two configs must never mix).
 
 New-batch candidates come from the INCREMENTAL band-bucket state: only
 buckets touched by new files are processed, sized from the persisted
@@ -86,6 +94,25 @@ class IncrementalDedup:
         self.marker_dir = os.path.join(self.root, "_committed")
         self._tables = (self.sig_dir, self.bands_dir, self.pairs_dir,
                         self.content_dir, self.stats_dir)
+        # state is read only under the config that wrote it (the batch
+        # stages' manifest rule): a config change must not mix tables
+        fp, record = self.cfg.fingerprint(), os.path.join(self.root, "config_fp")
+        if os.path.exists(record):
+            with open(record) as f:
+                found = f.read()
+            if found != fp:
+                raise ValueError(f"stream state at {self.root} was written under config "
+                                 f"{found}, not this config {fp}")
+        elif os.path.isdir(self.root) and any(
+                not e.startswith(".") for e in os.listdir(self.root)):
+            raise ValueError(f"stream state at {self.root} has no config record, so it "
+                             f"cannot be shown to match this config {fp}")
+        else:   # fresh: record the config, staged then renamed
+            os.makedirs(self.root, exist_ok=True)
+            tmp = os.path.join(self.root, ".config_fp.tmp")
+            with open(tmp, "w") as f:
+                f.write(fp)
+            os.replace(tmp, record)
 
     @property
     def _shuffle_partitions(self) -> int:   # the deployment's setting
@@ -219,33 +246,8 @@ class IncrementalDedup:
         DELTAS (cnt, rep) fold with sum/min on read — associative, so
         the generic compact() snapshot (plain concatenation) stays
         correct, and compact() additionally pre-merges this table.
-        Bootstraps from the bands table when resuming a pre-stats state
-        layout (one full scan, once)."""
-        s = self._read_or_none(self.stats_dir)
-        if s is not None:
-            return s
-        old_bands = self._read_or_none(self.bands_dir)
-        if old_bands is None:
-            return None
-        boot = old_bands.groupBy("band", "band_hash").agg(
-            F.count(F.lit(1)).alias("cnt"), F.min("file_id").alias("rep"))
-        # PERSIST the bootstrap as the batch_id=-1 snapshot: if it only
-        # lived in this batch's memory, the next batch would see a
-        # stats dir holding nothing but this batch's delta and
-        # undercount every pre-stats bucket (wrong size policy, wrong
-        # rep) — the bootstrap must enter the merge-on-read lineage.
-        # Stage-then-rename (ADVICE r5): a direct write crashing midway
-        # leaves a partial batch_id=-1 that a retry would accept as
-        # done (undercounted stats silently entering the lineage); the
-        # dot-prefixed tmp dir is invisible to parquet discovery and
-        # the rename is atomic.
-        import shutil
-
-        tmp = os.path.join(self.stats_dir, f".tmp-boot-{os.getpid()}")
-        shutil.rmtree(tmp, ignore_errors=True)
-        boot.repartition(max(self._shuffle_partitions // 16, 2)) \
-            .write.mode("overwrite").parquet(tmp)
-        os.rename(tmp, os.path.join(self.stats_dir, "batch_id=-1"))
+        Every committed batch writes its delta next to its band rows,
+        so the table covers the whole bands history."""
         return self._read_or_none(self.stats_dir)
 
     def _incremental_candidates(self, new_bands: DataFrame,

@@ -6,6 +6,7 @@ equal the batch pipeline's verified pairs over the union of all drops.
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from codedup.config import DedupConfig
 from codedup.fixtures import generate_corpus
@@ -223,45 +224,57 @@ def test_compact_survives_crash_replay_loop(committed_stream, spark, drops):
     assert _pair_set(inc) == want
 
 
-def test_pre_stats_layout_bootstraps_and_persists(spark, drops, cfg, tmp_path):
-    """Resuming a state layout from before the bucket_stats table
-    existed must (a) bootstrap the stats from the bands table, (b)
-    PERSIST the bootstrap so later batches see pre-stats history counts
-    (not just post-upgrade deltas), and (c) produce the same cumulative
-    pair set as an uninterrupted stream."""
-    import shutil
+def test_state_refuses_another_config(spark, drops, cfg, tmp_path):
+    """Stream state is read only under the config that wrote it, like
+    the batch stages' manifests: a fresh root records the fingerprint,
+    the same config resumes, and another config — or state with no
+    record — raises instead of mixing band hashes of two configs."""
+    work = str(tmp_path / "w")
+    inc = IncrementalDedup(spark, work, cfg)
+    record = os.path.join(inc.root, "config_fp")
+    with open(record) as f:
+        assert f.read() == cfg.fingerprint()
+    inc.process_batch(spark.read.parquet(drops["paths"][0]), 0)
+    n_sigs = inc.signatures().count()
 
-    # uninterrupted reference stream over all 3 drops
-    ref = IncrementalDedup(spark, str(tmp_path / "ref"), cfg)
-    for i, p in enumerate(drops["paths"]):
-        ref.process_batch(spark.read.parquet(p), i)
-    want = {(r.a, r.b) for r in ref.pairs().collect()}
+    resumed = IncrementalDedup(spark, work, cfg)
+    assert resumed.signatures().count() == n_sigs
 
-    # "old layout": run 2 batches, then delete the stats table
-    inc = IncrementalDedup(spark, str(tmp_path / "up"), cfg)
-    for i in range(2):
-        inc.process_batch(spark.read.parquet(drops["paths"][i]), i)
-    shutil.rmtree(inc.stats_dir)
-    # batch 2 on the degraded layout: bootstrap fires
-    inc.process_batch(spark.read.parquet(drops["paths"][2]), 2)
-    assert os.path.isdir(os.path.join(inc.stats_dir, "batch_id=-1"))  # persisted
-    got = {(r.a, r.b) for r in inc.pairs().collect()}
-    assert got == want
+    other = cfg.with_(shingle_k=cfg.shingle_k + 1)
+    with pytest.raises(ValueError, match=f"{cfg.fingerprint()}.*{other.fingerprint()}"):
+        IncrementalDedup(spark, work, other)
+    os.remove(record)
+    with pytest.raises(ValueError, match="no config record"):
+        IncrementalDedup(spark, work, cfg)
 
-    # the persisted bootstrap must carry PRE-stats history counts: the
-    # merged stats totals equal a fresh groupBy over the bands table
-    from pyspark.sql import functions as F
 
-    bands = inc._read_or_none(inc.bands_dir)
-    fresh = {(r.band, r.band_hash): (r.cnt, r.rep) for r in
-             bands.groupBy("band", "band_hash")
-             .agg(F.count(F.lit(1)).alias("cnt"), F.min("file_id").alias("rep"))
-             .collect()}
-    merged = {(r.band, r.band_hash): (r.cnt, r.rep) for r in
-              inc._bucket_stats().groupBy("band", "band_hash")
-              .agg(F.sum("cnt").alias("cnt"), F.min("rep").alias("rep"))
-              .collect()}
-    assert merged == fresh
+def test_fault_rows_never_reach_bands(spark, cfg, tmp_path, monkeypatch):
+    """The chain's fault rule holds in streaming: a FAULT signature row
+    (n_shingles = -1, empty MinHash) stays in the signatures state but
+    gets no band rows — else every faulted file would share all of its
+    buckets with every other one."""
+    import pandas as pd
+
+    bodies = ["POISON_MARKER one\n" * 30, "POISON_MARKER two\n" * 30,
+              "def f():\n    return 1\n" * 30, "class A:\n    x = 2\n" * 30]
+    files = pd.DataFrame(
+        [("org/a", f"f{i}.py", f"{i}" * 40, "python", b) for i, b in enumerate(bodies)],
+        columns=["repo", "path", "commit", "lang", "content"])
+    src = str(tmp_path / "files.parquet")
+    files.to_parquet(src, index=False)
+
+    monkeypatch.setenv("CODEDUP_FAULT_INJECT", "POISON_MARKER")
+    inc = IncrementalDedup(spark, str(tmp_path / "w"), cfg)
+    inc.process_batch(spark.read.parquet(src), 0)
+
+    sigs = inc.signatures().toPandas()
+    assert len(sigs) == 4
+    faulted = set(sigs.file_id[sigs.n_shingles < 0])
+    assert len(faulted) == 2
+    bands = inc._read_or_none(inc.bands_dir).toPandas()
+    per_file = bands.groupby("file_id").size()
+    assert set(per_file.index) == set(sigs.file_id) - faulted
+    assert (per_file == cfg.bands).all()
 
 
 def _mode_pairs(mode):
@@ -299,8 +312,12 @@ def test_incremental_candidates_policy_modes(spark, tmp_path, mode, n_pairs):
            (900, 3, 1003), (901, 3, 1003), (902, 4, 1004)]
     mcfg = DedupConfig(band_bucket_cap=4, salt_buckets=3, hot_bucket_mode=mode)
     inc = IncrementalDedup(spark, str(tmp_path / mode), mcfg)
-    spark.createDataFrame(old, schema).write.parquet(
-        os.path.join(inc.bands_dir, "batch_id=0"))
+    old_bands = spark.createDataFrame(old, schema)
+    old_bands.write.parquet(os.path.join(inc.bands_dir, "batch_id=0"))
+    # every committed batch writes its bucket stats next to its bands
+    old_bands.groupBy("band", "band_hash").agg(
+        F.count(F.lit(1)).alias("cnt"), F.min("file_id").alias("rep")
+    ).write.parquet(os.path.join(inc.stats_dir, "batch_id=0"))
     cands, _ = inc._incremental_candidates(
         spark.createDataFrame(new, schema), inc._read_or_none(inc.bands_dir))
     got = [(r.a, r.b) for r in cands.collect()]

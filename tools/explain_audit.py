@@ -206,7 +206,9 @@ def audit_all(corpus: str) -> int:
             for n in notes:
                 f.write(f"- {n}\n")
             f.write("\n<details><summary>plan</summary>\n\n```\n")
-            f.write(plan.strip()[:6000])
+            # the corpus lives in a fresh temporary directory: write its
+            # path as a fixed token, so a rerun rewrites only changed plans
+            f.write(plan.replace(corpus, "<corpus>").strip()[:6000])
             f.write("\n```\n</details>\n\n")
     print(f"{'ALL OK' if ok else 'VIOLATIONS FOUND'} -> {OUT}")
     return 0 if ok else 1

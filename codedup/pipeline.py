@@ -9,9 +9,11 @@ config fingerprint — the north_rule's "resumes from the last completed
 stage without recomputation" (tested in tests/test_resume.py).  The
 exact phase is one sha-group table (``reps``, one ``groupBy(sha256)``):
 the MinHash part of the DAG, ``minhash_chain``, runs on its
-representatives, and the exact edges are a projection of its member
-arrays.  The LSH catalog queries run the same chain in session,
-checkpointing only the tables two plans read (``checkpoint_stage``).
+representatives, and ``cluster_edges`` joins the verified pairs with a
+star of exact edges projected from its member arrays.  The LSH catalog
+queries run the same chain and the same edge rule in session, with doc
+ids as file ids, checkpointing only the tables two plans read
+(``checkpoint_stage``).
 """
 
 from __future__ import annotations
@@ -95,6 +97,18 @@ def minhash_chain(reps: DataFrame, cfg: DedupConfig, stage, sign=None):
     return sigs, verified
 
 
+def cluster_edges(verified: DataFrame, reps: DataFrame) -> DataFrame:
+    """The CC input: the verified near pairs between representatives
+    plus one star of exact edges per sha group, so a group of m copies
+    costs m-1 edges, not m(m-1)/2.  FAULT rows are recorded, not
+    clustered."""
+    near = (
+        verified.filter(F.col("kind") != "fault")
+        .select(F.col("a").alias("u"), F.col("b").alias("v"))
+    )
+    return near.unionByName(exact_edges(reps))
+
+
 def run(
     spark: SparkSession,
     source_paths: list[str],
@@ -171,15 +185,7 @@ def run(
             new_sigs = new_sigs.join(cached.select("file_id"), "file_id", "left_anti")
         cache.append(new_sigs)
 
-    def build_clusters() -> DataFrame:
-        near_edges = (
-            verified.filter(F.col("kind") != "fault")  # fault rows are recorded, not clustered
-            .select(F.col("a").alias("u"), F.col("b").alias("v"))
-        )
-        edges = near_edges.unionByName(exact_edges(reps))
-        return connected_components(edges)
-
-    clusters = stage("clusters", build_clusters)
+    clusters = stage("clusters", lambda: connected_components(cluster_edges(verified, reps)))
     members = stage("members", lambda: rank_members(clusters, fp))
     actions = stage("actions", lambda: action_plan(members))
     rep = summary(fp, members)

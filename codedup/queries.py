@@ -46,18 +46,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _docs_as_files(docs: DataFrame) -> DataFrame:
-    """Map the documents table onto the engine's files schema
-    (input_hint: repo, path, commit, lang, content)."""
-    return docs.select(
-        F.lit("corpus").alias("repo"),
-        F.col("doc_id").cast("string").alias("path"),
-        F.lit("0" * 40).alias("commit"),
-        F.col("lang").alias("lang"),
-        F.col("text").alias("content"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # documents: fingerprint / exact dedup (K1, J1, A1)
 # ---------------------------------------------------------------------------
@@ -244,13 +232,14 @@ GROUP BY doc_id
 
 
 # ---------------------------------------------------------------------------
-# documents: MinHash-LSH dedup (the engine's own pipeline, K2/J3/K10)
+# documents: MinHash-LSH dedup (the engine's own pipeline, K2/J3/K10:
+# pipeline.minhash_chain on doc ids as file ids, pipeline.cluster_edges)
 # ---------------------------------------------------------------------------
 
 # In-session reuse of the tables several catalog queries share (the
-# documents' sha groups, the verified pairs per config, the doc
-# clusters, the winnowing fingerprints): the query-layer analog of the
-# pipeline's stage reuse.  _memo is the one get-or-build; _PAIRS_CACHE
+# documents' sha groups, the verified representative pairs per config,
+# the doc clusters, the winnowing fingerprints): the query-layer analog
+# of the pipeline's stage reuse.  _memo is the one get-or-build; _PAIRS_CACHE
 # is keyed by (application id, corpus dir, tag) and BOUNDED: entries
 # from other sessions are dropped on insert (their checkpointed blocks
 # died with that session) and the count is capped, evicting oldest
@@ -291,39 +280,40 @@ def _memo(spark: SparkSession, sf_dir: str, tag: str,
     return out
 
 
-def _minhash_pipeline_pairs(spark: SparkSession, sf_dir: str, cfg: DedupConfig) -> DataFrame:
-    """MinHash(128) -> LSH(b=16,r=8) -> exact-verify over the documents
-    table under ``cfg`` (char or token shingles), with exact-dup members
-    re-expanded; returns (a, b, jaccard_ppm) over doc_ids.  The stage
-    chain is pipeline.minhash_chain; in session only ``signatures``
-    (read by banding and verify) is checkpointed, and the result is
-    memoized per (session, corpus, config) — see _memo."""
-    return _memo(spark, sf_dir, cfg.fingerprint(),
-                 lambda: _expanded_pairs(spark, sf_dir, cfg))
-
-
-def _expanded_pairs(spark: SparkSession, sf_dir: str, cfg: DedupConfig) -> DataFrame:
+def _verified(spark: SparkSession, sf_dir: str,
+              cfg: DedupConfig) -> tuple[DataFrame, DataFrame]:
+    """(reps, verified): pipeline.minhash_chain over the documents under
+    ``cfg`` (char or token shingles), doc ids as file ids.  The sha
+    groups are memoized per (session, corpus), the verified rep pairs
+    per config too — see _memo; inside the chain only ``signatures``
+    (read by banding and verify) is checkpointed."""
     from codedup.pipeline import checkpoint_stage, minhash_chain
     from codedup.stages.exact import representatives
-    from codedup.stages.fingerprint import fingerprint
 
-    files = _docs_as_files(_t(spark, sf_dir, "documents"))
-    # the sha-group table (doc_id members) does not depend on the
-    # shingle config, so both LSH queries share one build per session
-    # and corpus.  The single-file documents scan is spread before the
-    # fingerprint kernel, as minhash_chain does before the signature
-    # kernel
+    # the single-file documents scan is spread before the sha2, as
+    # minhash_chain does before the signature kernel
     reps = _memo(spark, sf_dir, "reps", lambda: representatives(
-        fingerprint(files.repartition(spark.sparkContext.defaultParallelism)),
-        member=F.col("path").cast("long")))
-    # candidates and verified have one reader each (verified: the
-    # re-expansion below, which _memo checkpoints): left lazy
-    _, verified = minhash_chain(reps, cfg, lambda name, build: (
-        checkpoint_stage(name, build) if name == "signatures" else build()))
+        _t(spark, sf_dir, "documents")
+        .repartition(spark.sparkContext.defaultParallelism)
+        .select(F.col("doc_id").alias("file_id"),
+                F.sha2(F.col("text").cast("binary"), 256).alias("sha256"),
+                F.col("text").alias("content"))))
+    verified = _memo(spark, sf_dir, cfg.fingerprint(), lambda: minhash_chain(
+        reps, cfg, lambda name, build: (
+            checkpoint_stage(name, build) if name == "signatures" else build()))[1])
+    return reps, verified
+
+
+def _minhash_pipeline_pairs(spark: SparkSession, sf_dir: str, cfg: DedupConfig) -> DataFrame:
+    """MinHash(128) -> LSH(b=16,r=8) -> exact-verify over the documents
+    table under ``cfg``, with exact-dup members re-expanded; returns
+    (a, b, jaccard_ppm) over doc_ids.  Lazy: a plan over the two
+    memoized tables of ``_verified``."""
+    reps, verified = _verified(spark, sf_dir, cfg)
 
     # Re-expand through the sha groups: LSH ran on one representative
     # per distinct content, but the all-pairs oracle (and the semantics)
-    # cover EVERY doc.  Each reps row holds its rep (min file_id) and its
+    # cover EVERY doc.  Each reps row holds its rep (min doc_id) and its
     # doc_ids, sorted.  A verified rep pair fans out to all member cross
     # pairs (members are byte-identical to their rep, so the Jaccard is
     # the same), and each group of m docs contributes its m(m-1)/2 intra
@@ -831,17 +821,21 @@ _SQL_EDGES = f"""
 
 
 def _doc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, cluster_id) via the engine's CC over the verified doc
-    pairs.  CC labels every node with the minimum id of its component
-    and the nodes here are doc ids, so cluster_id = min(doc_id), the
-    SQL oracle's label.  Memoized (_memo) like the pairs it derives
-    from: dedup_clusters and cluster_savings both read the membership."""
+    """(doc_id, cluster_id) via the pipeline's cluster rule:
+    connected_components over pipeline.cluster_edges, the verified
+    representative pairs plus one star of exact edges per sha group
+    (linear in group size, where the re-expanded pair list is
+    quadratic).  CC labels every node with the minimum id of its
+    component and the nodes here are doc ids, so cluster_id =
+    min(doc_id), the SQL oracle's label.  Memoized (_memo) like the
+    pairs: dedup_clusters and cluster_savings both read the membership."""
+    from codedup.pipeline import cluster_edges
     from codedup.stages.cluster import connected_components
 
     def build():
-        pairs = q_dedup_minhash_lsh(spark, sf_dir)
-        edges = pairs.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        return connected_components(edges).withColumnRenamed("file_id", "doc_id")
+        reps, verified = _verified(spark, sf_dir, DOCS_CFG)
+        return (connected_components(cluster_edges(verified, reps))
+                .withColumnRenamed("file_id", "doc_id"))
 
     return _memo(spark, sf_dir, "doc_cc", build)
 
@@ -912,7 +906,7 @@ def q_simhash_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = (
         docs.select("doc_id", F.explode(F.expr(_TOKENS)).alias("tok"))
         .distinct()
-        .withColumn("hv", F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("long"))
+        .withColumn("hv", F.expr(_md5_60_sql("tok")))
     )
     aggs = [F.count(F.lit(1)).alias("n")] + [
         F.sum(F.shiftright(F.col("hv"), j).bitwiseAND(F.lit(1))).alias(f"b{j}")
@@ -1021,8 +1015,7 @@ def q_doc_minhash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = (f"array_distinct(transform("
              f"sequence(1, greatest(length(text)-{NGRAM_K - 1}, 1)),"
              f" i -> substring(text, i, {NGRAM_K})))")
-    hvs = (f"transform({grams}, g -> "
-           f"CAST(conv(substring(md5(g), 1, 15), 16, 10) AS BIGINT))")
+    hvs = f"transform({grams}, g -> {_md5_60_sql('g')})"
     fp = (f"element_at(transform(array({hvs}), h -> struct("
           f"array_min(h) AS fp_min, array_max(h) AS fp_max,"
           f" CAST(size(h) AS BIGINT) AS n_grams)), 1)")
@@ -1150,8 +1143,9 @@ def q_winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_WINNOWING_PAIRS = f"""
-WITH grams AS (
+# shared oracle fragment: the distinct winnowing fingerprint set fps
+# (doc_id, fp), _winnowing_fps' SQL form
+_SQL_WINNOW_FPS = f"""grams AS (
   SELECT doc_id,
          greatest(length(text) - {NGRAM_K - 1}, 1) AS n_grams,
          i - 1 AS pos,
@@ -1167,7 +1161,11 @@ WITH grams AS (
   SELECT DISTINCT doc_id, fp
   FROM wind
   WHERE pos <= n_grams - {WINNOW_W} OR pos = 0
-), rare AS (
+)"""
+
+
+SQL_WINNOWING_PAIRS = f"""
+WITH {_SQL_WINNOW_FPS}, rare AS (
   SELECT doc_id, fp FROM fps
   WHERE fp IN (SELECT fp FROM fps GROUP BY fp HAVING count(*) <= {WINNOW_MAX_DF})
 )
@@ -1179,23 +1177,7 @@ HAVING count(*) >= {WINNOW_MIN_SHARED}
 
 
 SQL_DOC_WINNOWING = f"""
-WITH grams AS (
-  SELECT doc_id,
-         greatest(length(text) - {NGRAM_K - 1}, 1) AS n_grams,
-         i - 1 AS pos,
-         ('0x' || substr(md5(substr(text, i, {NGRAM_K})), 1, 15))::BIGINT AS hv
-  FROM documents,
-       LATERAL (SELECT unnest(generate_series(1, greatest(length(text)-{NGRAM_K - 1}, 1))) AS i) t
-), wind AS (
-  SELECT doc_id, pos, n_grams,
-         min(hv) OVER (PARTITION BY doc_id ORDER BY pos
-                       ROWS BETWEEN CURRENT ROW AND {WINNOW_W - 1} FOLLOWING) AS fp
-  FROM grams
-), fps AS (
-  SELECT DISTINCT doc_id, fp
-  FROM wind
-  WHERE pos <= n_grams - {WINNOW_W} OR pos = 0
-)
+WITH {_SQL_WINNOW_FPS}
 SELECT doc_id, count(*) AS n_fingerprints, min(fp) AS fp_min, max(fp) AS fp_max
 FROM fps GROUP BY 1
 """
@@ -2048,6 +2030,16 @@ _GQ_MIN_MWL, _GQ_MAX_MWL = 300, 1000
 _GQ_MAX_TOP_TOKEN_PPM = 200000
 _GQ_STOPWORDS = ("the", "a", "of", "to", "and", "in", "is", "it")
 _GQ_MIN_STOP = 2
+_GQ_STOP_LIT = ", ".join(f"'{s}'" for s in _GQ_STOPWORDS)
+# the fail-rule bitmask; the same SQL text in Spark and DuckDB
+_GQ_MASK = (
+    f"(CASE WHEN n_words < {_GQ_MIN_WORDS} OR n_words > {_GQ_MAX_WORDS}"
+    "  THEN 1 ELSE 0 END)"
+    f" + (CASE WHEN mean_word_len_centi < {_GQ_MIN_MWL}"
+    f"     OR mean_word_len_centi > {_GQ_MAX_MWL} THEN 2 ELSE 0 END)"
+    f" + (CASE WHEN top_token_ppm > {_GQ_MAX_TOP_TOKEN_PPM} THEN 4 ELSE 0 END)"
+    f" + (CASE WHEN n_stop < {_GQ_MIN_STOP} THEN 8 ELSE 0 END)"
+)
 
 
 def q_gopher_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2065,7 +2057,6 @@ def q_gopher_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     per row; at web-document lengths the token array would be truncated
     to a fixed prefix (Gopher's signals saturate quickly) to bound it."""
     docs = _t(spark, sf_dir, "documents")
-    stop_lit = ", ".join(f"'{s}'" for s in _GQ_STOPWORDS)
     base = docs.select(
         "doc_id",
         F.expr(_TOKENS).alias("tk"),
@@ -2079,35 +2070,18 @@ def q_gopher_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
                " (array_max(transform(array_distinct(tk),"
                "   x -> size(filter(tk, y -> y = x)))) * 1000000)"
                " div size(tk) END").cast("long").alias("top_token_ppm"),
-        F.expr(f"size(array_intersect(array_distinct(tk), array({stop_lit})))")
+        F.expr(f"size(array_intersect(array_distinct(tk), array({_GQ_STOP_LIT})))")
         .cast("long").alias("n_stop"),
-    )
-    mask = (
-        f"(CASE WHEN n_words < {_GQ_MIN_WORDS} OR n_words > {_GQ_MAX_WORDS}"
-        "  THEN 1 ELSE 0 END)"
-        f" + (CASE WHEN mean_word_len_centi < {_GQ_MIN_MWL}"
-        f"     OR mean_word_len_centi > {_GQ_MAX_MWL} THEN 2 ELSE 0 END)"
-        f" + (CASE WHEN top_token_ppm > {_GQ_MAX_TOP_TOKEN_PPM} THEN 4 ELSE 0 END)"
-        f" + (CASE WHEN n_stop < {_GQ_MIN_STOP} THEN 8 ELSE 0 END)"
     )
     return base.select(
         "doc_id", "n_words", "mean_word_len_centi", "top_token_ppm", "n_stop",
-        F.expr(mask).cast("long").alias("fail_mask"),
-        F.expr(f"CASE WHEN ({mask}) = 0 THEN 1 ELSE 0 END")
+        F.expr(_GQ_MASK).cast("long").alias("fail_mask"),
+        F.expr(f"CASE WHEN ({_GQ_MASK}) = 0 THEN 1 ELSE 0 END")
         .cast("long").alias("keep"),
     )
 
 
 def _sql_gopher_quality_filter() -> str:
-    stop_lit = ", ".join(f"'{s}'" for s in _GQ_STOPWORDS)
-    mask = (
-        f"(CASE WHEN n_words < {_GQ_MIN_WORDS} OR n_words > {_GQ_MAX_WORDS}"
-        "  THEN 1 ELSE 0 END)"
-        f" + (CASE WHEN mean_word_len_centi < {_GQ_MIN_MWL}"
-        f"     OR mean_word_len_centi > {_GQ_MAX_MWL} THEN 2 ELSE 0 END)"
-        f" + (CASE WHEN top_token_ppm > {_GQ_MAX_TOP_TOKEN_PPM} THEN 4 ELSE 0 END)"
-        f" + (CASE WHEN n_stop < {_GQ_MIN_STOP} THEN 8 ELSE 0 END)"
-    )
     return f"""
 WITH base AS (
   SELECT doc_id,
@@ -2123,12 +2097,12 @@ WITH base AS (
             (list_max(list_transform(list_distinct(tk),
                x -> len(list_filter(tk, y -> y = x)))) * 1000000) // len(tk)
           END)::BIGINT AS top_token_ppm,
-         len(list_intersect(list_distinct(tk), [{stop_lit}]))::BIGINT AS n_stop
+         len(list_intersect(list_distinct(tk), [{_GQ_STOP_LIT}]))::BIGINT AS n_stop
   FROM base
 )
 SELECT doc_id, n_words, mean_word_len_centi, top_token_ppm, n_stop,
-       ({mask})::BIGINT AS fail_mask,
-       (CASE WHEN ({mask}) = 0 THEN 1 ELSE 0 END)::BIGINT AS keep
+       ({_GQ_MASK})::BIGINT AS fail_mask,
+       (CASE WHEN ({_GQ_MASK}) = 0 THEN 1 ELSE 0 END)::BIGINT AS keep
 FROM sig
 """
 
@@ -2175,6 +2149,12 @@ def q_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept as an exact global rank here because the oracle pins it."""
     docs = _t(spark, sf_dir, "documents")
     return dsir_scores(docs, F.col("source") == _DSIR_TARGET_SOURCE)
+
+
+def _md5_60_sql(arg: str) -> str:
+    """Spark SQL form of the portable md5-60bit hash of ``arg`` (the
+    oracles' ``('0x' || substr(md5(arg), 1, 15))::BIGINT``, ``_md5_60``)."""
+    return f"CAST(conv(substring(md5({arg}), 1, 15), 16, 10) AS BIGINT)"
 
 
 @functools.lru_cache(maxsize=1 << 20)
@@ -2356,7 +2336,7 @@ def q_paragraph_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     pe = docs.select(
         "doc_id",
         F.explode_outer(F.expr(paras)).alias("p"),
-    ).withColumn("hv", F.conv(F.substring(F.md5("p"), 1, 15), 16, 10).cast("long"))
+    ).withColumn("hv", F.expr(_md5_60_sql("p")))
     # paragraph df counts DISTINCT docs (a paragraph repeated inside one
     # doc is intra-doc repetition, doc_repetition_stats' job)
     dfreq = (
@@ -2426,7 +2406,7 @@ def paragraph_dedup_apply_frame(docs: DataFrame) -> DataFrame:
     pe = docs.select(
         "doc_id",
         F.posexplode_outer(F.expr(paras)).alias("pos", "p"),
-    ).withColumn("hv", F.conv(F.substring(F.md5("p"), 1, 15), 16, 10).cast("long"))
+    ).withColumn("hv", F.expr(_md5_60_sql("p")))
     own = (
         pe.filter(F.col("p").isNotNull())
         .select("doc_id", "hv").distinct()
@@ -2527,8 +2507,7 @@ def substring_dedup_apply_frame(docs: DataFrame, k: int = SUBSTR_K) -> DataFrame
     consistent).  Returns (doc_id, orig_len, n_runs, removed_chars,
     new_text)."""
     hvs = (f"transform(sequence(1, length(text) - {k - 1}),"
-           f" i -> CAST(conv(substring(md5(substring(text, i, {k})), 1, 15),"
-           f" 16, 10) AS BIGINT))")
+           f" i -> {_md5_60_sql(f'substring(text, i, {k})')})")
     pe = (
         docs.filter(F.col("text").isNotNull() & (F.length("text") >= k))
         .select("doc_id", F.posexplode(F.expr(hvs)).alias("pos0", "hv"))

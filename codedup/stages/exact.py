@@ -17,23 +17,24 @@ is a projection of that table.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def representatives(fp: DataFrame, member: Column | str = "file_id") -> DataFrame:
+def representatives(fp: DataFrame) -> DataFrame:
     """One row per distinct sha256, from one ``groupBy("sha256")``:
     ``file_id`` (the representative: min file_id, deterministic across
     runs and partitionings), ``sha256``, ``content`` (any member's: all
-    are byte-identical) and ``members``, the group's sorted ``member``
-    values (file ids by default; the LSH queries pass doc ids).
+    are byte-identical) and ``members``, the group's sorted file ids.
+    ``fp`` needs only ``file_id``, ``sha256`` and ``content``: the LSH
+    catalog queries pass documents with doc ids as file ids.
 
     Per-row memory is one sha group's member array, 8 bytes x group
     size: a 10^6-copy boilerplate file holds an 8 MB array in one row."""
     return fp.groupBy("sha256").agg(
         F.min("file_id").alias("file_id"),
         F.any_value("content").alias("content"),
-        F.array_sort(F.collect_list(member)).alias("members"),
+        F.array_sort(F.collect_list("file_id")).alias("members"),
     ).select("file_id", "sha256", "content", "members")
 
 

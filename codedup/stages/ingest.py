@@ -27,7 +27,7 @@ SOURCE_FORMATS = ("parquet", "json", "csv", "orc")
 
 
 def read_files(spark: SparkSession, *paths: str, langs: list[str] | None = None,
-               fmt: str = "parquet", **options) -> DataFrame:
+               fmt: str = "parquet") -> DataFrame:
     """Scan one or more source tables, union, dedup overlapping keys.
 
     ``fmt``: any of SOURCE_FORMATS — the reference scans image
@@ -54,8 +54,6 @@ def read_files(spark: SparkSession, *paths: str, langs: list[str] | None = None,
                                 ignoreLeadingWhiteSpace="false",
                                 ignoreTrailingWhiteSpace="false",
                                 nullValue="\\N")
-    for k, v in options.items():
-        reader = reader.option(k, v)
     dfs = [reader.load(p) for p in paths]
     df = dfs[0]
     for d in dfs[1:]:

@@ -56,9 +56,10 @@ def test_lsh_queries_share_the_sha_groups(spark, monkeypatch):
 
 def test_lsh_build_materializes_only_tables_read_twice(spark, monkeypatch):
     """One dedup_minhash_lsh build checkpoints the sha groups (read by
-    signatures, verify and the re-expansion), the signatures (read by
-    banding and verify) and the memoized pairs; candidates and verified
-    each have one reader and stay lazy."""
+    signatures, verify, the re-expansion and the cluster edges), the
+    signatures (read by banding and verify) and the verified rep pairs
+    (memoized per config: read by the re-expansion and the cluster
+    edges); candidates has one reader and stays lazy."""
     import codedup.pipeline as pipemod
 
     names = []

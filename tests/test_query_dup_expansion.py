@@ -328,3 +328,44 @@ def test_large_exact_group_expands_to_all_pairs(spark, tmp_path):
     assert (got.a < got.b).all()
     assert not got.duplicated(["a", "b"]).any()
     assert not ((got.a == 600) | (got.b == 600)).any()
+
+
+def test_cluster_edges_linear_in_sha_group(spark, tmp_path, monkeypatch):
+    """A 2,000-copy sha group plus one near-duplicate clusters from the
+    pipeline's edge rule: one star of exact edges per group plus the
+    verified representative pairs, so CC sees at most m edges for m
+    copies instead of the m(m-1)/2 re-expanded pairs."""
+    import random
+
+    import codedup.stages.cluster as cc
+    from codedup.queries import clear_pairs_cache
+
+    rng = random.Random(16)
+    base = " ".join(f"tok{rng.randrange(10_000)}" for _ in range(120))
+    near = base[:-10] + " edited!!"
+    fillers = ["".join(rng.choice("abcdefghijklmnop ") for _ in range(400))
+               for _ in range(200)]
+    texts = fillers[:100] + [base] * 2000 + [near] + fillers[100:]
+    ids = rng.sample(range(10 * len(texts)), len(texts))
+    rows = [(i, "en", t) for i, t in zip(ids, texts)]
+    d = str(tmp_path)
+    spark.createDataFrame(rows, "doc_id long, lang string, text string") \
+        .coalesce(1).write.mode("overwrite").parquet(d + "/documents.parquet")
+
+    seen = []
+    real = cc.connected_components
+
+    def counting(edges, *a, **k):
+        seen.append(edges.count())
+        return real(edges, *a, **k)
+
+    monkeypatch.setattr(cc, "connected_components", counting)
+    clear_pairs_cache()
+    got = q_dedup_clusters(spark, d).toPandas()
+    clear_pairs_cache()
+
+    dup_ids = {i for i, t in zip(ids, texts) if t in (base, near)}
+    assert len(got) == 2001
+    assert set(got.doc_id) == dup_ids
+    assert set(got.cluster_id) == {min(dup_ids)}
+    assert seen and max(seen) <= 2001

@@ -30,6 +30,19 @@ def plan_of(df) -> str:
         df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
 
 
+def renumber(plan: str) -> str:
+    """Rewrite the session-wide counters, ``[plan_id=N]``, the
+    expression ids ``#N`` and the RDD ids of checkpointed scans
+    (``RDD[N]``), in order of first appearance within the plan, so a
+    plan's text does not depend on the plans built before it and a
+    rerun rewrites only the plans that changed."""
+    for pat in (r"(\[plan_id=)(\d+)", r"(#)(\d+)", r"(RDD\[)(\d+)"):
+        ids: dict[str, int] = {}
+        plan = re.sub(pat, lambda m: m.group(1) + str(ids.setdefault(m.group(2), len(ids))),
+                      plan)
+    return plan
+
+
 def main() -> int:
     import tempfile
 
@@ -185,9 +198,10 @@ def audit_all(corpus: str) -> int:
     # collected O(buckets) weight vector: no join, no doc_id exchange
     ok &= audit("query: dsir_importance (dot product with collected weights)",
                 QUERIES["dsir_importance"](spark, SF))
-    # (plan is the post-cache projection over the shared verified-pair
-    # table — audited property is the equi-join shape, not the Arrow
-    # stages, which live in the pair pipeline audited above)
+    # (plan is the sha-group re-expansion and new-shard projection over
+    # the memoized verified rep pairs and sha groups — audited property
+    # is the equi-join shape, not the Arrow stages, which live in the
+    # pair pipeline audited above)
     ok &= audit_no_bnlj("query: dedup_incremental_batch (new-shard projection)",
                         QUERIES["dedup_incremental_batch"](spark, SF))
 
@@ -200,7 +214,9 @@ def audit_all(corpus: str) -> int:
                 "whole-stage codegen. \"WholeStageCodegen spans\" counts the "
                 "distinct `[codegen id : N]` marks; an adaptive plan "
                 "(`isFinalPlan=false`) shows none, since AQE inserts codegen "
-                "per query stage at run time.\n\n")
+                "per query stage at run time. `[plan_id=N]`, the "
+                "expression ids `#N` and `RDD[N]` are numbered per section, "
+                "in order of first appearance.\n\n")
         for name, plan, notes in sections:
             f.write(f"## {name}\n\n")
             for n in notes:
@@ -208,7 +224,7 @@ def audit_all(corpus: str) -> int:
             f.write("\n<details><summary>plan</summary>\n\n```\n")
             # the corpus lives in a fresh temporary directory: write its
             # path as a fixed token, so a rerun rewrites only changed plans
-            f.write(plan.replace(corpus, "<corpus>").strip()[:6000])
+            f.write(renumber(plan.replace(corpus, "<corpus>")).strip()[:6000])
             f.write("\n```\n</details>\n\n")
     print(f"{'ALL OK' if ok else 'VIOLATIONS FOUND'} -> {OUT}")
     return 0 if ok else 1
